@@ -104,15 +104,12 @@ def check_expectations(
                 "unique, range, in_set, foreign_key"
             )
 
-    # foreign_key totals were COUNTs before the fusion (0 on an empty
-    # table, never NULL) where not_null/range/in_set were SUMs (NULL
-    # on empty) — coalesce only the former so the report is
-    # value-identical to the unfused shape in every case
+    # every rule total is a conditional SUM, which is NULL over zero
+    # rows — coalesce to 0 so an empty table reports 0 violations and
+    # passes, rather than a NULL verdict a caller must special-case
     flag_aggs = [
         F.coalesce(F.sum(flags[i].cast("long")), F.lit(0)).alias(f"_v{i}")
-        if kind == "foreign_key"
-        else F.sum(flags[i].cast("long")).alias(f"_v{i}")
-        for i, kind, _ in flag_meta
+        for i, _, _ in flag_meta
     ]
     if unique_rules:
         # shared pass keyed on the FIRST unique rule: per-key counts
@@ -132,9 +129,7 @@ def check_expectations(
             ).alias(f"_v{u_i}"),
             *[
                 F.coalesce(F.sum(f"_v{i}"), F.lit(0)).alias(f"_v{i}")
-                if kind == "foreign_key"
-                else F.sum(f"_v{i}").alias(f"_v{i}")
-                for i, kind, _ in flag_meta
+                for i, _, _ in flag_meta
             ],
         )
         flag_meta = flag_meta + [(u_i, "unique", ",".join(u_cols))]

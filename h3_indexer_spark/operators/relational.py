@@ -149,7 +149,12 @@ def repartition_by(df: DataFrame, columns: str | list[str]) -> DataFrame:
     would still run the full shuffle width) and from skew splitting
     (one hot h3_r3_parent would pin the write on one task at 100 TB).
     Rebalance gives both: small partitions coalesce, oversized ones
-    split while keeping partition-column clustering."""
+    split while keeping partition-column clustering. Under
+    ``persist()`` that holds only with
+    ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` on
+    (as :func:`~h3_indexer_spark.session.get_spark_session` sets it);
+    at Spark's default a cached rebalance keeps the full shuffle
+    width."""
     cols = [columns] if isinstance(columns, str) else list(columns)
     return df.hint("rebalance", *cols)
 

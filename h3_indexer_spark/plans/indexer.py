@@ -16,8 +16,11 @@ Spark-first design vs the reference:
   shuffle.
 - ``h3_r3_parent`` is native Catalyst bit arithmetic (sql.py), not a
   Python UDF.
-- one repartition on the partition key feeds the partitioned sink, so
-  the 100 TB write produces large well-clustered files.
+- the persisted output is rebalanced on the partition key, so both
+  Resolve and the partitioned sink read it clustered by
+  ``h3_r3_parent`` and the 100 TB write produces large well-clustered
+  files; AQE sizes that rebalance to the data (see
+  :func:`~h3_indexer_spark.operators.relational.repartition_by`).
 """
 
 from __future__ import annotations

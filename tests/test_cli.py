@@ -28,7 +28,17 @@ def out_dir():
     shutil.rmtree(d, ignore_errors=True)
 
 
-def _cfg(fixture_dir, out_dir) -> str:
+@pytest.fixture()
+def cli_spark(spark):
+    """The shared session, with the shuffle width restored after the
+    test: ``run`` rebuilds the session for the job's resolution, which
+    sets the res-keyed width on the session every later test uses."""
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    yield spark
+    spark.conf.set("spark.sql.shuffle.partitions", width)
+
+
+def _cfg(fixture_dir, out_dir, path=None) -> str:
     return json.dumps(
         {
             "name": "cli-e2e",
@@ -38,7 +48,8 @@ def _cfg(fixture_dir, out_dir) -> str:
             "inputs": {
                 "pts": {
                     "type": "vector",
-                    "path": str(fixture_dir / "geo_points_latlon.parquet"),
+                    "path": path
+                    or str(fixture_dir / "geo_points_latlon.parquet"),
                     "unique_id": "pixel_id",
                     "geometry_type": "POINT",
                     "method": "WITHIN",
@@ -61,8 +72,7 @@ def _write_rules(rules) -> str:
 
 
 class TestCliRunAll:
-    @pytest.mark.slow
-    def test_partitioned_outputs_appear(self, spark, fixture_dir, out_dir):
+    def test_partitioned_outputs_appear(self, cli_spark, fixture_dir, out_dir):
         rc = run(["--json-input", _cfg(fixture_dir, out_dir), "--run-all"])
         assert rc == 0
         assert glob.glob(
@@ -71,6 +81,46 @@ class TestCliRunAll:
         assert glob.glob(
             f"{out_dir}/resolved/h3_resolution=*/h3_r3_parent=*/*.parquet"
         )
+
+
+class TestCliEmptyInput:
+    def test_expectations_pass_on_empty_output(
+        self, cli_spark, fixture_dir, out_dir
+    ):
+        """An input with no rows resolves to an empty table; the gate
+        must pass it (0 violations) and the resolved output must be
+        written, not withheld with exit 3."""
+        import pandas as pd
+
+        src = f"{out_dir}/empty_points.parquet"
+        pd.read_parquet(fixture_dir / "geo_points_latlon.parquet").iloc[
+            :0
+        ].to_parquet(src)
+        rules = _write_rules(
+            [
+                {"rule": "not_null", "column": "h3_index"},
+                {"rule": "unique", "columns": ["h3_index"]},
+                {"rule": "range", "column": "sum_population", "min": 0.0},
+                {"rule": "in_set", "column": "h3_resolution",
+                 "allowed": [6]},
+            ]
+        )
+        rc = run(
+            [
+                "--json-input",
+                _cfg(fixture_dir, f"{out_dir}/job", path=src),
+                "--run-all",
+                "--expectations",
+                rules,
+            ]
+        )
+        assert rc == 0
+        report = cli_spark.read.parquet(
+            f"{out_dir}/job/expectations_report"
+        ).collect()
+        assert len(report) == 4
+        assert all(r.passed and r.n_violations == 0 for r in report)
+        assert glob.glob(f"{out_dir}/job/resolved/_SUCCESS")
 
 
 class TestCliFlagValidation:

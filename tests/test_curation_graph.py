@@ -304,7 +304,6 @@ class TestConnectedComponents:
         comp = self._cc(spark, [(0, 1), (1, 2), (2, 3)], 5)
         assert comp == {0: 0, 1: 0, 2: 0, 3: 0, 4: 4}
 
-    @pytest.mark.slow
     def test_two_components_and_singletons(self, spark):
         comp = self._cc(spark, [(1, 2), (5, 6), (6, 7)], 9)
         assert comp == {

@@ -240,6 +240,43 @@ class TestResolve:
         ).count()
         assert n_pts_only > 0
 
+    def test_persisted_stage_width_follows_cores(self, spark, fixture_dir):
+        """At the res-6 shuffle width (800) the persisted Index and
+        Resolve outputs are sized by AQE to the data and the cores, not
+        kept at 800 partitions, and resolve to the same rows as a run
+        at the session's own width."""
+
+        def run():
+            job = _job(
+                fixture_dir,
+                {
+                    "pts": _points_input(fixture_dir),
+                    "lines": _lines_input(fixture_dir),
+                },
+            )
+            validate_config(job, spark)
+            index_job(job, spark)
+            resolve_job(job, spark)
+            return job, sorted(job.h3_resolved_df.collect())
+
+        width = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", "800")
+        try:
+            job, wide = run()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", width)
+        cores = spark.sparkContext.defaultParallelism
+        persisted = [vt.h3_indexed_df for vt in job.inputs.values()]
+        persisted.append(job.h3_resolved_df)
+        for df in persisted:
+            assert df.rdd.getNumPartitions() <= cores
+
+        _, narrow = run()
+        assert len(wide) == len(narrow)
+        for w, n in zip(wide, narrow):
+            assert w.h3_index == n.h3_index
+            assert w == pytest.approx(n, rel=1e-12, nan_ok=True), w
+
     def test_mass_conservation_single_input(self, spark, fixture_dir):
         job = _job(fixture_dir, {"polys": _polygons_input(fixture_dir)})
         validate_config(job, spark)

@@ -297,6 +297,34 @@ class TestExpectations:
         ).collect()
         assert all(r.passed for r in rep)
 
+    def test_empty_table_passes(self, spark):
+        """Zero rows: every rule kind reports 0 violations and a real
+        True, on both the shared-groupBy battery (a unique rule
+        present) and the plain-aggregate one (none)."""
+        from h3_indexer_spark.operators.expectations import (
+            check_expectations,
+        )
+
+        df = spark.createDataFrame(
+            [], "id long, val double, cat string, fk long"
+        )
+        ref = spark.createDataFrame([(100,)], "ref_id long")
+        rules = [
+            {"rule": "not_null", "column": "val"},
+            {"rule": "unique", "columns": ["id"]},
+            {"rule": "range", "column": "val", "min": 0.0, "max": 1.0},
+            {"rule": "in_set", "column": "cat", "allowed": ["a"]},
+            {"rule": "foreign_key", "column": "fk", "ref": ref,
+             "ref_column": "ref_id"},
+        ]
+        for battery in (rules, [r for r in rules if r["rule"] != "unique"]):
+            rep = check_expectations(df, battery).collect()
+            assert len(rep) == len(battery)
+            for r in rep:
+                assert r.n_violations == 0, r
+                assert r.n_rows == 0, r
+                assert r.passed is True, r
+
     def test_unknown_rule_fails_fast(self, spark):
         import pytest as _pytest
 
