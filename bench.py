@@ -3,7 +3,8 @@
 
 Runs the headline queries from ``__spark_entry__.queries()`` against
 ``$SPARK_GRAFT_SF_DIR`` (default ``/root/testdata/sf0.1``) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
+``local[$SPARK_GRAFT_CPUS]`` (default: the host's core count) and
+prints ONE JSON line:
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {"q_groupby_sum": sec, ...}, "sf": 0.1}
@@ -492,7 +493,7 @@ def _noise_ratio(steady: dict[str, float], sf: float) -> float | None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
     sf = float(Path(sf_dir).name.replace("sf", "") or "0.1")
 
     from pyspark.sql import SparkSession

@@ -8,11 +8,12 @@ Parity targets (SURVEY.md §2.6):
   ``total_area_km2``.
 
 The reference delegates G7/G8 to Sedona (GeographicLib under the hood).
-Our area uses the authalic-latitude spherical-excess method, which
-matches the reference's published cell areas to ~1e-9 relative
-(validated against six README/notebook goldens in
-tests/test_h3_kernel.py); lengths use Vincenty's inverse formula
-(mm-level agreement with GeographicLib for non-antipodal points).
+Every spheroid area here — cells and features alike — comes from one
+kernel, spheroid_ring_areas_m2 (signed authalic-latitude spherical
+excess), which matches the reference's published cell areas to 6e-9
+relative (six README/notebook goldens in tests/test_h3_kernel.py);
+lengths use Vincenty's inverse formula (mm-level agreement with
+GeographicLib for non-antipodal points).
 """
 
 from __future__ import annotations
@@ -37,60 +38,6 @@ def _q(phi: float) -> float:
 
 _QP = _q(math.pi / 2.0)
 AUTHALIC_RADIUS_M = _A * math.sqrt(_QP / 2.0)  # 6371007.1809... m
-
-
-def authalic_latitude(phi: float) -> float:
-    return math.asin(min(1.0, max(-1.0, _q(phi) / _QP)))
-
-
-def spheroid_polygon_area_m2(coords: list[tuple[float, float]]) -> float:
-    """WGS84 area of a simple polygon given as (lng, lat) degree pairs
-    (ring closure optional). Authalic-latitude spherical excess; exact
-    for the ellipsoid up to the geodesic-vs-authalic edge-path
-    difference (~1e-9 relative for cell-sized polygons)."""
-    pts = list(coords)
-    if len(pts) >= 2 and pts[0] == pts[-1]:
-        pts = pts[:-1]
-    if len(pts) < 3:
-        return 0.0
-    vs = []
-    for lng, lat in pts:
-        phi = authalic_latitude(math.radians(lat))
-        lam = math.radians(lng)
-        c = math.cos(phi)
-        vs.append((c * math.cos(lam), c * math.sin(lam), math.sin(phi)))
-    n = len(vs)
-    total = 0.0
-    for i in range(n):
-        a = vs[i]
-        b = vs[(i + 1) % n]
-        c = vs[(i + 2) % n]
-        t1 = _cross(b, a)
-        t2 = _cross(b, c)
-        ang = math.atan2(_norm(_cross(t1, t2)), _dot(t1, t2))
-        total += ang
-    excess = abs(total - (n - 2) * math.pi)
-    return excess * AUTHALIC_RADIUS_M * AUTHALIC_RADIUS_M
-
-
-def spheroid_polygon_area_km2(coords: list[tuple[float, float]]) -> float:
-    return spheroid_polygon_area_m2(coords) / 1.0e6
-
-
-def _cross(a, b):
-    return (
-        a[1] * b[2] - a[2] * b[1],
-        a[2] * b[0] - a[0] * b[2],
-        a[0] * b[1] - a[1] * b[0],
-    )
-
-
-def _dot(a, b):
-    return a[0] * b[0] + a[1] * b[1] + a[2] * b[2]
-
-
-def _norm(a):
-    return math.sqrt(_dot(a, a))
 
 
 def vincenty_distance_m(
@@ -211,7 +158,7 @@ def planar_polygon_area(coords: list[tuple[float, float]]) -> float:
     return abs(s) / 2.0
 
 
-# --- batched twins (numpy) -------------------------------------------------
+# --- batched kernels (numpy) -----------------------------------------------
 
 
 def vincenty_distance_m_batch(lat1, lng1, lat2, lng2):
@@ -330,16 +277,68 @@ def vincenty_distance_m_batch(lat1, lng1, lat2, lng2):
     return out
 
 
-def spheroid_polygon_area_m2_many(rings) -> "np.ndarray":
-    """Vector twin of spheroid_polygon_area_m2 for a list of (lng, lat)
-    rings (closure optional, variable length; rows with < 3 distinct
-    vertices → 0)."""
+def spheroid_ring_areas_m2(pts, nv) -> "np.ndarray":
+    """WGS84 areas (m²) of padded rings: ``pts`` is (R, cap, 2) float
+    (lng, lat) degrees, ``nv`` the (R,) count of distinct vertices of
+    each open ring (entries past it are ignored; rows with < 3 → 0).
+
+    Authalic-latitude spherical excess, summed over the triangle fan
+    from vertex 0 with the signed solid angle of each triangle (Van
+    Oosterom & Strackee / Eriksson):
+    ``tan(E/2) = a·(b×c) / (1 + a·b + b·c + c·a)``. Signed terms make
+    reflex vertices and concave rings exact; the absolute value of
+    the sum makes either winding positive. The triple product is taken
+    on vertex differences (``a·((b−a)×(c−a))``, the same value), so
+    the relative error grows as 1e-16 over a cell's angular size, not
+    over its square (~3e-9 at resolution 15)."""
     import numpy as np
 
-    R = len(rings)
-    out = np.zeros(R, dtype=np.float64)
-    if R == 0:
-        return out
+    nv = np.asarray(nv, dtype=np.int64)
+    R = nv.shape[0]
+    cap = int(nv.max()) if R else 0
+    if cap < 3:
+        return np.zeros(R, dtype=np.float64)
+    # vertex-major (cap, R) arrays: each fan slice below is a block of
+    # whole rows, so the elementwise work runs on contiguous memory
+    pts = np.asarray(pts, dtype=np.float64)
+    lam = np.radians(np.ascontiguousarray(pts[:, :cap, 0].T))
+    s = np.sin(np.radians(np.ascontiguousarray(pts[:, :cap, 1].T)))
+    # sine of the authalic latitude: q(phi) / q(90°)
+    z = np.clip(
+        (1.0 - _E2) * (s / (1.0 - _E2 * s * s) + np.arctanh(_E * s) / _E)
+        / _QP,
+        -1.0,
+        1.0,
+    )
+    c = np.sqrt((1.0 - z) * (1.0 + z))
+    x, y = c * np.cos(lam), c * np.sin(lam)
+    ax, ay, az = x[0], y[0], z[0]  # fan apex
+    bx, by, bz = x[1:-1], y[1:-1], z[1:-1]
+    cx, cy, cz = x[2:], y[2:], z[2:]
+    ux, uy, uz = bx - ax, by - ay, bz - az
+    vx, vy, vz = cx - ax, cy - ay, cz - az
+    num = (
+        ax * (uy * vz - uz * vy)
+        + ay * (uz * vx - ux * vz)
+        + az * (ux * vy - uy * vx)
+    )
+    den = (
+        1.0
+        + (ax * bx + ay * by + az * bz)
+        + (bx * cx + by * cy + bz * cz)
+        + (cx * ax + cy * ay + cz * az)
+    )
+    excess = 2.0 * np.arctan2(num, den)
+    fan = np.arange(cap - 2)[:, None] < (nv - 2)[None, :]
+    total = np.where(fan, excess, 0.0).sum(axis=0)
+    return np.abs(total) * AUTHALIC_RADIUS_M * AUTHALIC_RADIUS_M
+
+
+def spheroid_polygon_area_m2_many(rings) -> "np.ndarray":
+    """WGS84 areas (m²) of a list of (lng, lat) rings (closure optional,
+    variable length): pads them and calls spheroid_ring_areas_m2."""
+    import numpy as np
+
     opened = []
     for r in rings:
         pts = list(r)
@@ -347,36 +346,9 @@ def spheroid_polygon_area_m2_many(rings) -> "np.ndarray":
             pts = pts[:-1]
         opened.append(pts)
     nv = np.asarray([len(p) for p in opened], dtype=np.int64)
-    cap = int(nv.max()) if R else 0
-    if cap < 3:
-        return out
-    pts = np.zeros((R, cap, 2), dtype=np.float64)
+    cap = int(nv.max()) if len(opened) else 0
+    padded = np.zeros((len(opened), cap, 2), dtype=np.float64)
     for ix, p in enumerate(opened):
         if p:
-            pts[ix, : len(p)] = p
-    lam = np.radians(pts[:, :, 0])
-    s = np.sin(np.radians(pts[:, :, 1]))
-    q = (1.0 - _E2) * (
-        s / (1.0 - _E2 * s * s)
-        - (1.0 / (2.0 * _E)) * np.log((1.0 - _E * s) / (1.0 + _E * s))
-    )
-    phi = np.arcsin(np.clip(q / _QP, -1.0, 1.0))
-    c = np.cos(phi)
-    V = np.stack([c * np.cos(lam), c * np.sin(lam), np.sin(phi)], axis=2)
-    idx = np.arange(cap)[None, :]
-    nvs = np.maximum(nv, 1)[:, None]
-    valid = idx < nv[:, None]
-    b_idx = ((idx + 1) % nvs)[:, :, None]
-    c_idx = ((idx + 2) % nvs)[:, :, None]
-    B = np.take_along_axis(V, np.broadcast_to(b_idx, V.shape), axis=1)
-    Cv = np.take_along_axis(V, np.broadcast_to(c_idx, V.shape), axis=1)
-    t1 = np.cross(B, V)
-    t2 = np.cross(B, Cv)
-    crs = np.cross(t1, t2)
-    ang = np.arctan2(
-        np.sqrt((crs * crs).sum(axis=2)), (t1 * t2).sum(axis=2)
-    )
-    total = np.where(valid, ang, 0.0).sum(axis=1)
-    excess = np.abs(total - (nv - 2) * math.pi)
-    area = excess * AUTHALIC_RADIUS_M * AUTHALIC_RADIUS_M
-    return np.where(nv >= 3, area, 0.0)
+            padded[ix, : len(p)] = p
+    return spheroid_ring_areas_m2(padded, nv)

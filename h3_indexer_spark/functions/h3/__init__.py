@@ -7,7 +7,7 @@ Provides exactly the kernel surface the engine needs
 - ``latlng_to_cell`` (U1 point path)
 - ``cell_to_parent`` (U2; also available as native Spark SQL bitops)
 - ``cell_to_boundary`` / ``cell_to_latlng`` (U3 hex geometry)
-- ``cell_area_km2`` (h3_area_km2 column)
+- ``vectorized.cell_area_km2_batch`` (h3_area_km2 column)
 - ``polyfill`` + ``line_cells`` (U1 line/polygon paths)
 """
 

@@ -717,31 +717,11 @@ def cell_to_boundary(h: int) -> list[tuple[float, float]]:
     cross icosahedron edges at Class III resolutions gain extra
     distortion vertices (up to 10), matching H3 semantics."""
     face, ijk, res = _h3_to_face_ijk(h)
-    tables = _derived()
-    # substrate coordinates of the cell center
-    center = _down_ap3r(_down_ap3(ijk))
-    adj_res = res
-    if is_class_iii(res):
-        center = _down_ap7r(center)
-        adj_res += 1
-    verts_tbl = _VERTS_CIII if is_class_iii(res) else _VERTS_CII
-    num_verts = 5 if is_pentagon(h) else 6
-    # pentagon boundary starts at vertex offset 1 in H3 (deleted K axis);
-    # hexagons start at 0
-    start = 0
-    fijk_verts = []
-    for v in range(6):
-        c = _ijk_normalize(
-            center[0] + verts_tbl[v][0],
-            center[1] + verts_tbl[v][1],
-            center[2] + verts_tbl[v][2],
-        )
-        fijk_verts.append((face, c))
     if is_pentagon(h):
-        # drop the vertex in the deleted subsequence: H3 does this via
-        # _faceIjkPentToGeoBoundary with verts start offsets; we instead
-        # take the 5 distinct vertices of the pentagon
-        return _pent_boundary(h, face, ijk, res)
+        return _pent_boundary(face, ijk, res)
+    tables = _derived()
+    adj_res, fijk_verts = _substrate_verts(face, ijk, res, 6)
+    start = 0
     out: list[tuple[float, float]] = []
     last_face = -1
     last_overage = NO_OVERAGE
@@ -766,25 +746,10 @@ def cell_to_boundary(h: int) -> list[tuple[float, float]]:
             last_v = (v + 5) % 6
             p0 = _ijk_to_hex2d(fijk_verts[last_v][1])
             p1 = _ijk_to_hex2d(fijk_verts[v][1])
-            max_dim = MAX_DIM_BY_CII_RES[adj_res]
-            corners = {
-                IJ_QUAD: (
-                    (3.0 * max_dim, 0.0),
-                    (-1.5 * max_dim, 3.0 * M_SIN60 * max_dim),
-                ),
-                JK_QUAD: (
-                    (-1.5 * max_dim, 3.0 * M_SIN60 * max_dim),
-                    (-1.5 * max_dim, -3.0 * M_SIN60 * max_dim),
-                ),
-                KI_QUAD: (
-                    (-1.5 * max_dim, -3.0 * M_SIN60 * max_dim),
-                    (3.0 * max_dim, 0.0),
-                ),
-            }
             face2 = vface if last_face == face else last_face
             quad = tables.adjacent_face_dir.get((face, face2))
             if quad is not None:
-                e0, e1 = corners[quad]
+                e0, e1 = _face_edge(quad, adj_res)
                 inter = _v2d_intersect(p0, p1, e0, e1)
                 if inter is not None and not (
                     _v2d_almost_equals(p0, inter)
@@ -803,42 +768,81 @@ def cell_to_boundary(h: int) -> list[tuple[float, float]]:
     return out
 
 
-def _pent_boundary(h: int, face: int, ijk, res: int) -> list[tuple[float, float]]:
-    """Pentagon boundary: 5 distinct vertices (plus distortion
-    vertices at Class III) via the same substrate math; H3's dedicated
-    pentagon path additionally rotates between faces — here we compute
-    each vertex on its own overage-adjusted face which yields the same
-    physical points for the Class II case used by the pipeline."""
+def _substrate_verts(face: int, ijk, res: int, n: int):
+    """The first ``n`` boundary vertices of a cell on the substrate
+    grid of its home face (aperture 33r, plus 7r at Class III), ccw
+    from the i axis and before overage: (adj_res, [(face, ijk), ...]).
+    Pentagons take the first five (the sixth lies in the deleted k
+    subsequence)."""
     center = _down_ap3r(_down_ap3(ijk))
     adj_res = res
     if is_class_iii(res):
         center = _down_ap7r(center)
         adj_res += 1
     verts_tbl = _VERTS_CIII if is_class_iii(res) else _VERTS_CII
-    pts = []
-    for v in range(6):
-        c = _ijk_normalize(
-            center[0] + verts_tbl[v][0],
-            center[1] + verts_tbl[v][1],
-            center[2] + verts_tbl[v][2],
+    verts = [
+        (
+            face,
+            _ijk_normalize(
+                center[0] + verts_tbl[v][0],
+                center[1] + verts_tbl[v][1],
+                center[2] + verts_tbl[v][2],
+            ),
         )
-        vface, vcoord = face, c
-        while True:
+        for v in range(n)
+    ]
+    return adj_res, verts
+
+
+def _face_edge(quad: int, adj_res: int):
+    """The two hex2d corners of the icosahedron face edge on ``quad``
+    at substrate resolution ``adj_res``."""
+    max_dim = MAX_DIM_BY_CII_RES[adj_res]
+    v0 = (3.0 * max_dim, 0.0)
+    v1 = (-1.5 * max_dim, 3.0 * M_SIN60 * max_dim)
+    v2 = (-1.5 * max_dim, -3.0 * M_SIN60 * max_dim)
+    return {IJ_QUAD: (v0, v1), JK_QUAD: (v1, v2), KI_QUAD: (v2, v0)}[quad]
+
+
+def _pent_boundary(face: int, ijk, res: int) -> list[tuple[float, float]]:
+    """Pentagon boundary in degrees (lat, lng), after H3's
+    _faceIjkPentToCellBoundary: five vertices, each moved onto its own
+    face. Every Class III pentagon edge crosses an icosahedron edge,
+    so there each edge also gains its crossing point (10 vertices),
+    found in the frame of the face of the edge's first vertex."""
+    tables = _derived()
+    adj_res, verts = _substrate_verts(face, ijk, res, 5)
+    fijk = []
+    for vface, vcoord in verts:
+        overage = NEW_FACE
+        while overage == NEW_FACE:
             overage, vface, vcoord = _adjust_overage_class_ii(
                 vface, vcoord, adj_res, False, True
             )
-            if overage != NEW_FACE:
-                break
+        fijk.append((vface, vcoord))
+    out: list[tuple[float, float]] = []
+    for v, (vface, vcoord) in enumerate(fijk):
         x, y = _ijk_to_hex2d(vcoord)
         lat, lng = _hex2d_to_geo(x, y, vface, adj_res, True)
-        pts.append((math.degrees(lat), math.degrees(lng)))
-    # collapse the duplicated vertex pair (deleted K axis)
-    out = []
-    for p in pts:
-        if not any(
-            abs(p[0] - q[0]) < 1e-9 and abs(p[1] - q[1]) < 1e-9 for q in out
-        ):
-            out.append(p)
+        out.append((math.degrees(lat), math.degrees(lng)))
+        if not is_class_iii(res):
+            continue
+        # the next vertex, unfolded into this vertex's face frame
+        nface, c = fijk[(v + 1) % 5]
+        quad = tables.adjacent_face_dir[(nface, vface)]
+        _, ccw_rot, translate = tables.face_neighbors[(nface, quad)]
+        for _ in range(ccw_rot):
+            c = _ijk_rotate60_ccw(c)
+        scale = UNIT_SCALE_BY_CII_RES[adj_res] * 3
+        c = _ijk_normalize(
+            c[0] + translate[0] * scale,
+            c[1] + translate[1] * scale,
+            c[2] + translate[2] * scale,
+        )
+        e0, e1 = _face_edge(tables.adjacent_face_dir[(vface, nface)], adj_res)
+        x, y = _v2d_intersect(_ijk_to_hex2d(vcoord), _ijk_to_hex2d(c), e0, e1)
+        lat, lng = _hex2d_to_geo(x, y, vface, adj_res, True)
+        out.append((math.degrees(lat), math.degrees(lng)))
     return out
 
 

@@ -232,29 +232,13 @@ def _hex2d_to_ijk_v(x: np.ndarray, y: np.ndarray):
 
 
 def cell_area_km2_batch(cells: np.ndarray) -> np.ndarray:
-    """Spheroid areas (km²) for an int64 cell-id array — the vectorized
-    twin of udfs._cell_area_km2 (cell_to_boundary + authalic spherical
-    excess). Cells whose boundary leaves the home icosahedron face,
-    pentagons, and other special geometry fall back to the scalar path;
-    for regional data that is a few percent of cells."""
+    """Spheroid areas (km²) for an int64 cell-id array: the rings of
+    cell_boundary_batch (distortion vertices included) through
+    geodesy.spheroid_ring_areas_m2."""
     from h3_indexer_spark.functions import geodesy
-    from h3_indexer_spark.functions.h3.tables import (
-        MAX_DIM_BY_CII_RES,
-        RES0_U_GNOMONIC,
-    )
 
-    cells = np.asarray(cells, dtype=np.int64)
-    n = cells.shape[0]
-    out = np.zeros(n, dtype=np.float64)
-    if n == 0:
-        return out
-    res_all = (cells >> 52) & 0xF
-    for res in np.unique(res_all):
-        res = int(res)
-        sel = np.nonzero(res_all == res)[0]
-        out[sel] = _area_batch_one_res(cells[sel], res, geodesy,
-                                       MAX_DIM_BY_CII_RES, RES0_U_GNOMONIC)
-    return out
+    pts, nv = cell_boundary_batch(cells)
+    return geodesy.spheroid_ring_areas_m2(pts, nv) / 1.0e6
 
 
 def _face_ijk_batch(h, res, MAX_DIM_BY_CII_RES):
@@ -498,20 +482,6 @@ def _hex_boundary_batch_one_res(h, res, MAX_DIM_BY_CII_RES, RES0_U_GNOMONIC):
     return lat_v, lng_v, fallback
 
 
-def _area_batch_one_res(h, res, geodesy, MAX_DIM_BY_CII_RES, RES0_U_GNOMONIC):
-    lat_v, lng_v, fallback = _hex_boundary_batch_one_res(
-        h, res, MAX_DIM_BY_CII_RES, RES0_U_GNOMONIC
-    )
-    area = _spheroid_area_batch(lat_v, lng_v, geodesy)
-
-    if fallback.any():
-        from h3_indexer_spark.functions import udfs
-
-        for ix in np.nonzero(fallback)[0]:
-            area[ix] = udfs._cell_area_km2(int(h[ix]))
-    return area
-
-
 MAX_BOUNDARY_VERTS = 10  # H3 max: hexagon + up to 4 distortion vertices
 
 
@@ -706,49 +676,6 @@ def _down_ap3_v(i, j, k):
 
 def _down_ap3r_v(i, j, k):
     return _normalize_v(2 * i + k, i + 2 * j, j + 2 * k)
-
-
-def _spheroid_area_batch(lat_deg, lng_deg, geodesy):
-    """Vector twin of geodesy.spheroid_polygon_area_km2 for (n, 6)
-    vertex arrays (hexagons only; pentagons go scalar)."""
-    E = math.sqrt(geodesy._E2)
-    s = np.sin(np.radians(lat_deg))
-    q = (1.0 - geodesy._E2) * (
-        s / (1.0 - geodesy._E2 * s * s)
-        - (1.0 / (2.0 * E)) * np.log((1.0 - E * s) / (1.0 + E * s))
-    )
-    phi = np.arcsin(np.clip(q / geodesy._QP, -1.0, 1.0))
-    lam = np.radians(lng_deg)
-    c = np.cos(phi)
-    vx = c * np.cos(lam)
-    vy = c * np.sin(lam)
-    vz = np.sin(phi)
-    n_verts = 6
-    total = np.zeros(lat_deg.shape[0], dtype=np.float64)
-    for idx in range(n_verts):
-        a = (vx[:, idx], vy[:, idx], vz[:, idx])
-        b_i = (idx + 1) % n_verts
-        c_i = (idx + 2) % n_verts
-        b = (vx[:, b_i], vy[:, b_i], vz[:, b_i])
-        cc = (vx[:, c_i], vy[:, c_i], vz[:, c_i])
-        t1 = _cross_v(b, a)
-        t2 = _cross_v(b, cc)
-        cr = _cross_v(t1, t2)
-        ang = np.arctan2(
-            np.sqrt(cr[0] ** 2 + cr[1] ** 2 + cr[2] ** 2),
-            t1[0] * t2[0] + t1[1] * t2[1] + t1[2] * t2[2],
-        )
-        total = total + ang
-    excess = np.abs(total - (n_verts - 2) * math.pi)
-    return excess * geodesy.AUTHALIC_RADIUS_M ** 2 / 1.0e6
-
-
-def _cross_v(a, b):
-    return (
-        a[1] * b[2] - a[2] * b[1],
-        a[2] * b[0] - a[0] * b[2],
-        a[0] * b[1] - a[1] * b[0],
-    )
 
 
 def latlng_to_cell_batch(

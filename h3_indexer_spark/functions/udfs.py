@@ -13,7 +13,7 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, DoubleType, StringType
+from pyspark.sql.types import BinaryType, StringType
 
 from h3_indexer_spark.config.vector import AllocationMethod, GeometryType
 from h3_indexer_spark.constants import (
@@ -35,21 +35,14 @@ def _cell_boundary_ring(cell: int) -> tuple:
     return tuple((lng, lat) for lat, lng in core.cell_to_boundary(cell))
 
 
-@lru_cache(maxsize=262144)
-def _cell_area_km2(cell: int) -> float:
-    return geodesy.spheroid_polygon_area_km2(list(_cell_boundary_ring(cell)))
-
-
 _AREA_CACHE: dict[int, float] = {}
 _AREA_CACHE_MAX = 2_000_000
 
 
 def areas_for_cells(cells: list[int]) -> list[float]:
-    """Areas for many cells: vectorized batch compute of cache misses
-    (cell_area_km2_batch — agrees with the scalar path to the
-    spherical-excess noise floor), then a dict lookup. The cache is
-    bounded so a long-lived worker at fine resolutions cannot grow
-    without limit."""
+    """Areas for many cells: one cell_area_km2_batch call over the cache
+    misses, then a dict lookup. The cache is bounded so a long-lived
+    worker at fine resolutions cannot grow without limit."""
     import numpy as np
 
     from h3_indexer_spark.functions.h3.vectorized import cell_area_km2_batch
@@ -98,39 +91,6 @@ def h3_to_wkb_udf(h3_index: pd.Series) -> pd.Series:
     )
 
 
-@F.pandas_udf(DoubleType())
-def h3_area_km2_udf(h3_index: pd.Series) -> pd.Series:
-    """Spheroid cell area (reference geospatial.py:128-135 used
-    ST_AreaSpheroid over the hex geometry). Vectorized batch compute."""
-    mask = h3_index.notna()
-    out = pd.Series([None] * len(h3_index), dtype="float64")
-    if mask.any():
-        ints = [core.string_to_h3(s) for s in h3_index[mask]]
-        out[mask] = areas_for_cells(ints)
-    return out
-
-
-def make_latlng_to_cell_udf(res: int):
-    @F.pandas_udf(StringType())
-    def latlng_to_cell_udf(lat: pd.Series, lng: pd.Series) -> pd.Series:
-        from h3_indexer_spark.functions.h3.vectorized import (
-            latlng_to_cell_batch,
-        )
-
-        mask = lat.notna() & lng.notna()
-        out = pd.Series([None] * len(lat), dtype="object")
-        if mask.any():
-            cells = latlng_to_cell_batch(
-                lat[mask].to_numpy(dtype="float64"),
-                lng[mask].to_numpy(dtype="float64"),
-                res,
-            )
-            out[mask] = [core.h3_to_string(int(c)) for c in cells]
-        return out
-
-    return latlng_to_cell_udf
-
-
 @F.pandas_udf(StringType())
 def canonical_wkt_udf(geom: pd.Series) -> pd.Series:
     """G1/G2/G9: sniff encoding (WKT/WKB-hex/GeoJSON/binary), repair,
@@ -154,13 +114,6 @@ def canonical_wkt_udf(geom: pd.Series) -> pd.Series:
 
 
 # --- the indexing kernel: feature → (cell, ratio, metric) rows ------------
-
-
-def _index_point(rings, res: int, cell: int | None = None):
-    if cell is None:
-        (lng, lat) = rings[0][0]
-        cell = core.latlng_to_cell(lat, lng, res)
-    return [(cell, 1.0)], 1.0
 
 
 def _expand_with_neighbors(cells: list[int]) -> list[int]:
@@ -203,10 +156,6 @@ def _index_lines(lines, res: int, method: AllocationMethod, sampled=None):
         sum(geodesy.spheroid_line_length_m(line) for line in lines) / 1000.0
     )  # total_length_km
     return out, metric
-
-
-def _index_line(rings, res: int, method: AllocationMethod, sampled=None):
-    return _index_lines([rings[0]], res, method, sampled)
 
 
 def _split_outer_holes(rings):
@@ -287,11 +236,12 @@ def _index_polygons(
     feature allocates across the union of its members, assumed
     disjoint): ratio = kept_area(cell) / total_area over ALL parts."""
     parts = [_split_outer_holes(rings) for rings in polys]
-    metric = sum(
-        geodesy.spheroid_polygon_area_m2(outer)
-        - sum(geodesy.spheroid_polygon_area_m2(h) for h in holes)
-        for outer, holes in parts
-    ) / 1.0e6  # total_area_km2
+    rings, signs = [], []
+    for outer, holes in parts:
+        rings += [outer, *holes]
+        signs += [1.0] + [-1.0] * len(holes)  # holes subtract
+    ring_areas = geodesy.spheroid_polygon_area_m2_many(rings)
+    metric = float((ring_areas * signs).sum()) / 1.0e6  # total_area_km2
     if method == AllocationMethod.CENTROID:
         cx, cy = _area_centroid(parts)
         cell = core.latlng_to_cell(cy, cx, res)
@@ -328,12 +278,6 @@ def _index_polygons(
         if ratio > 0.0 or cell in sampled:
             out.append((cell, ratio))
     return out, metric
-
-
-def _index_polygon(rings, res: int, method: AllocationMethod, boundary=None):
-    return _index_polygons(
-        [rings], res, method, [boundary] if boundary is not None else None
-    )
 
 
 # --- batched allocation: numpy over every (part, cell) pair of a batch ----

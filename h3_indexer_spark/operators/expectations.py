@@ -56,6 +56,13 @@ def check_expectations(
     # same scan. foreign_key attaches a broadcast LEFT join per ref
     # (marker column null = orphan) instead of its own anti-join
     # scan; the first unique rule's key becomes the shared groupBy.
+    # internal column names share a prefix no column of df starts with
+    # (case-insensitively, as Spark resolves names), so a user column
+    # can never collide with a marker, count or per-rule total
+    tag = "_"
+    while any(c.lower().startswith(tag) for c in df.columns):
+        tag += "_"
+    n_col = f"{tag}n"
     flag_meta: list[tuple[int, str, str]] = []  # (i, kind, target)
     flags: dict[int, F.Column] = {}
     unique_rules: list[tuple[int, list[str]]] = []
@@ -86,7 +93,7 @@ def check_expectations(
             unique_rules.append((i, list(spec["columns"])))
         elif kind == "foreign_key":
             c = spec["column"]
-            marker = f"_xref_{n_fk}"
+            marker = f"{tag}xref_{n_fk}"
             n_fk += 1
             ref = (
                 spec["ref"]
@@ -108,7 +115,7 @@ def check_expectations(
     # rows — coalesce to 0 so an empty table reports 0 violations and
     # passes, rather than a NULL verdict a caller must special-case
     flag_aggs = [
-        F.coalesce(F.sum(flags[i].cast("long")), F.lit(0)).alias(f"_v{i}")
+        F.coalesce(F.sum(flags[i].cast("long")), F.lit(0)).alias(f"{tag}v{i}")
         for i, _, _ in flag_meta
     ]
     if unique_rules:
@@ -118,17 +125,17 @@ def check_expectations(
         # flag total, and n_rows from one subtree
         u_i, u_cols = unique_rules[0]
         grouped = base.groupBy(*u_cols).agg(
-            F.count(F.lit(1)).alias("_n"), *flag_aggs
+            F.count(F.lit(1)).alias(n_col), *flag_aggs
         )
         agg_row = grouped.agg(
-            F.coalesce(F.sum("_n"), F.lit(0))
+            F.coalesce(F.sum(n_col), F.lit(0))
             .cast("long")
             .alias("n_rows"),
             F.coalesce(
-                F.sum(F.when(F.col("_n") > 1, F.col("_n"))), F.lit(0)
-            ).alias(f"_v{u_i}"),
+                F.sum(F.when(F.col(n_col) > 1, F.col(n_col))), F.lit(0)
+            ).alias(f"{tag}v{u_i}"),
             *[
-                F.coalesce(F.sum(f"_v{i}"), F.lit(0)).alias(f"_v{i}")
+                F.coalesce(F.sum(f"{tag}v{i}"), F.lit(0)).alias(f"{tag}v{i}")
                 for i, _, _ in flag_meta
             ],
         )
@@ -150,7 +157,7 @@ def check_expectations(
             F.lit(i).cast("int").alias("rule_id"),
             F.lit(kind).alias("rule"),
             F.lit(target).alias("target"),
-            F.col(f"_v{i}").cast("long").alias("n_violations"),
+            F.col(f"{tag}v{i}").cast("long").alias("n_violations"),
         )
         for i, kind, target in flag_meta
     ]
@@ -168,10 +175,10 @@ def check_expectations(
     for u_i, u_cols in unique_rules[1:]:
         dup_rows = (
             df.groupBy(*u_cols)
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") > 1)
+            .agg(F.count(F.lit(1)).alias(n_col))
+            .where(F.col(n_col) > 1)
             .agg(
-                F.coalesce(F.sum("_n"), F.lit(0)).alias("n_violations")
+                F.coalesce(F.sum(n_col), F.lit(0)).alias("n_violations")
             )
         )
         reports.append(

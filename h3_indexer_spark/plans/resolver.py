@@ -3,7 +3,7 @@
 Per input: join the attribute columns back by unique id, weight each by
 ``ratio``, and group-sum per ``h3_index`` (A1, the resolver kernel).
 Then full-outer-join all per-input tables on ``h3_index`` into one wide
-row per cell and re-derive the cell metadata columns.
+row per cell and add the cell metadata columns.
 
 Output contract (reference README.md:344-357): ``h3_index,
 h3_resolution, h3_r3_parent, h3_area_km2, sum_<col>...``.
@@ -15,8 +15,10 @@ Scale notes:
 - every per-input aggregation and the full-outer chain share the
   ``h3_index`` key, so Catalyst reuses one hash partitioning across the
   whole stage (one shuffle per input, no re-exchange between joins);
-- cell metadata (area) is re-derived from the key via the memoized
-  kernel UDF instead of being carried through the aggregation.
+- the cell area is the Index kernel's ``h3_area_km2``, carried through
+  each input's aggregation (``max`` over rows of one cell, which all
+  hold the same value) and coalesced across inputs after the
+  alignment — the stage runs no Python.
 """
 
 from __future__ import annotations
@@ -35,44 +37,38 @@ from h3_indexer_spark.constants import (
     SUM_PREFIX,
 )
 from h3_indexer_spark.functions.h3.sql import parent_expr
-from h3_indexer_spark.functions.udfs import h3_area_km2_udf
 from h3_indexer_spark.operators.relational import (
     full_outer_align,
-    group_and_sum,
     join_left,
     repartition_by,
 )
 
 
 def resolve_input(vt: VectorTable) -> DataFrame:
-    """One input's resolved table: (h3_index, sum_<col>...) —
-    J2 → P3 → A1 (reference h3_resolver.py:101-135)."""
+    """One input's resolved table: (h3_index, sum_<col>...,
+    h3_area_km2) — J2 → P3 → A1 (reference h3_resolver.py:101-135).
+    The area rides the aggregation as a value, never as a key: a cell
+    indexed in two batches may differ in its last ulp."""
     if vt.h3_indexed_df is None:
         raise ValueError(f"input '{vt.id}' has not been indexed")
     if vt.df is None:
         raise ValueError(f"input '{vt.id}' has not been validated")
     uid = vt.unique_id
     cols = vt.input_column_names
-    indexed = vt.h3_indexed_df.select(H3_INDEX, uid, RATIO)
+    indexed = vt.h3_indexed_df.select(H3_INDEX, uid, RATIO, H3_AREA_KM2)
     attrs = vt.df.select(uid, *cols)
     joined = join_left(indexed, attrs, uid)
     weighted = joined.select(
         H3_INDEX,
+        H3_AREA_KM2,
         *[
             (F.col(c).cast("double") * F.col(RATIO)).alias(c)
             for c in cols
         ],
     )
-    return group_and_sum(weighted, H3_INDEX, cols, prefix=SUM_PREFIX)
-
-
-def _finalize(resolved: DataFrame, h3_resolution: int) -> DataFrame:
-    sum_cols = [c for c in resolved.columns if c.startswith(SUM_PREFIX)]
-    return (
-        resolved.withColumn(H3_RESOLUTION, F.lit(h3_resolution))
-        .withColumn(H3_R3_PARENT, parent_expr(H3_INDEX, 3))
-        .withColumn(H3_AREA_KM2, h3_area_km2_udf(F.col(H3_INDEX)))
-        .select(H3_INDEX, H3_RESOLUTION, H3_R3_PARENT, H3_AREA_KM2, *sum_cols)
+    return weighted.groupBy(H3_INDEX).agg(
+        *[F.sum(c).alias(f"{SUM_PREFIX}{c}") for c in cols],
+        F.max(H3_AREA_KM2).alias(H3_AREA_KM2),
     )
 
 
@@ -80,10 +76,22 @@ def h3_resolver_spark(spark: SparkSession, job: Job) -> DataFrame:
     """Resolve plan: per-input aggregation then full-outer alignment on
     h3_index (J3, reference h3_resolver.py:45-160). With one input the
     alignment is that input's table, so the reference's single-input
-    shortcut is the same plan."""
-    per_input = [resolve_input(vt) for vt in job.inputs.values()]
+    shortcut is the same plan. A cell's area comes from whichever
+    inputs cover it."""
+    areas = [f"_{H3_AREA_KM2}_{i}" for i in range(len(job.inputs))]
+    per_input = [
+        resolve_input(vt).withColumnRenamed(H3_AREA_KM2, area)
+        for vt, area in zip(job.inputs.values(), areas)
+    ]
     aligned = full_outer_align(per_input, H3_INDEX)
-    return repartition_by(_finalize(aligned, job.h3_resolution), H3_R3_PARENT)
+    sum_cols = [c for c in aligned.columns if c.startswith(SUM_PREFIX)]
+    resolved = (
+        aligned.withColumn(H3_RESOLUTION, F.lit(job.h3_resolution))
+        .withColumn(H3_R3_PARENT, parent_expr(H3_INDEX, 3))
+        .withColumn(H3_AREA_KM2, F.coalesce(*[F.col(a) for a in areas]))
+        .select(H3_INDEX, H3_RESOLUTION, H3_R3_PARENT, H3_AREA_KM2, *sum_cols)
+    )
+    return repartition_by(resolved, H3_R3_PARENT)
 
 
 h3_resolver_single_input_spark = h3_resolver_spark

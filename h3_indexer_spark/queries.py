@@ -3357,29 +3357,8 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Registry + DuckDB oracles
 # --------------------------------------------------------------------------
 
-# Ordering contract: the round driver hash-checks only the FIRST 50
-# entries (dict order) against their DuckDB oracles, so positions 0-49
-# must ALL have an ORACLES entry — rows-only keys (seeded hashes,
-# sketches, iterative float algorithms) live strictly after them, and
-# the oracle-checkable keys that overflow the window are still verified
-# by tests/test_oracle.py, which runs the identical comparison on every
-# ORACLES key. tests/test_entry.py locks this layout.
 QUERIES: dict[str, Query] = {
-    # -- driver window 0-49 (round 7): q_kcore (the ONLY contract key
-    #    with no driver record in any round — VERDICT r6 item #2), the
-    #    12 keys whose last driver window was round 3 (same item), the
-    #    two reworked spatial joins (PIP's candidate shuffle slimmed,
-    #    the radius join's k-ring expansion vectorized — VERDICT r6
-    #    items #1/#4 require re-verification), new round-7 operator
-    #    keys as they land, and the stalest round-4 keys filling the
-    #    rest (dedup family first — the LLM-pipeline core). Every
-    #    displaced key is driver-green from r4-r6 and stays covered by
-    #    the identical local comparison in tests/test_oracle.py.
-    #    Composition locked in tests/test_entry.py.
-    # never driver-recorded (rows-only: iterative peeling, no SQL
-    # mirror — the driver records rows+schema)
     "q_kcore": q_kcore,
-    # last driver window round 3 (testdata regenerated 4x since)
     "q_project": q_project,
     "q_lit_cols": q_lit_cols,
     "q_mul_ratio": q_mul_ratio,
@@ -3392,12 +3371,9 @@ QUERIES: dict[str, Query] = {
     "q_except": q_except,
     "q_token_count": q_token_count,
     "q_quality_score": q_quality_score,
-    # reworked this round — must stay hash-green under the new plans
     "q_point_in_polygon": q_point_in_polygon,
     "q_h3_radius_join": q_h3_radius_join,
     "q_spatial_knn": q_spatial_knn,
-    # new round-7 operator keys (debut in the window; each added
-    # as its implementation lands this round)
     "q_knn_ivfpq_rerank": q_knn_ivfpq_rerank,
     "q_bpe_pairs": q_bpe_pairs,
     "q_bm25": q_bm25,
@@ -3414,10 +3390,6 @@ QUERIES: dict[str, Query] = {
     "q_lm_score": q_lm_score,
     "q_feature_hash": q_feature_hash,
     "q_dbscan": q_dbscan,
-    # stalest remaining: last driver window round 4 (dedup family and
-    # the high-algorithm keys first; the 6 r4 keys that don't fit —
-    # scan_where, sessionize, tfidf, top_orders, window_tumbling,
-    # zscore — rotate in round 8)
     "q_dedup_minhash": q_dedup_minhash,
     "q_dedup_simhash": q_dedup_simhash,
     "q_dedup_keep_best": q_dedup_keep_best,
@@ -3436,12 +3408,6 @@ QUERIES: dict[str, Query] = {
     "q_fingerprint": q_fingerprint,
     "q_decontaminate": q_decontaminate,
     "q_decontaminate_bloom": q_decontaminate_bloom,
-    # -- beyond the window (q_clean_lines / q_frequent_items /
-    #    q_attribution moved out as q_lm_score / q_feature_hash /
-    #    q_attribution / q_rare_words / q_corpus_curation /
-    #    q_contamination_frac / q_media_dedup moved out as new keys
-    #    debuted: q_lm_score / q_feature_hash / q_spatial_knn /
-    #    q_seasonality)
     "q_media_dedup": q_media_dedup,
     "q_corpus_curation": q_corpus_curation,
     "q_contamination_frac": q_contamination_frac,
@@ -3449,8 +3415,6 @@ QUERIES: dict[str, Query] = {
     "q_attribution": q_attribution,
     "q_clean_lines": q_clean_lines,
     "q_frequent_items": q_frequent_items,
-    # -- beyond the window: driver-green r4-r6; tests/test_oracle.py
-    #    runs the identical comparison every session
     "q_gap_fill": q_gap_fill,
     "q_join_full_outer": q_join_full_outer,
     "q_join_left_small": q_join_left_small,
@@ -6904,9 +6868,7 @@ ORACLES["q_rolling_median"] = """
 
 # --------------------------------------------------------------------------
 # Round-7 continuation batch: retrieval fusion/eval, BFS, collocations,
-# Benford. Registered AFTER the first-50 driver window (dict-append order);
-# tests/test_oracle.py verifies them like every other ORACLES key, and they
-# rotate into a future round's window per the ordering contract above.
+# Benford. tests/test_oracle.py verifies them like every other ORACLES key.
 # --------------------------------------------------------------------------
 
 
@@ -8496,19 +8458,6 @@ ORACLES["q_active_users_hll"] = _active_hll_oracle()
 ORACLES["q_hybrid_retrieval"] = _hybrid_retrieval_oracle()
 
 
-# ---------------------------------------------------------------------
-# Round-8 driver window — ONE canonical declaration (ADVICE r7: the
-# eight round-7 incremental splices are collapsed; this list IS the
-# window, no positional arithmetic to re-derive). The driver
-# hash-checks the FIRST 50 QUERIES entries in dict order. Capacity is
-# EXACTLY spent: the 41 keys whose latest driver row is round 4
-# (testdata has regenerated three times since — VERDICT r7 item #1),
-# q_label_prop (the one key with no driver record, yielding its slot
-# last round by the documented q_kcore precedent), and the 8 round-8
-# debuts. Every displaced key holds a green round-5..7 driver row;
-# tests/test_entry.py::test_every_oracle_key_has_a_driver_row
-# re-checks the union-coverage invariant, and the round-8 composition
-# is locked by tests/test_entry.py::test_round8_window_composition.
 # ---------------------------------------------------------------- #
 # Round-8 continuation: sketch/point-query, link prediction,        #
 # nonparametric testing, SCD2 warehousing, one-pass corr matrix,    #
@@ -12873,157 +12822,3 @@ QUERIES["q_auc_ovr"] = q_auc_ovr
 ORACLES["q_t_closeness"] = _T_CLOSENESS_ORACLE
 ORACLES["q_trend_test"] = _TREND_TEST_ORACLE
 ORACLES["q_auc_ovr"] = _AUC_OVR_ORACLE
-
-
-# Round-12 driver window (ONE canonical list — the driver hash-checks
-# the FIRST 50 QUERIES entries in dict order), executing the SURVEY
-# §7.1 rotation plan written at round-11 close: the 42 oracle keys
-# whose latest driver row is round 7 (verbatim §7.1 list — after this
-# round no ORACLE key's latest driver row predates round 8), the 3
-# round-12 debuts (every NEW key takes its first driver record in its
-# debut round — driver-window-slot rule): q_t_closeness (VERDICT r11
-# #2, completing the k/l/t privacy trio), q_trend_test (#3, the
-# Cochran-Armitage ordered-contingency sibling of Fisher's exact),
-# q_auc_ovr (#5, macro/weighted/micro one-vs-rest AUC); and the 5
-# remaining slots on the OLDEST stale rows-only keys (r6 cohort,
-# alphabetically — VERDICT r11 #4: their mirror-less driver records
-# are 6 rounds old and cheap to re-take). The round-11 window's 50
-# keys all took fresh rows in round 11 and yield.
-_WINDOW_R12 = [
-    # 42 round-7-stale oracle rotations (SURVEY §7.1 list, verbatim)
-    "q_calibration",
-    "q_cohens_kappa",
-    "q_collocations",
-    "q_count",
-    "q_distinct",
-    "q_embed_normalize",
-    "q_except",
-    "q_feature_hash",
-    "q_filter_notnull",
-    "q_first",
-    "q_forecast_wape",
-    "q_gini",
-    "q_h3_radius_join",
-    "q_hll_grouped",
-    "q_hll_registers",
-    "q_intersect",
-    "q_js_divergence",
-    "q_knn_ivfpq_rerank",
-    "q_ks_test",
-    "q_label_vote",
-    "q_lit_cols",
-    "q_lm_score",
-    "q_lorenz",
-    "q_mul_ratio",
-    "q_mutual_info",
-    "q_ndcg",
-    "q_point_in_polygon",
-    "q_project",
-    "q_quality_score",
-    "q_readability",
-    "q_retrieval_eval",
-    "q_rfm",
-    "q_rrf_fusion",
-    "q_seasonality",
-    "q_skyline",
-    "q_spatial_knn",
-    "q_string_agg",
-    "q_survival",
-    "q_time_to_convert",
-    "q_token_count",
-    "q_union",
-    "q_vocab_encode",
-    # round-12 debuts (first driver record)
-    "q_t_closeness",
-    "q_trend_test",
-    "q_auc_ovr",
-    # oldest stale rows-only keys (r6 cohort, alphabetical head)
-    "q_approx_stats",
-    "q_ewma",
-    "q_kmeans",
-    "q_knn_ivfpq",
-    "q_media_frames",
-]
-assert len(_WINDOW_R12) == 50, len(_WINDOW_R12)
-assert len(set(_WINDOW_R12)) == 50
-_missing = [k for k in _WINDOW_R12 if k not in QUERIES]
-assert not _missing, f"window names unknown keys: {_missing}"
-QUERIES = {
-    **{k: QUERIES[k] for k in _WINDOW_R12},
-    **{k: v for k, v in QUERIES.items() if k not in _WINDOW_R12},
-}
-
-
-# Round-13 driver window, executing the SURVEY §7.1 rotation plan
-# written at round-12 close: the 49 oracle keys whose latest driver
-# row is round 8 (verbatim §7.1 list — after this round no ORACLE
-# key's latest driver row predates round 9), and the ONE remaining
-# slot on the oldest stale rows-only key (r6 cohort head:
-# q_media_resize). Round 13 is an optimization round — no feature
-# debuts by rule, so the debut-first slot precedence doesn't apply.
-# The round-12 window's 50 keys all took fresh rows in round 12 and
-# yield. (This is a dict reorder only: every key keeps its exact
-# implementation and oracle — the driver hash-checks the FIRST 50
-# QUERIES entries in dict order.)
-_WINDOW_R13 = [
-    # 49 round-8-stale oracle rotations (SURVEY §7.1 list, verbatim)
-    "q_active_users_hll",
-    "q_adamic_adar",
-    "q_asof_join",
-    "q_attribution",
-    "q_bpe_encode",
-    "q_charset_stats",
-    "q_cms_estimate",
-    "q_containment",
-    "q_contamination_frac",
-    "q_corpus_curation",
-    "q_corr",
-    "q_corr_matrix",
-    "q_decontaminate",
-    "q_decontaminate_bloom",
-    "q_dedup_clusters",
-    "q_dedup_embedding",
-    "q_dedup_embedding_lsh",
-    "q_dedup_keep_best",
-    "q_dedup_minhash",
-    "q_dedup_ngram_jaccard",
-    "q_dedup_resolve",
-    "q_dedup_simhash",
-    "q_dedup_spans_global",
-    "q_degree_dist",
-    "q_diversity",
-    "q_embed_quantize",
-    "q_eventually_follows",
-    "q_fleiss_kappa",
-    "q_frequent_items",
-    "q_fuzzy_join",
-    "q_hybrid_retrieval",
-    "q_join_full_outer",
-    "q_join_left_small",
-    "q_join_skew_salted",
-    "q_kmv_distinct",
-    "q_knn_brute",
-    "q_knn_lsh",
-    "q_mann_whitney",
-    "q_market_share",
-    "q_media_dedup",
-    "q_ohlc_bars",
-    "q_range_join",
-    "q_retention_cohorts",
-    "q_robust_scale",
-    "q_rolling_features",
-    "q_scd2",
-    "q_sessionize",
-    "q_tfidf",
-    "q_vocab_coverage",
-    # oldest stale rows-only key (r6 cohort head)
-    "q_media_resize",
-]
-assert len(_WINDOW_R13) == 50, len(_WINDOW_R13)
-assert len(set(_WINDOW_R13)) == 50
-_missing = [k for k in _WINDOW_R13 if k not in QUERIES]
-assert not _missing, f"window names unknown keys: {_missing}"
-QUERIES = {
-    **{k: QUERIES[k] for k in _WINDOW_R13},
-    **{k: v for k, v in QUERIES.items() if k not in _WINDOW_R13},
-}

@@ -189,24 +189,29 @@ class TestBatchedGeodesy:
         )
         assert z[0] == 0.0
 
-    def test_spheroid_area_many_matches_scalar(self):
+    def test_concave_ring_area_is_sum_of_parts(self):
+        """An L of three 1° squares has a reflex vertex; its area is the
+        sum of the squares' in either winding, and an unused padded
+        tail does not count."""
         from h3_indexer_spark.functions import geodesy
 
-        rng = random.Random(11)
-        rings = []
-        for _ in range(300):
-            cx, cy = rng.uniform(-170, 170), rng.uniform(-75, 75)
-            angs = sorted(rng.uniform(0, 2 * math.pi)
-                          for _ in range(rng.randint(3, 9)))
-            rings.append([
-                (cx + 0.3 * math.cos(a), cy + 0.3 * math.sin(a))
-                for a in angs
-            ])
-        got = geodesy.spheroid_polygon_area_m2_many(rings)
-        for r, g in zip(rings, got):
-            assert g == pytest.approx(
-                geodesy.spheroid_polygon_area_m2(r), rel=1e-6
-            )
+        def square(x, y):
+            return [(x, y), (x + 1, y), (x + 1, y + 1), (x, y + 1)]
+
+        ell = [(0, 0), (2, 0), (2, 1), (1, 1), (1, 2), (0, 2)]
+        parts = geodesy.spheroid_polygon_area_m2_many(
+            [square(0, 0), square(1, 0), square(0, 1)]
+        ).sum()
+        got = geodesy.spheroid_polygon_area_m2_many(
+            [ell, ell[::-1], ell + [ell[0]]]
+        )
+        assert got == pytest.approx([parts] * 3, rel=1e-12)
+        padded = np.zeros((1, 10, 2))
+        padded[0, :6] = ell
+        padded[0, 6:] = (50.0, 50.0)
+        assert geodesy.spheroid_ring_areas_m2(padded, [6])[0] == \
+            pytest.approx(parts, rel=1e-12)
+        assert (geodesy.spheroid_ring_areas_m2(padded, [2]) == 0).all()
 
 
 class TestBatchAllocatorsMatchScalar:

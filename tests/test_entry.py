@@ -28,115 +28,6 @@ def test_queries_and_oracles_consistent():
     assert len(q) >= 20
 
 
-# Round-13 window composition: the driver hash-checks the FIRST 50
-# QUERIES entries in dict order; no-oracle keys get a weaker
-# rows+schema record. This round executes SURVEY §7.1's rotation plan
-# (queries.py::_WINDOW_R13): the 49 oracle keys whose latest driver
-# row is round 8 take the window (after this round no oracle key's
-# latest driver row predates round 9), plus the oldest stale
-# rows-only key in the one remaining slot (no debuts — round 13 is
-# an optimization round). The round-12 window's 50 keys all took
-# fresh rows in round 12 and yield their slots.
-ROTATED_R13 = {
-    "q_active_users_hll", "q_adamic_adar", "q_asof_join",
-    "q_attribution", "q_bpe_encode", "q_charset_stats",
-    "q_cms_estimate", "q_containment", "q_contamination_frac",
-    "q_corpus_curation", "q_corr", "q_corr_matrix", "q_decontaminate",
-    "q_decontaminate_bloom", "q_dedup_clusters", "q_dedup_embedding",
-    "q_dedup_embedding_lsh", "q_dedup_keep_best", "q_dedup_minhash",
-    "q_dedup_ngram_jaccard", "q_dedup_resolve", "q_dedup_simhash",
-    "q_dedup_spans_global", "q_degree_dist", "q_diversity",
-    "q_embed_quantize", "q_eventually_follows", "q_fleiss_kappa",
-    "q_frequent_items", "q_fuzzy_join", "q_hybrid_retrieval",
-    "q_join_full_outer", "q_join_left_small", "q_join_skew_salted",
-    "q_kmv_distinct", "q_knn_brute", "q_knn_lsh", "q_mann_whitney",
-    "q_market_share", "q_media_dedup", "q_ohlc_bars", "q_range_join",
-    "q_retention_cohorts", "q_robust_scale", "q_rolling_features",
-    "q_scd2", "q_sessionize", "q_tfidf", "q_vocab_coverage",
-}
-# rows-only keys allowed in the round-13 window (no SQL mirror):
-# the oldest stale mirror-less driver record (r6 cohort head)
-ROWS_ONLY_R13 = {
-    "q_media_resize",
-}
-
-
-def test_round13_window_composition():
-    """All 49 round-8-stale oracle keys and the oldest stale
-    rows-only key sit inside the 50-key window; the only non-oracle
-    window key is the planned rows-only refresh."""
-    import __spark_entry__ as e
-
-    q = list(e.queries())
-    o = e.oracle_sql()
-    window = set(q[:50])
-    must_rotate = ROTATED_R13 | ROWS_ONLY_R13
-    missing = must_rotate - window
-    assert not missing, f"stale keys fell out of the window: {missing}"
-    no_oracle = {k for k in q[:50] if k not in o}
-    assert no_oracle <= ROWS_ONLY_R13, (
-        f"unexpected no-oracle keys in window: {no_oracle - ROWS_ONLY_R13}"
-    )
-
-
-def test_no_stale_driver_rows_after_round13():
-    """The freshness invariant VERDICT r9 #1 prescribes, advanced one
-    round: every oracle key's latest driver row, once this round's
-    window lands, is round 9 or later. Historical CORRECTNESS files
-    give each key's latest recorded round; keys in the current window
-    count as latest=current."""
-    import glob
-    import json
-    import os
-    import re
-
-    import __spark_entry__ as e
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    latest: dict[str, int] = {}
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            keys = set(json.load(open(path)))
-        except (json.JSONDecodeError, OSError):  # pragma: no cover
-            continue
-        for k in keys:
-            latest[k] = max(latest.get(k, 0), rnd)
-    current_round = max(latest.values(), default=0) + 1
-    for k in list(e.queries())[:50]:
-        latest[k] = current_round
-    stale = {
-        k: latest.get(k)
-        for k in e.oracle_sql()
-        if latest.get(k, 0) < 9
-    }
-    assert not stale, f"keys whose latest driver row predates round 9: {stale}"
-
-
-def test_every_oracle_key_has_a_driver_row():
-    """Union of historical CORRECTNESS driver rows plus the current
-    window must cover every ORACLES key — i.e. after this round's driver
-    run, no oracle key will ever have been skipped by the gate."""
-    import glob
-    import json
-    import os
-
-    import __spark_entry__ as e
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    seen = set(list(e.queries())[:50])
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        try:
-            seen |= set(json.load(open(path)))
-        except (json.JSONDecodeError, OSError):  # pragma: no cover
-            continue
-    uncovered = set(e.oracle_sql()) - seen
-    assert not uncovered, f"oracle keys never driver-checked: {uncovered}"
-
-
 @pytest.mark.slow
 def test_no_array_columns_cross_contract_boundary(spark):
     """The driver's canonicalizer sorts rows by every column and dies

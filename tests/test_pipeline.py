@@ -74,6 +74,30 @@ def _polygons_input(fixture_dir):
     )
 
 
+def _stage_nodes(node, enter_cache=True):
+    """Node names of an executed plan, entering the first cached
+    relation (a persisted frame's own plan) but no cached input of it,
+    so upstream stages' Python nodes are not counted."""
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        kids = [node.executedPlan()]
+    elif name.endswith("QueryStage"):
+        kids = [node.plan()]
+    elif name == "InMemoryTableScan":
+        if not enter_cache:
+            return [name]
+        kids, enter_cache = [node.relation().cachedPlan()], False
+    else:
+        it = node.children().iterator()
+        kids = []
+        while it.hasNext():
+            kids.append(it.next())
+    out = [name]
+    for k in kids:
+        out += _stage_nodes(k, enter_cache)
+    return out
+
+
 class TestValidate:
     def test_points_ok(self, spark, fixture_dir):
         job = _job(fixture_dir, {"pts": _points_input(fixture_dir)})
@@ -205,6 +229,40 @@ class TestIndexPolygons:
         assert "total_area_km2" in out.columns
         assert out.filter(F.col("total_area_km2") <= 0).count() == 0
 
+    def test_concave_polygon_area_metric(self, spark, tmp_path):
+        """A PCT_AREA feature with a reflex vertex: total_area_km2 is
+        the sum of the three squares it is made of (edges are great
+        circles, so the ring keeps the squares' vertices on its long
+        sides)."""
+        import pandas as pd
+
+        from h3_indexer_spark.functions import geodesy
+
+        def square(x, y):
+            return [(x, y), (x + 1, y), (x + 1, y + 1), (x, y + 1)]
+
+        ell = [(-100, 38), (-99, 38), (-98, 38), (-98, 39), (-99, 39),
+               (-99, 40), (-100, 40), (-100, 39)]
+        wkt = "POLYGON ((" + ", ".join(
+            f"{x} {y}" for x, y in ell + [ell[0]]
+        ) + "))"
+        pd.DataFrame(
+            {"geoid": [1], "geometry": [wkt], "population": [10.0]}
+        ).to_parquet(tmp_path / "ell.parquet")
+        spec = _polygons_input(tmp_path)
+        spec.update(path=str(tmp_path / "ell.parquet"),
+                    input_columns=["population"])
+        job = _job(tmp_path, {"ell": spec}, res=4, tmp=str(tmp_path / "out"))
+        validate_config(job, spark)
+        index_job(job, spark)
+        rows = job.inputs["ell"].h3_indexed_df.collect()
+        expected = geodesy.spheroid_polygon_area_m2_many(
+            [square(-100, 38), square(-99, 38), square(-100, 39)]
+        ).sum() / 1.0e6
+        assert len(rows) > 1
+        for r in rows:
+            assert r.total_area_km2 == pytest.approx(expected, rel=1e-12)
+
 
 class TestResolve:
     def test_two_input_resolve(self, spark, fixture_dir):
@@ -239,6 +297,46 @@ class TestResolve:
             & F.col("sum_emissions").isNull()
         ).count()
         assert n_pts_only > 0
+
+    def test_resolve_runs_no_python_and_keeps_index_areas(
+        self, spark, fixture_dir
+    ):
+        """Resolve carries the Index kernel's cell area through its
+        aggregation: its executed plan has no Python node, and every
+        resolved cell — covered by both inputs or by one — holds the
+        area its indexed rows hold."""
+        job = _job(
+            fixture_dir,
+            {
+                "pts": _points_input(fixture_dir),
+                "lines": _lines_input(fixture_dir),
+            },
+        )
+        validate_config(job, spark)
+        index_job(job, spark)
+        resolve_job(job, spark)
+        out = job.h3_resolved_df
+        resolved = {r.h3_index: r for r in out.collect()}
+        nodes = _stage_nodes(out._jdf.queryExecution().executedPlan())
+        assert "SortMergeJoin" in nodes  # the resolver's own plan
+        assert "ArrowEvalPython" not in nodes
+        assert "BatchEvalPython" not in nodes
+
+        indexed: dict[str, list[float]] = {}
+        covered: dict[str, set] = {}
+        for name, vt in job.inputs.items():
+            for r in vt.h3_indexed_df.select(
+                "h3_index", "h3_area_km2"
+            ).collect():
+                indexed.setdefault(r.h3_index, []).append(r.h3_area_km2)
+                covered.setdefault(r.h3_index, set()).add(name)
+        assert set(resolved) == set(indexed)
+        assert {len(v) for v in covered.values()} == {1, 2}
+        for cell, row in resolved.items():
+            assert row.h3_area_km2 == max(indexed[cell]), cell
+            assert row.h3_area_km2 == pytest.approx(
+                min(indexed[cell]), rel=1e-12
+            )
 
     def test_persisted_stage_width_follows_cores(self, spark, fixture_dir):
         """At the res-6 shuffle width (800) the persisted Index and
@@ -438,9 +536,11 @@ class TestReferenceNotebookGolden:
         from h3_indexer_spark.functions import udfs
         from h3_indexer_spark.functions.h3 import core
 
-        for cell_s, expected in self.GOLDEN_AREAS:
-            got = udfs._cell_area_km2(core.string_to_h3(cell_s))
-            assert abs(got - expected) / expected < 1e-6, (cell_s, got)
+        got = udfs.areas_for_cells(
+            [core.string_to_h3(c) for c, _ in self.GOLDEN_AREAS]
+        )
+        for (cell_s, expected), area in zip(self.GOLDEN_AREAS, got):
+            assert abs(area - expected) / expected < 1e-6, (cell_s, area)
         b = core.cell_to_boundary(core.string_to_h3("8412c87ffffffff"))
         # notebook cell 20: POLYGON ((-113.74631 49.40961, -113.97755 49.2...
         assert round(b[0][1], 5) == -113.74631

@@ -279,6 +279,46 @@ class TestExpectations:
         assert report[4].n_violations == 1  # 999
         assert all(r.n_rows == 4 for r in report.values())
 
+    def test_user_column_named_like_fk_marker(self, spark):
+        """A column named like the foreign-key marker is checked, not
+        mistaken for the marker (an ambiguous reference before)."""
+        from h3_indexer_spark.operators.expectations import (
+            check_expectations,
+        )
+
+        df = spark.createDataFrame(
+            [(1, 100), (2, 999), (3, None), (4, 998)],
+            "id long, _xref_0 long",
+        )
+        ref = spark.createDataFrame([(100,), (101,)], "ref_id long")
+        (r,) = check_expectations(
+            df,
+            [{"rule": "foreign_key", "column": "_xref_0", "ref": ref,
+              "ref_column": "ref_id"}],
+        ).collect()
+        assert (r.target, r.n_violations, r.n_rows) == ("_xref_0", 2, 4)
+
+    def test_unique_rule_on_column_named_like_count(self, spark):
+        """unique over columns named like the internal per-key count and
+        rule totals (``_n``, ``_v0``) counts the duplicate rows."""
+        from h3_indexer_spark.operators.expectations import (
+            check_expectations,
+        )
+
+        df = spark.createDataFrame(
+            [(1, 0), (1, 0), (1, 1), (2, None), (3, 5)], "_n long, _v0 long"
+        )
+        report = check_expectations(
+            df,
+            [
+                {"rule": "not_null", "column": "_v0"},
+                {"rule": "unique", "columns": ["_n"]},
+                {"rule": "unique", "columns": ["_n", "_v0"]},
+            ],
+        ).collect()
+        got = {r.rule_id: (r.n_violations, r.n_rows) for r in report}
+        assert got == {0: (1, 5), 1: (3, 5), 2: (2, 5)}
+
     def test_clean_table_passes(self, spark):
         from h3_indexer_spark.operators.expectations import (
             check_expectations,

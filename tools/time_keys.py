@@ -3,6 +3,8 @@
 /warmup, cold + N steady reps per key, one RES line per key.
 
 Usage: python tools/time_keys.py [--reps N] KEY...
+
+Runs on ``local[$SPARK_GRAFT_CPUS]``, by default the host's core count.
 """
 
 from __future__ import annotations
@@ -30,7 +32,7 @@ def main() -> None:
             keys.append(argv[i])
             i += 1
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
 
     from h3_indexer_spark.session import get_spark_session
 
