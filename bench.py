@@ -1,13 +1,19 @@
 #!/usr/bin/env python
-"""Benchmark harness (driver contract).
+"""Per-key analytics timer.
 
 Runs the headline queries from ``__spark_entry__.queries()`` against
 ``$SPARK_GRAFT_SF_DIR`` (default ``/root/testdata/sf0.1``) on
 ``local[$SPARK_GRAFT_CPUS]`` (default: the host's core count) and
-prints ONE JSON line:
+prints two JSON lines: the full per-key record, then a compact
+summary as the last stdout line:
 
-    {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {"q_groupby_sum": sec, ...}, "sf": 0.1}
+    {"metric": "...", "value": <cold total sec>, "unit": "sec",
+     "queries": {"q_groupby_sum": steady sec, ...}, "sf": 0.1,
+     "steady_total": sec, ...}
+
+Each key runs once cold, then ``$SPARK_GRAFT_STEADY_REPS`` (default 3)
+steady reps whose median is recorded. Nothing is written inside the
+repository.
 
 Each query is executed to completion with a count-free full
 materialization (``noop`` write) so timing covers the whole plan but
@@ -228,172 +234,6 @@ HEADLINE = [
 ]
 
 
-def _geo_pipeline_bench(
-    spark, sf: float, steady_reps: int = 1
-) -> tuple[dict[str, float], dict[str, float]]:
-    """Index-stage throughput on deterministic synthetic geo data
-    (the engine's core capability): POINT/WITHIN at res 7 and
-    LINE/PCT_LENGTH at res 4, sized by scale factor. Data is generated
-    once per sf and cached as parquet under /tmp.
-
-    Returns (cold, steady): each timed job runs once cold, then
-    ``steady_reps`` more times with the median recorded — the same
-    cold/steady discipline as the q_* keys, so a geo cold-number drift
-    can be separated from host noise the way every other key's can."""
-    from pyspark.sql import functions as F
-
-    from h3_indexer_spark.config.vector import AllocationMethod, GeometryType
-    from h3_indexer_spark.functions.udfs import make_index_map_fn
-
-    n_points = max(10_000, int(1_000_000 * sf))
-    n_lines = max(5_000, int(270_000 * sf))
-    out: dict[str, float] = {}
-
-    # untimed Python-worker warmup: spin up the Arrow/pandas worker
-    # pool and exercise each kernel path once (points, lines, polygons
-    # hit different lazy imports and worker-local caches), so the timed
-    # sections measure kernel throughput rather than process fork +
-    # import + first-call cost
-    warm_cases = [
-        (GeometryType.POINT, AllocationMethod.WITHIN, 7, "total_count",
-         F.lit("POINT (-100.0 40.0)")),
-        (GeometryType.LINE, AllocationMethod.PCT_LENGTH, 4,
-         "total_length_km",
-         F.lit("LINESTRING (-100.0 40.0, -99.8 40.1)")),
-        (GeometryType.POLYGON, AllocationMethod.PCT_AREA, 6,
-         "total_area_km2",
-         F.lit("POLYGON ((-100 40, -99.9 40, -99.9 40.1, -100 40.1, "
-               "-100 40))")),
-    ]
-    for gtype, meth, res, metric, geom in warm_cases:
-        warm_fn = make_index_map_fn("uid", gtype, meth, res, metric)
-        (
-            spark.range(64)
-            .repartition(64)
-            .select(F.col("id").alias("uid"), geom.alias("geom_wkt"))
-            .mapInPandas(
-                warm_fn,
-                schema=(
-                    "uid bigint, h3_index string, ratio double, "
-                    f"{metric} double, h3_area_km2 double"
-                ),
-            )
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
-
-    pts_path = f"/tmp/h3idx_bench_points_{n_points}.parquet"
-    if not os.path.isdir(pts_path):
-        (
-            spark.range(n_points)
-            .select(
-                F.col("id").alias("uid"),
-                F.format_string(
-                    "POINT (%s %s)",
-                    F.rand(seed=4) * 50 - 120,
-                    F.rand(seed=3) * 23 + 25,
-                ).alias("geom_wkt"),
-            )
-            .write.mode("overwrite")
-            .parquet(pts_path)
-        )
-    jobs: list[tuple[str, object, object, str]] = []
-    pts = spark.read.parquet(pts_path)
-    fn = make_index_map_fn(
-        "uid", GeometryType.POINT, AllocationMethod.WITHIN, 7, "total_count"
-    )
-    schema = (
-        "uid bigint, h3_index string, ratio double, total_count double, "
-        "h3_area_km2 double"
-    )
-    jobs.append(("geo_index_points", pts, fn, schema))
-
-    lines_path = f"/tmp/h3idx_bench_lines_{n_lines}.parquet"
-    if not os.path.isdir(lines_path):
-        seg = "LINESTRING (%s %s, %s %s, %s %s)"
-        x0 = F.rand(seed=7) * 50 - 120
-        y0 = F.rand(seed=8) * 23 + 25
-        (
-            spark.range(n_lines)
-            .select(
-                F.col("id").alias("uid"),
-                F.format_string(
-                    seg,
-                    x0,
-                    y0,
-                    x0 + F.rand(seed=9) * 0.4 - 0.2,
-                    y0 + F.rand(seed=10) * 0.4 - 0.2,
-                    x0 + F.rand(seed=11) * 0.8 - 0.4,
-                    y0 + F.rand(seed=12) * 0.8 - 0.4,
-                ).alias("geom_wkt"),
-            )
-            .write.mode("overwrite")
-            .parquet(lines_path)
-        )
-    lines = spark.read.parquet(lines_path)
-    fn = make_index_map_fn(
-        "uid", GeometryType.LINE, AllocationMethod.PCT_LENGTH, 4,
-        "total_length_km",
-    )
-    schema = (
-        "uid bigint, h3_index string, ratio double, total_length_km double, "
-        "h3_area_km2 double"
-    )
-    jobs.append(("geo_index_lines", lines, fn, schema))
-
-    # polygons (PCT_AREA, res 6) — the reference's heaviest kernel;
-    # sized to its demonstrated 3,235-county run at sf0.1
-    n_polys = max(1_000, int(32_000 * sf))
-    polys_path = f"/tmp/h3idx_bench_polys_{n_polys}.parquet"
-    if not os.path.isdir(polys_path):
-        x0 = F.rand(seed=21) * 50 - 120
-        y0 = F.rand(seed=22) * 23 + 25
-        w = F.rand(seed=23) * 0.15 + 0.05
-        h = F.rand(seed=24) * 0.15 + 0.05
-        (
-            spark.range(n_polys)
-            .select(
-                F.col("id").alias("uid"),
-                F.format_string(
-                    "POLYGON ((%s %s, %s %s, %s %s, %s %s, %s %s))",
-                    x0, y0, x0 + w, y0, x0 + w, y0 + h, x0, y0 + h, x0, y0,
-                ).alias("geom_wkt"),
-            )
-            .write.mode("overwrite")
-            .parquet(polys_path)
-        )
-    polys = spark.read.parquet(polys_path)
-    fn = make_index_map_fn(
-        "uid", GeometryType.POLYGON, AllocationMethod.PCT_AREA, 6,
-        "total_area_km2",
-    )
-    schema = (
-        "uid bigint, h3_index string, ratio double, total_area_km2 double, "
-        "h3_area_km2 double"
-    )
-    jobs.append(("geo_index_polygons", polys, fn, schema))
-
-    steady: dict[str, float] = {}
-    for key, df, map_fn, out_schema in jobs:
-        t0 = time.perf_counter()
-        df.mapInPandas(map_fn, schema=out_schema).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        out[key] = round(time.perf_counter() - t0, 4)
-    for key, df, map_fn, out_schema in jobs:
-        reps = []
-        for _ in range(max(steady_reps, 1)):
-            t0 = time.perf_counter()
-            df.mapInPandas(map_fn, schema=out_schema).write.format(
-                "noop"
-            ).mode("overwrite").save()
-            reps.append(time.perf_counter() - t0)
-        reps.sort()
-        steady[key] = round(reps[len(reps) // 2], 4)
-    return out, steady
-
-
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -435,60 +275,6 @@ def _normalize_layout(spark, sf_dir: str, cores: int) -> str:
                 f"{scratch}/{t}.parquet"
             )
     return scratch
-
-
-def _history_medians(sf: float) -> dict[str, float]:
-    """Per-key MEDIAN steady time across every recorded run at the
-    SAME scale factor (BENCH_local_history.jsonl) — the key's own
-    history band center. Used by the outlier re-run pass and the
-    noise gate. The sf filter matters: a single sf0.01 smoke run
-    appended to the history would otherwise drag every band center
-    down and flag the whole next closing run as an outlier."""
-    import statistics
-
-    hist_path = Path(__file__).resolve().parent / "BENCH_local_history.jsonl"
-    per_key: dict[str, list[float]] = {}
-    try:
-        with open(hist_path) as fh:
-            for raw in fh:
-                try:
-                    rec = json.loads(raw)
-                except json.JSONDecodeError:
-                    continue
-                if rec.get("sf") != sf:
-                    continue
-                for k, v in (rec.get("queries_steady") or {}).items():
-                    per_key.setdefault(k, []).append(float(v))
-    except OSError:
-        return {}
-    return {
-        k: statistics.median(v) for k, v in per_key.items() if v
-    }
-
-
-def _noise_ratio(steady: dict[str, float], sf: float) -> float | None:
-    """Host-noise sanity gate (VERDICT r7 item #2): the ratio of this
-    run's suite-median steady time to the per-key HISTORICAL median
-    (BENCH_local_history.jsonl), over the keys both sides know. A run
-    on a quiet host sits near 1.0; the round-7 closing artifact that
-    drifted ~1.5x across unrelated keys would have flagged here.
-    Callers (and the committer) must REJECT a closing artifact whose
-    ratio exceeds 1.2 and re-run on a quiet host — the plans didn't
-    change, the host did. (Tightened from 1.3 per VERDICT r8 item #8:
-    the gate worked — two rejected r8 runs are logged in history —
-    and the round-8 closing artifact's 1.26 would now be rejected
-    too, which is the point.)"""
-    import statistics
-
-    per_key = _history_medians(sf)
-    ratios = [
-        steady[k] / med
-        for k, med in per_key.items()
-        if k in steady and med > 0
-    ]
-    if not ratios:
-        return None
-    return round(statistics.median(ratios), 4)
 
 
 def main() -> None:
@@ -583,18 +369,10 @@ def main() -> None:
 
     # second pass: steady-state timings. The cold pass above includes
     # per-query Catalyst codegen compilation and JVM JIT warm-up —
-    # one-time costs a long-lived cluster session never re-pays (a
-    # probe on this round's VM measured q_semantic_dedup at 28s cold
-    # vs 2.4s steady). The headline metric stays the cold sum for
-    # round-over-round comparability; the steady fields show the
-    # throughput a production session actually gets.
-    # Median-of-N reps: this host shows 3-5x run-to-run jitter on
-    # identical plans (round-5 artifact recorded q_funnel at 4.96s vs
-    # 1.51/1.56s in same-round runs), so a single steady draw can land
-    # a fake multi-x "regression" in the official record. The median of
-    # 3 reps is robust to one scheduler stall while keeping the pass
-    # under ~3x the single-shot cost. Cold stays single-shot by
-    # definition.
+    # one-time costs a long-lived session never re-pays. The headline
+    # metric stays the cold sum; the steady fields show the throughput
+    # a long-lived session gets. The median of N reps is robust to one
+    # scheduler stall; cold stays single-shot by definition.
     steady_reps = int(os.environ.get("SPARK_GRAFT_STEADY_REPS", "3"))
     steady: dict[str, float] = {}
     for key in HEADLINE:
@@ -606,47 +384,6 @@ def main() -> None:
             reps.append(time.perf_counter() - t0)
         reps.sort()
         steady[key] = round(reps[len(reps) // 2], 4)
-
-    # Outlier re-run pass (VERDICT r9 #3, estimator fixed per ADVICE
-    # r10): this host's jitter bursts can land a single key 3-5x above
-    # its own history band while the plan is unchanged (round-9's
-    # closing artifact carried q_explode at 4.7x from one burst). For
-    # any key whose steady median lands > 2x its history-band center,
-    # take ONE fresh median-of-reps draw and keep the REDRAW
-    # unconditionally — never min(first, redraw), which is a one-sided
-    # filter that suppresses upward noise but not downward and lets
-    # appended history medians ratchet down across rounds. Both draws
-    # are recorded in the artifact (steady_redraws) so the selection
-    # is auditable. A genuine regression stays slow in the redraw and
-    # remains flagged below; keys still > 1.5x are annotated in
-    # outlier_keys rather than silently shipped.
-    hist_med = _history_medians(sf)
-    steady_redraws: dict[str, dict[str, float]] = {}
-    for key in HEADLINE:
-        hm = hist_med.get(key)
-        if not hm or steady[key] <= 2.0 * hm:
-            continue
-        fn = queries[key]
-        reps = []
-        for _ in range(steady_reps):
-            t0 = time.perf_counter()
-            run(fn(spark, sf_dir))
-            reps.append(time.perf_counter() - t0)
-        reps.sort()
-        redraw = round(reps[len(reps) // 2], 4)
-        steady_redraws[key] = {"first": steady[key], "redraw": redraw}
-        steady[key] = redraw
-    outlier_keys = {
-        k: {"steady": steady[k], "history_median": round(hm, 4)}
-        for k in HEADLINE
-        if (hm := hist_med.get(k)) and steady[k] > 1.5 * hm
-    }
-
-    geo_cold, geo_steady = _geo_pipeline_bench(
-        spark, sf, steady_reps=steady_reps
-    )
-    timings.update(geo_cold)
-    steady.update(geo_steady)
 
     total = round(sum(timings.values()), 4)
     # surface the input-layout context the totals depend on: a table
@@ -693,40 +430,13 @@ def main() -> None:
             "layout_normalized": sf_dir != raw_sf_dir,
             "n_headline": len(HEADLINE),
             "steady_reps": steady_reps,
-            "noise_ratio_vs_history": _noise_ratio(steady, sf),
-            "outlier_keys": outlier_keys,
-            "steady_redraws": steady_redraws,
         }
     )
     print(line)
-    # The round driver captures only a 2,000-char tail of stdout, which
-    # truncates the per-query cold dict once the suite passed ~40 keys.
-    # Persist the complete line to a repo-tracked artifact so per-query
-    # regression diffs across rounds stay possible (BENCH_local_r*.json;
-    # override the name via SPARK_GRAFT_BENCH_OUT).
-    out_path = os.environ.get(
-        "SPARK_GRAFT_BENCH_OUT",
-        str(Path(__file__).resolve().parent / "BENCH_local_r13.json"),
-    )
-    try:
-        with open(out_path, "w") as fh:
-            fh.write(line + "\n")
-        # the per-round default name WILL be stale next round; the
-        # append-only history preserves every run regardless, so a
-        # forgotten rename can never clobber cross-round comparisons
-        hist = Path(__file__).resolve().parent / "BENCH_local_history.jsonl"
-        with open(hist, "a") as fh:
-            fh.write(line + "\n")
-    except OSError as exc:  # pragma: no cover - read-only checkout
-        print(f"warn: could not persist bench line: {exc}", file=sys.stderr)
-    # VERDICT r11 #7: the driver records only a ~2,000-char stdout
-    # TAIL and parses a JSON line out of it; the full line above is
-    # several KB, so the tail starts mid-line and the driver's
-    # artifact carried "parsed": null. Emit a COMPACT summary as the
-    # LAST stdout line — guaranteed to fit whole inside the captured
-    # tail — with the headline metric, the noise/outlier gate, and
-    # the most expensive steady keys; the complete per-query dicts
-    # live in the committed BENCH_local_r*.json artifacts.
+    # The full line above runs to several KB; a reader that keeps only
+    # a short stdout tail would start mid-line. Emit a COMPACT summary
+    # as the LAST stdout line with the headline metric and the most
+    # expensive steady keys, so the tail always parses as JSON.
     top = dict(
         sorted(steady.items(), key=lambda kv: -kv[1])[:12]
     )
@@ -743,12 +453,6 @@ def main() -> None:
                 sum(steady.values()) / max(len(steady), 1), 4
             ),
             "n_headline": len(HEADLINE),
-            "noise_ratio_vs_history": _noise_ratio(steady, sf),
-            # outlier_keys is a dict key->ratios: keep only the first
-            # 10 NAMES here (the full detail is in the artifact)
-            "outlier_keys": sorted(outlier_keys)[:10],
-            "n_outliers": len(outlier_keys),
-            "full_artifact": os.path.basename(out_path),
         },
         separators=(",", ":"),
     )

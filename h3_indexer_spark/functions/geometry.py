@@ -366,27 +366,11 @@ def parse_geojson_parts(text: str | dict) -> list[tuple[str, list[Coords]]]:
     return [parse_geojson(obj)]
 
 
-def parse_any(value) -> tuple[str, list[Coords]]:
-    """Encoding sniff (reference utils/geospatial.py:18-52): bytes →
-    WKB; '{' → GeoJSON; leading hex digit → WKB hex; else WKT.
-    Single-part only; see :func:`parse_any_parts`."""
-    if value is None:
-        raise GeometryError("null geometry")
-    if isinstance(value, (bytes, bytearray)):
-        return parse_wkb(bytes(value))
-    s = str(value).strip()
-    if not s:
-        raise GeometryError("empty geometry")
-    if s[0] == "{":
-        return parse_geojson(s)
-    if s[0] in "0123456789":
-        return parse_wkb(s)
-    return parse_wkt(s)
-
-
 def parse_any_parts(value) -> list[tuple[str, list[Coords]]]:
-    """Encoding sniff returning single-geometry parts (one element for
-    plain geometries, one per member for MULTI*)."""
+    """Encoding sniff (reference utils/geospatial.py:18-52): bytes →
+    WKB; '{' → GeoJSON; leading hex digit → WKB hex; else WKT. Returns
+    single-geometry parts (one element for plain geometries, one per
+    member for MULTI*)."""
     if value is None:
         raise GeometryError("null geometry")
     if isinstance(value, (bytes, bytearray)):

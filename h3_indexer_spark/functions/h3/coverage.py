@@ -417,8 +417,6 @@ def polyfill_many(specs, res: int) -> list:
     allc = (
         np.concatenate(cand_lists) if cand_lists else np.empty(0, np.int64)
     )
-    clat = np.empty(allc.shape[0])
-    clng = np.empty(allc.shape[0])
     uniqc, inv = np.unique(allc, return_inverse=True)
     ulat, ulng = cell_to_latlng_batch(uniqc)
     clat, clng = ulat[inv], ulng[inv]

@@ -562,7 +562,6 @@ def _index_polygons_batch(poly_feats, res: int, method: AllocationMethod,
         )
     metrics_f = (metrics_arr / 1.0e6).tolist()
 
-    pf_lists: list[list[int]] = [[] for _ in range(F)]
     part_fills = coverage.polyfill_many(specs, res)
     merged: list[dict[int, None]] = [{} for _ in range(F)]
     for fi, fill in zip(spec_feat, part_fills):

@@ -44,7 +44,7 @@ def language_id(
     isin/reduceat variant is faster on small batches (no ~1 s plan
     compile) but 2× slower at 100k+ docs because every token string
     crosses the Arrow boundary — the JVM-side filter wins where it
-    matters (measured in examples/scale_check.py)."""
+    matters."""
     def pick(toks: Column) -> Column:
         n = F.greatest(F.size(toks), F.lit(1))
         scores = []

@@ -29,8 +29,12 @@ from pyspark.sql import DataFrame, SparkSession
 # served stale.
 _SCAN_CAP_MEMO: dict[tuple[str, float], int | None] = {}
 
+# Footers opened per probe; past this many files the file count stands
+# in for the unprobed rest (every file is at least one scan task).
+_PROBE_LIMIT = 256
 
-def scan_parallelism_cap(path: str, probe_limit: int = 256) -> int | None:
+
+def scan_parallelism_cap(path: str) -> int | None:
     """Upper bound on the number of tasks a Spark parquet scan of
     ``path`` can actually use: total row groups across files. Spark
     splits parquet by byte ranges, but the vectorized reader's unit of
@@ -61,11 +65,11 @@ def scan_parallelism_cap(path: str, probe_limit: int = 256) -> int | None:
         if not files:
             return None
         cap = 0
-        for f in files[:probe_limit]:
+        for f in files[:_PROBE_LIMIT]:
             cap += pq.ParquetFile(f).metadata.num_row_groups
             if cap >= 1 << 20:
                 break
-        if len(files) > probe_limit:
+        if len(files) > _PROBE_LIMIT:
             cap = max(cap, len(files))
         if mkey is not None:
             _SCAN_CAP_MEMO[mkey] = cap
@@ -74,9 +78,7 @@ def scan_parallelism_cap(path: str, probe_limit: int = 256) -> int | None:
         return None
 
 
-def read_parquet(
-    spark: SparkSession, path: str, adaptive_parallelism: bool = True
-) -> DataFrame:
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """S1: columnar scan; partition pruning applies to partitioned
     layouts (e.g. our own sink's h3_resolution/h3_r3_parent dirs).
 
@@ -89,11 +91,10 @@ def read_parquet(
     (row groups ≫ cores) the probe is a cheap footer read and the
     rebalance NEVER fires — no extra shuffle on the 100 TB path."""
     df = spark.read.parquet(path)
-    if adaptive_parallelism:
-        cores = spark.sparkContext.defaultParallelism
-        cap = scan_parallelism_cap(path)
-        if cap is not None and cap < max(2, cores // 2):
-            return df.repartition(cores)
+    cores = spark.sparkContext.defaultParallelism
+    cap = scan_parallelism_cap(path)
+    if cap is not None and cap < max(2, cores // 2):
+        return df.repartition(cores)
     return df
 
 

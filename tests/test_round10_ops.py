@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
-from tests.test_round9_ops import _jobs_during
+from tests.helpers import _jobs_during
 
 
 class TestContractKeysStayLazy:

@@ -5,20 +5,7 @@ round-9 breadth additions."""
 import pytest
 from pyspark.sql import functions as F
 
-
-def _jobs_during(spark, fn):
-    """Run ``fn`` under a dedicated job group and return the job ids
-    Spark launched inside it — the zero-jobs-at-construction lock."""
-    import uuid
-
-    group = f"construction_probe_{uuid.uuid4().hex[:8]}"
-    sc = spark.sparkContext
-    sc.setJobGroup(group, "plan construction must stay lazy")
-    try:
-        result = fn()
-    finally:
-        sc.setJobGroup(None, None)
-    return result, list(sc.statusTracker().getJobIdsForGroup(group))
+from tests.helpers import _jobs_during
 
 
 class TestLazyConstruction:

@@ -8,34 +8,10 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from tests.helpers import _kruskal_reference
+
 
 # ---------------------------------------------------------------- kruskal
-
-
-def _kruskal_reference(groups):
-    """Exact Kruskal-Wallis H (+ tie-corrected) with midranks, pure
-    Python — the textbook formula, no scipy dependency."""
-    allv = sorted(v for g in groups for v in g)
-    n = len(allv)
-    # midrank per distinct value
-    ranks = {}
-    i = 0
-    while i < len(allv):
-        j = i
-        while j < len(allv) and allv[j] == allv[i]:
-            j += 1
-        ranks[allv[i]] = (i + 1 + j) / 2.0
-        i = j
-    s = sum(
-        sum(ranks[v] for v in g) ** 2 / len(g) for g in groups if g
-    )
-    h = 12.0 / (n * (n + 1)) * s - 3.0 * (n + 1)
-    counts = {}
-    for v in allv:
-        counts[v] = counts.get(v, 0) + 1
-    ties = sum(c**3 - c for c in counts.values())
-    c = 1.0 - ties / (n**3 - n)
-    return h, (h / c if c > 0 else None)
 
 
 def test_kruskal_matches_python_reference(spark):
@@ -235,7 +211,7 @@ def test_item_cf_min_joint_filters(spark):
 
 def test_item_cf_lazy_construction(spark):
     from h3_indexer_spark.operators.mining import item_cf_similarity
-    from tests.test_round9_ops import _jobs_during
+    from tests.helpers import _jobs_during
 
     df = spark.createDataFrame([(1, "x"), (1, "y")], "b long, i string")
     _, jobs = _jobs_during(

@@ -11,7 +11,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from tests.test_round9b_ops import _kruskal_reference
+from tests.helpers import _kruskal_reference
 
 
 @pytest.fixture(scope="module")
