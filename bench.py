@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import time
 from pathlib import Path
@@ -240,6 +241,22 @@ TABLES = (
 )
 
 
+def _layout_scratch(sf_dir: str, root: str) -> str:
+    """Directory under ``root`` for the re-laid-out copy of ``sf_dir``.
+    It is keyed by the source's mtime, so a regenerated testdata dir
+    never reuses stale data; before a new copy is written, the copies
+    of the same scale factor left by older mtimes are removed, so at
+    most one per scale factor stays."""
+    prefix = f"h3idx_bench_{Path(sf_dir).name}_"
+    stamp = int(os.path.getmtime(f"{sf_dir}/lineitem.parquet"))
+    scratch = Path(root) / f"{prefix}{stamp}"
+    if not scratch.is_dir():
+        for stale in Path(root).glob(f"{prefix}*"):
+            if stale.name[len(prefix):].isdigit():
+                shutil.rmtree(stale)
+    return str(scratch)
+
+
 def _normalize_layout(spark, sf_dir: str, cores: int) -> str:
     """Untimed setup: if the input tables are materialized with fewer
     parquet row groups than cores (the driver writes ONE row group per
@@ -248,9 +265,7 @@ def _normalize_layout(spark, sf_dir: str, cores: int) -> str:
     rewrite them once into a local scratch dir with a healthy layout
     and bench against that. This measures the engine on the layout any
     production ingest produces, not the pathological one; set
-    SPARK_GRAFT_RAW_LAYOUT=1 to bench the raw driver layout instead.
-    Scratch is keyed by the source's mtime so a regenerated testdata
-    dir never reuses stale data."""
+    SPARK_GRAFT_RAW_LAYOUT=1 to bench the raw driver layout instead."""
     import pyarrow.parquet as pq
 
     try:
@@ -262,8 +277,7 @@ def _normalize_layout(spark, sf_dir: str, cores: int) -> str:
         return sf_dir
     if worst >= max(2, cores // 2):
         return sf_dir
-    stamp = int(os.path.getmtime(f"{sf_dir}/lineitem.parquet"))
-    scratch = f"/tmp/h3idx_bench_{Path(sf_dir).name}_{stamp}"
+    scratch = _layout_scratch(sf_dir, "/tmp")
     if not os.path.isdir(scratch):
         for t in TABLES:
             df = spark.read.parquet(f"{sf_dir}/{t}.parquet")
@@ -316,49 +330,6 @@ def main() -> None:
         return v
 
     run(spark.range(256).repartition(32).select(_warm("id")))
-
-    # Touch the H3 kernel's derived tables in EVERY worker process
-    # (~3.3 s one-time derivation per process — session setup, not
-    # operator cost; without this, each spatial query's reps keep
-    # landing on fresh workers and the per-process build pollutes the
-    # timings). One task per core, each indexing a point.
-    @F.pandas_udf("long")
-    def _warm_h3(v: pd.Series) -> pd.Series:
-        from h3_indexer_spark.functions.h3.coverage import polyfill
-        from h3_indexer_spark.functions.h3.vectorized import (
-            latlng_to_cell_batch,
-        )
-
-        latlng_to_cell_batch(
-            (40.0 + v * 0).to_numpy(dtype="float64"),
-            (-100.0 + v * 0).to_numpy(dtype="float64"),
-            6,
-        )
-        # the polygon-cover path (polyfill boundary traversal) builds
-        # further derived tables on first touch — warm it too, or the
-        # first point_in_polygon reps pay it per worker process
-        polyfill(
-            [(-100.0, 40.0), (-99.95, 40.0), (-99.95, 40.05),
-             (-100.0, 40.0)],
-            6,
-        )
-        return v
-
-    # Join-shaped warmup: a spatial join runs pandas-UDF stages on
-    # BOTH sides concurrently, which forks a second bank of Python
-    # workers (measured 33 -> 65 daemons on local[32]) — warm both
-    # banks so no timed rep ever pays the per-process build.
-    warm_a = (
-        spark.range(int(cpus) * 2)
-        .repartition(int(cpus) * 2)
-        .select(_warm_h3("id").alias("id"))
-    )
-    warm_b = (
-        spark.range(int(cpus) * 2)
-        .repartition(int(cpus) * 2)
-        .select(_warm_h3("id").alias("id"))
-    )
-    run(warm_a.join(warm_b, "id"))
 
     timings: dict[str, float] = {}
     for key in HEADLINE:

@@ -5,7 +5,8 @@ Apache-2.0): icosahedral gnomonic projection, aperture-7 hex IJK
 coordinate math, and the 64-bit cell index layout. Seeded only by the
 face geometry + base-cell home coordinates in tables.py; the per-face
 res-0 lookup and face-neighbor orientation tables are derived
-numerically in derive.py and validated by structural invariants in
+numerically in derive.py, checked in as the generated constant module
+_derived_tables.py, and validated by structural invariants in
 tests/test_h3_kernel.py plus published golden values.
 
 Used by the engine's vectorized UDF layer (functions/udfs.py); parity
@@ -18,6 +19,7 @@ from __future__ import annotations
 
 import math
 
+from h3_indexer_spark.functions.h3 import _derived_tables
 from h3_indexer_spark.functions.h3.tables import (
     BASE_CELL_DATA,
     EPSILON,
@@ -460,44 +462,13 @@ def string_to_h3(s: str) -> int:
     return int(s, 16)
 
 
-# --- derived tables (lazy import to avoid cycles) -------------------------
+# --- derived tables ---------------------------------------------------------
 
-_DERIVED = None
-
-
-def _derived():
-    global _DERIVED
-    if _DERIVED is None:
-        from h3_indexer_spark.functions.h3 import derive
-
-        _DERIVED = derive.build_tables()
-    return _DERIVED
-
-
-def export_derived_blob() -> bytes:
-    """Pickle the derived H3 tables (~10 KB) for closure shipping.
-
-    The numeric derivation costs ~2.6 s per PROCESS — paid once on the
-    driver, then by every fresh Python worker the first time a spatial
-    pandas UDF lands on it, which made spatial queries' early reps
-    3-10× slower until the whole (growing) worker pool happened to
-    warm. UDF factories call this on the DRIVER and capture the blob
-    in the UDF closure; workers then seed_derived_blob() and skip the
-    derivation entirely."""
-    import pickle
-
-    return pickle.dumps(_derived())
-
-
-def seed_derived_blob(blob: bytes) -> None:
-    """Install driver-derived tables in this process (no-op if the
-    tables already exist — never overwrites, so a worker that already
-    derived keeps its identical copy)."""
-    global _DERIVED
-    if _DERIVED is None:
-        import pickle
-
-        _DERIVED = pickle.loads(blob)
+# The res-0 patch lookup and face-neighbor tables, generated from
+# derive.build_tables() and checked in as constants. The functions
+# below read this global at call time, so derive.build_tables() can
+# install the tables it is deriving while it calibrates them.
+_DERIVED = _derived_tables.DERIVED
 
 
 def _base_cell_is_cw_offset(bc: int, face: int) -> bool:
@@ -513,7 +484,7 @@ def _face_ijk_to_h3(face: int, coord, res: int) -> int:
     if res == 0:
         if max(coord) > 2:
             return 0
-        entry = _derived().face_patch.get((face,) + tuple(coord))
+        entry = _DERIVED.face_patch.get((face,) + tuple(coord))
         if entry is None:
             return 0
         return _set_base_cell(h, entry[0])
@@ -534,7 +505,7 @@ def _face_ijk_to_h3(face: int, coord, res: int) -> int:
         h = _set_digit(h, r + 1, _unit_ijk_to_digit(diff))
     if max(ijk) > 2:
         return 0
-    entry = _derived().face_patch.get((face,) + tuple(ijk))
+    entry = _DERIVED.face_patch.get((face,) + tuple(ijk))
     if entry is None:
         return 0
     base_cell, num_rots = entry
@@ -558,7 +529,6 @@ def _adjust_overage_class_ii(
 ):
     """Move a FaceIJK that falls beyond its face patch onto the
     adjacent icosahedron face. Returns (overage, face, coord)."""
-    tables = _derived()
     max_dim = MAX_DIM_BY_CII_RES[res]
     if substrate:
         max_dim *= 3
@@ -586,7 +556,7 @@ def _adjust_overage_class_ii(
                 )
     else:
         quad = IJ_QUAD
-    nb_face, ccw_rot, translate = tables.face_neighbors[(face, quad)]
+    nb_face, ccw_rot, translate = _DERIVED.face_neighbors[(face, quad)]
     c = (i, j, k)
     for _ in range(ccw_rot):
         c = _ijk_rotate60_ccw(c)
@@ -719,7 +689,6 @@ def cell_to_boundary(h: int) -> list[tuple[float, float]]:
     face, ijk, res = _h3_to_face_ijk(h)
     if is_pentagon(h):
         return _pent_boundary(face, ijk, res)
-    tables = _derived()
     adj_res, fijk_verts = _substrate_verts(face, ijk, res, 6)
     start = 0
     out: list[tuple[float, float]] = []
@@ -747,7 +716,7 @@ def cell_to_boundary(h: int) -> list[tuple[float, float]]:
             p0 = _ijk_to_hex2d(fijk_verts[last_v][1])
             p1 = _ijk_to_hex2d(fijk_verts[v][1])
             face2 = vface if last_face == face else last_face
-            quad = tables.adjacent_face_dir.get((face, face2))
+            quad = _DERIVED.adjacent_face_dir.get((face, face2))
             if quad is not None:
                 e0, e1 = _face_edge(quad, adj_res)
                 inter = _v2d_intersect(p0, p1, e0, e1)
@@ -810,7 +779,6 @@ def _pent_boundary(face: int, ijk, res: int) -> list[tuple[float, float]]:
     face. Every Class III pentagon edge crosses an icosahedron edge,
     so there each edge also gains its crossing point (10 vertices),
     found in the frame of the face of the edge's first vertex."""
-    tables = _derived()
     adj_res, verts = _substrate_verts(face, ijk, res, 5)
     fijk = []
     for vface, vcoord in verts:
@@ -829,8 +797,8 @@ def _pent_boundary(face: int, ijk, res: int) -> list[tuple[float, float]]:
             continue
         # the next vertex, unfolded into this vertex's face frame
         nface, c = fijk[(v + 1) % 5]
-        quad = tables.adjacent_face_dir[(nface, vface)]
-        _, ccw_rot, translate = tables.face_neighbors[(nface, quad)]
+        quad = _DERIVED.adjacent_face_dir[(nface, vface)]
+        _, ccw_rot, translate = _DERIVED.face_neighbors[(nface, quad)]
         for _ in range(ccw_rot):
             c = _ijk_rotate60_ccw(c)
         scale = UNIT_SCALE_BY_CII_RES[adj_res] * 3
@@ -839,7 +807,9 @@ def _pent_boundary(face: int, ijk, res: int) -> list[tuple[float, float]]:
             c[1] + translate[1] * scale,
             c[2] + translate[2] * scale,
         )
-        e0, e1 = _face_edge(tables.adjacent_face_dir[(vface, nface)], adj_res)
+        e0, e1 = _face_edge(
+            _DERIVED.adjacent_face_dir[(vface, nface)], adj_res
+        )
         x, y = _v2d_intersect(_ijk_to_hex2d(vcoord), _ijk_to_hex2d(c), e0, e1)
         lat, lng = _hex2d_to_geo(x, y, vface, adj_res, True)
         out.append((math.degrees(lat), math.degrees(lng)))

@@ -4,8 +4,8 @@ The classic H3 implementation hard-codes two large tables:
 ``faceIjkBaseCells`` (20 faces × 3×3×3 patch → base cell + ccw
 rotations) and ``faceNeighbors`` (20 faces × 3 edges → neighbor face +
 orientation). Both are fully determined by the face geometry and the
-base-cell home coordinates, so instead of carrying ~700 more constants
-we derive them at import time:
+base-cell home coordinates, so instead of hand-carrying ~700 more
+constants we derive them here:
 
 - patch → base cell: the res-0 lattice point's geo center must coincide
   (to ~1e-9 rad) with exactly one base cell center computed from its
@@ -18,19 +18,27 @@ we derive them at import time:
 
 The result is validated structurally here (tiling, distinctness) and
 against published golden cells in tests/test_h3_kernel.py.
+
+The derivation takes a few seconds, so the program never runs it: it
+reads the tables from the generated constant module _derived_tables.py.
+This module is the reference that writes that file and that a test
+re-derives and compares against. Regenerate it with
+
+    python -m h3_indexer_spark.functions.h3.derive
 """
 
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass
 from itertools import product
+from pathlib import Path
 
 from h3_indexer_spark.functions.h3 import core
 from h3_indexer_spark.functions.h3.tables import (
     BASE_CELL_DATA,
     NUM_BASE_CELLS,
     NUM_ICOSA_FACES,
+    DerivedTables,
 )
 
 # geographic tolerance (chord length on the unit sphere) for matching
@@ -59,14 +67,6 @@ _CCW_FROM_I = [
 # candidate per-quadrant translations (unit res-0 scale); the classic
 # table uses exactly these three vectors.
 _TRANSLATE_CANDIDATES = [(2, 0, 2), (2, 2, 0), (0, 2, 2)]
-
-
-@dataclass(frozen=True)
-class DerivedTables:
-    face_patch: dict  # (face, i, j, k) -> (base_cell, ccw_rot60)
-    face_neighbors: dict  # (face, quadrant) -> (face, ccw_rot60, translate)
-    adjacent_face_dir: dict  # (face, face2) -> quadrant
-    base_cell_center: list  # base cell -> (lat, lng) radians
 
 
 def _geo_dist(a, b) -> float:
@@ -289,3 +289,52 @@ def _validate_patch(face_patch: dict) -> None:
                 f"home coordinate of base cell {bc} has nonzero rotation "
                 f"{entry[1]}"
             )
+
+
+MODULE_PATH = Path(__file__).with_name("_derived_tables.py")
+
+_MODULE_HEADER = '''\
+"""H3 lookup tables derived from the face geometry and base-cell home
+coordinates in tables.py.
+
+Generated by ``python -m h3_indexer_spark.functions.h3.derive`` from
+``derive.build_tables()``. Do not edit: tests/test_h3_kernel.py
+re-derives the tables and fails when this file differs from the
+generator's output.
+"""
+
+from h3_indexer_spark.functions.h3.tables import DerivedTables
+
+# fmt: off
+DERIVED = DerivedTables('''
+
+
+def _lines_by_face(table: dict) -> list[str]:
+    """One line per face for a dict keyed by tuples that start with
+    the face, in the dict's own order."""
+    rows: dict[int, list[str]] = {}
+    for key, value in table.items():
+        rows.setdefault(key[0], []).append(f"{key!r}: {value!r},")
+    return ["        " + " ".join(row) for row in rows.values()]
+
+
+def render_module(tables: DerivedTables | None = None) -> str:
+    """Source text of _derived_tables.py: the tables as Python literals
+    (a float's repr reads back as the same float)."""
+    t = build_tables() if tables is None else tables
+    lines = [_MODULE_HEADER]
+    for name in ("face_patch", "face_neighbors", "adjacent_face_dir"):
+        lines += [f"    {name}={{", *_lines_by_face(getattr(t, name)), "    },"]
+    lines += [
+        "    base_cell_center=[",
+        *(f"        {center!r}," for center in t.base_cell_center),
+        "    ],",
+        ")",
+        "# fmt: on",
+    ]
+    return "\n".join(lines) + "\n"
+
+
+if __name__ == "__main__":
+    MODULE_PATH.write_text(render_module())
+    print(f"wrote {MODULE_PATH}")

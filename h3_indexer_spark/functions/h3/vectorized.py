@@ -104,21 +104,12 @@ def _rotate_pent60_ccw_v(hs: np.ndarray, res: int) -> np.ndarray:
 
 _PENTAGONS = np.asarray(sorted(PENTAGON_BASE_CELLS), dtype=np.int64)
 
-_PATCH_BC = None
-_PATCH_ROT = None
-
-
-def _patch_tables():
-    """face_patch dict → dense (face, i, j, k) int lookup arrays."""
-    global _PATCH_BC, _PATCH_ROT
-    if _PATCH_BC is None:
-        bc = np.full((NUM_ICOSA_FACES, 3, 3, 3), -1, dtype=np.int64)
-        rot = np.zeros((NUM_ICOSA_FACES, 3, 3, 3), dtype=np.int64)
-        for (f, i, j, k), (b, r) in core._derived().face_patch.items():
-            bc[f, i, j, k] = b
-            rot[f, i, j, k] = r
-        _PATCH_BC, _PATCH_ROT = bc, rot
-    return _PATCH_BC, _PATCH_ROT
+# face_patch → dense (face, i, j, k) int lookup arrays
+_PATCH_BC = np.full((NUM_ICOSA_FACES, 3, 3, 3), -1, dtype=np.int64)
+_PATCH_ROT = np.zeros((NUM_ICOSA_FACES, 3, 3, 3), dtype=np.int64)
+for (_f, _i, _j, _k), (_bc, _rot) in core._DERIVED.face_patch.items():
+    _PATCH_BC[_f, _i, _j, _k] = _bc
+    _PATCH_ROT[_f, _i, _j, _k] = _rot
 
 
 # --- vector helpers (same op order as core.py scalars) --------------------
@@ -554,13 +545,12 @@ def _face_ijk_to_cell_batch(face, i, j, k, res: int):
         shift = 3 * (core.MAX_H3_RES - (rr_ + 1))
         h = (h & ~np.int64(0x7 << shift)) | (digit << shift)
 
-    patch_bc, patch_rot = _patch_tables()
     in_range = (i <= 2) & (j <= 2) & (k <= 2)
     ic = np.clip(i, 0, 2)
     jc = np.clip(j, 0, 2)
     kc = np.clip(k, 0, 2)
-    bc = patch_bc[face, ic, jc, kc]
-    rots = patch_rot[face, ic, jc, kc]
+    bc = _PATCH_BC[face, ic, jc, kc]
+    rots = _PATCH_ROT[face, ic, jc, kc]
     valid = in_range & (bc >= 0)
 
     h = (h & ~np.int64(0x7F << 45)) | (np.where(valid, bc, 0) << 45)
@@ -605,24 +595,15 @@ def _face_ijk_to_cell_batch(face, i, j, k, res: int):
     return np.where(ok, h, 0), ok
 
 
-_NBR_TABLES = None
-
-
-def _neighbor_tables():
-    """face_neighbors dict → dense (face, quad) arrays."""
-    global _NBR_TABLES
-    if _NBR_TABLES is None:
-        nbf = np.zeros((NUM_ICOSA_FACES, 4), dtype=np.int64)
-        rot = np.zeros((NUM_ICOSA_FACES, 4), dtype=np.int64)
-        ti = np.zeros((NUM_ICOSA_FACES, 4), dtype=np.int64)
-        tj = np.zeros((NUM_ICOSA_FACES, 4), dtype=np.int64)
-        tk = np.zeros((NUM_ICOSA_FACES, 4), dtype=np.int64)
-        for (f, q), (nf, r, t) in core._derived().face_neighbors.items():
-            nbf[f, q] = nf
-            rot[f, q] = r
-            ti[f, q], tj[f, q], tk[f, q] = t
-        _NBR_TABLES = (nbf, rot, ti, tj, tk)
-    return _NBR_TABLES
+# face_neighbors → dense (face, quad) arrays: neighbor face, ccw
+# rotations, translation
+_NBR_FACE = np.zeros((NUM_ICOSA_FACES, 4), dtype=np.int64)
+_NBR_ROT = np.zeros((NUM_ICOSA_FACES, 4), dtype=np.int64)
+_NBR_TRANSLATE = np.zeros((3, NUM_ICOSA_FACES, 4), dtype=np.int64)
+for (_f, _q), (_nf, _rot, _t) in core._DERIVED.face_neighbors.items():
+    _NBR_FACE[_f, _q] = _nf
+    _NBR_ROT[_f, _q] = _rot
+    _NBR_TRANSLATE[:, _f, _q] = _t
 
 
 def _ijk_rotate60_ccw_v(i, j, k):
@@ -636,7 +617,6 @@ def _overage_adjust_v(face, i, j, k, res, MAX_DIM_BY_CII_RES, substrate,
     pentagon-descendant cells whose leading digit is I (4): in the KI
     quadrant those rotate out of the deleted K-axes sub-sequence first
     (core.py:548-558)."""
-    nbf_t, rot_t, ti_t, tj_t, tk_t = _neighbor_tables()
     quad = np.where(k > 0, np.where(j > 0, core.JK_QUAD, core.KI_QUAD),
                     core.IJ_QUAD)
     if pent4 is not None:
@@ -649,8 +629,8 @@ def _overage_adjust_v(face, i, j, k, res, MAX_DIM_BY_CII_RES, substrate,
             ri, rj, rk = _normalize_v(ti_ + tj_, tj_ + tk_, ti_ + tk_)
             i, j, k = i.copy(), j.copy(), k.copy()
             i[m], j[m], k[m] = ri + md, rj, rk
-    nb_face = nbf_t[face, quad]
-    ccw = rot_t[face, quad]
+    nb_face = _NBR_FACE[face, quad]
+    ccw = _NBR_ROT[face, quad]
     max_ccw = int(ccw.max()) if len(ccw) else 0
     for step in range(max_ccw):
         m = ccw > step
@@ -663,9 +643,9 @@ def _overage_adjust_v(face, i, j, k, res, MAX_DIM_BY_CII_RES, substrate,
 
     scale = UNIT_SCALE_BY_CII_RES[res] * (3 if substrate else 1)
     i, j, k = _normalize_v(
-        i + ti_t[face, quad] * scale,
-        j + tj_t[face, quad] * scale,
-        k + tk_t[face, quad] * scale,
+        i + _NBR_TRANSLATE[0, face, quad] * scale,
+        j + _NBR_TRANSLATE[1, face, quad] * scale,
+        k + _NBR_TRANSLATE[2, face, quad] * scale,
     )
     return nb_face, i, j, k
 

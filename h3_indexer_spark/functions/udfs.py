@@ -691,22 +691,13 @@ def make_index_map_fn(
     the worker. No shuffle until the final repartition-for-write.
     """
 
-    # derived H3 tables ship in the closure (~10 KB): workers skip the
-    # ~2.6 s per-process numeric derivation that otherwise taxes the
-    # first spatial task on every fresh Python worker
-    from h3_indexer_spark.functions.h3 import core as _core
-
-    _tables_blob = _core.export_derived_blob()
-
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        from h3_indexer_spark.functions.h3 import core as _wcore
         from h3_indexer_spark.functions.h3.vectorized import (
             latlng_to_cell_batch,
         )
 
-        _wcore.seed_derived_blob(_tables_blob)
         for pdf in batches:
             # fast path: a pure-POINT batch parses with one vectorized
             # regex extract and indexes with one batch call — no

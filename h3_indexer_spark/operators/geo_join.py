@@ -93,22 +93,14 @@ def haversine_km(
 
 
 def _cell_udf(res: int):
-    from h3_indexer_spark.functions.h3 import core
-
-    # driver-derived H3 tables ride the closure (~10 KB) so fresh
-    # workers skip the ~2.6 s per-process derivation
-    blob = core.export_derived_blob()
-
     @F.pandas_udf("long")
     def to_cell(lat: pd.Series, lng: pd.Series) -> pd.Series:
         import numpy as np
 
-        from h3_indexer_spark.functions.h3 import core as wcore
         from h3_indexer_spark.functions.h3.vectorized import (
             latlng_to_cell_batch,
         )
 
-        wcore.seed_derived_blob(blob)
         cells = latlng_to_cell_batch(
             lat.to_numpy(dtype="float64"),
             lng.to_numpy(dtype="float64"),
@@ -128,15 +120,10 @@ def _cell_udf(res: int):
 
 
 def _cell_with_neighbors_udf(res: int, k: int = 1):
-    from h3_indexer_spark.functions.h3 import core
-
-    blob = core.export_derived_blob()
-
     @F.pandas_udf("array<long>")
     def to_cells(lat: pd.Series, lng: pd.Series) -> pd.Series:
         import numpy as np
 
-        from h3_indexer_spark.functions.h3 import core as wcore
         from h3_indexer_spark.functions.h3.coverage import (
             cell_disk_batch,
         )
@@ -144,7 +131,6 @@ def _cell_with_neighbors_udf(res: int, k: int = 1):
             latlng_to_cell_batch,
         )
 
-        wcore.seed_derived_blob(blob)
         cells = np.asarray(
             latlng_to_cell_batch(
                 lat.to_numpy(dtype="float64"),
@@ -295,10 +281,7 @@ def point_in_polygon_join(
     gid, gwkt = poly_cols
 
     from h3_indexer_spark.functions.geometry import parse_any_parts
-    from h3_indexer_spark.functions.h3 import core as _core
     from h3_indexer_spark.functions.h3.coverage import polyfill
-
-    _tables_blob = _core.export_derived_blob()
 
     def _polygon_parts(value):
         """POLYGON parts of any geometry (handles MULTIPOLYGON /
@@ -317,13 +300,11 @@ def point_in_polygon_join(
 
     @F.pandas_udf("array<long>")
     def cover(wkts: pd.Series) -> pd.Series:
-        from h3_indexer_spark.functions.h3 import core as wcore
         from h3_indexer_spark.functions.h3.coverage import (
             cell_neighbors,
             line_cells,
         )
 
-        wcore.seed_derived_blob(_tables_blob)
         out = []
         for w in wkts:
             if w is None:

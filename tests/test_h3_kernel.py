@@ -348,3 +348,76 @@ class TestVectorizedKernel:
                     if coverage._point_in_ring(clng, clat, ring):
                         want.add(int(c))
                 assert got == want, (ring, res, got ^ want)
+
+
+class TestDerivedTables:
+    """The lookup tables the program reads are the checked-in module
+    _derived_tables.py; derive.build_tables() is the reference."""
+
+    def test_generated_module_matches_derivation(self):
+        """A fresh derivation equals the checked-in tables field by
+        field, and the file is exactly what the generator writes, so a
+        hand edit and a change to derive.py both fail here. Regenerate
+        with ``python -m h3_indexer_spark.functions.h3.derive``."""
+        import dataclasses
+
+        from h3_indexer_spark.functions.h3 import _derived_tables, derive
+
+        try:
+            fresh = derive.build_tables()
+        finally:
+            # build_tables installs the tables it derives in core
+            core._DERIVED = _derived_tables.DERIVED
+        for field in dataclasses.fields(fresh):
+            assert getattr(fresh, field.name) == getattr(
+                _derived_tables.DERIVED, field.name
+            ), field.name
+        assert derive.MODULE_PATH.read_text() == derive.render_module(fresh)
+
+    def test_no_process_derives_at_run_time(self):
+        """A fresh process that imports the kernel modules and runs the
+        point, boundary, cover, children and WKT paths never imports
+        derive, so derive.build_tables() cannot have run."""
+        import subprocess
+        import sys
+        from pathlib import Path
+
+        script = """
+import sys
+
+class Watch:
+    seen = []
+
+    @classmethod
+    def find_spec(cls, name, path=None, target=None):
+        if name.rsplit(".", 1)[-1] == "derive":
+            cls.seen.append(name)
+        return None
+
+sys.meta_path.insert(0, Watch)
+
+import numpy as np
+
+from h3_indexer_spark.functions import udfs
+from h3_indexer_spark.functions.h3 import core, coverage, vectorized
+
+cells = vectorized.latlng_to_cell_batch(
+    np.array([40.0, 64.7]), np.array([-100.0, 10.5]), 3
+)
+for cell in [*cells.tolist(), core.string_to_h3("8312cbfffffffff")]:
+    core.cell_to_boundary(cell)
+    core.cell_to_children(cell, 4)
+    udfs._cell_wkt(cell)
+coverage.polyfill([(-100.0, 40.0), (-99.0, 40.0), (-99.0, 41.0)], 5)
+assert "h3_indexer_spark.functions.h3.derive" not in sys.modules
+assert Watch.seen == [], Watch.seen
+"""
+        repo = Path(__file__).resolve().parent.parent
+        done = subprocess.run(
+            [sys.executable, "-c", script],
+            cwd=repo,
+            capture_output=True,
+            text=True,
+            timeout=120,
+        )
+        assert done.returncode == 0, done.stderr
