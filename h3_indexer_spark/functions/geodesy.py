@@ -158,6 +158,27 @@ def planar_polygon_area(coords: list[tuple[float, float]]) -> float:
     return abs(s) / 2.0
 
 
+def planar_ring_areas(pts, nv) -> "np.ndarray":
+    """planar_polygon_area of many padded rings: ``pts`` is (R, cap, 2)
+    (lng, lat), ``nv`` the (R,) count of distinct vertices of each open
+    ring (rows with < 3 → 0). The same shoelace terms summed in the same
+    vertex order (np.add.accumulate is sequential), so each value is
+    bit-identical to planar_polygon_area's."""
+    import numpy as np
+
+    nv = np.asarray(nv, dtype=np.int64)
+    cap = pts.shape[1]
+    if cap == 0:
+        return np.zeros(nv.shape[0], dtype=np.float64)
+    j = np.arange(cap)[None, :]
+    nxt = np.where(j + 1 < nv[:, None], j + 1, 0)
+    x, y = pts[:, :, 0], pts[:, :, 1]
+    terms = x * np.take_along_axis(y, nxt, 1) - np.take_along_axis(x, nxt, 1) * y
+    terms[j >= nv[:, None]] = 0.0
+    s = np.add.accumulate(terms, axis=1)[:, -1]
+    return np.where(nv < 3, 0.0, np.abs(s) / 2.0)
+
+
 # --- batched kernels (numpy) -----------------------------------------------
 
 

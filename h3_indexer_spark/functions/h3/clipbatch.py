@@ -19,6 +19,29 @@ from __future__ import annotations
 import numpy as np
 
 
+def _predecessors(a: np.ndarray, last: np.ndarray) -> np.ndarray:
+    """Each vertex's predecessor in padded rows of ``a``: column c − 1,
+    and column ``last`` (the row's final vertex) for column 0. Entries
+    past a row's count hold other entries of the row."""
+    out = np.empty_like(a)
+    if a.shape[1]:
+        out[:, 1:] = a[:, :-1]
+        out[:, 0] = a[np.arange(a.shape[0]), last]
+    return out
+
+
+def _successors(a: np.ndarray, last: np.ndarray) -> np.ndarray:
+    """Each vertex's successor in padded rows of ``a``: column c + 1,
+    and column 0 for column ``last``. Entries past a row's count hold
+    other entries of the row."""
+    out = np.empty_like(a)
+    if a.shape[1]:
+        out[:, :-1] = a[:, 1:]
+        out[:, -1] = a[:, -1]
+        out[np.arange(a.shape[0]), last] = a[:, 0]
+    return out
+
+
 def orient_ccw_rings(pts: np.ndarray, nv: np.ndarray) -> np.ndarray:
     """Return a copy of the padded rings with every row counter-
     clockwise (rows already ccw are passed through)."""
@@ -26,11 +49,10 @@ def orient_ccw_rings(pts: np.ndarray, nv: np.ndarray) -> np.ndarray:
     idx = np.arange(cap)[None, :]
     nvs = np.maximum(nv, 1)[:, None]
     valid = idx < nv[:, None]
-    nxt = (idx + 1) % nvs
     x = pts[:, :, 0]
     y = pts[:, :, 1]
-    xn = np.take_along_axis(x, nxt, axis=1)
-    yn = np.take_along_axis(y, nxt, axis=1)
+    xn = _successors(x, nvs[:, 0] - 1)
+    yn = _successors(y, nvs[:, 0] - 1)
     area2 = np.where(valid, x * yn - xn * y, 0.0).sum(axis=1)
     cw = area2 < 0.0
     if not cw.any():
@@ -46,11 +68,10 @@ def shoelace_abs_batch(pts: np.ndarray, nv: np.ndarray) -> np.ndarray:
     idx = np.arange(cap)[None, :]
     nvs = np.maximum(nv, 1)[:, None]
     valid = idx < nv[:, None]
-    nxt = (idx + 1) % nvs
     x = pts[:, :, 0]
     y = pts[:, :, 1]
-    xn = np.take_along_axis(x, nxt, axis=1)
-    yn = np.take_along_axis(y, nxt, axis=1)
+    xn = _successors(x, nvs[:, 0] - 1)
+    yn = _successors(y, nvs[:, 0] - 1)
     s = np.where(valid, x * yn - xn * y, 0.0).sum(axis=1)
     return np.where(nv >= 3, np.abs(s) / 2.0, 0.0)
 
@@ -72,10 +93,11 @@ def _clip_halfplane(pts, n, a, b, act):
         pts[:, :, 0] - a[:, 0][:, None]
     )
     cur_in = side >= 0.0
-    nsafe = np.maximum(n, 1)[:, None]
-    prev_idx = (idx + nsafe - 1) % nsafe
-    prev_in = np.take_along_axis(cur_in, prev_idx, axis=1)
-    prev_pts = np.take_along_axis(pts, prev_idx[:, :, None], axis=1)
+    # vertex c's predecessor is c − 1, and n − 1 for c = 0 (entries
+    # past n are never read)
+    last = np.maximum(n, 1) - 1
+    prev_in = _predecessors(cur_in, last)
+    prev_pts = _predecessors(pts, last)
 
     actc = act[:, None]
     inter_m = (cur_in != prev_in) & valid & actc

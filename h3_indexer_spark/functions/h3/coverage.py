@@ -28,6 +28,9 @@ _EDGE_KM = [
 ]
 _EARTH_KM = 6371.007180918475
 
+# (point, ring-edge) pairs points_in_polygons evaluates per numpy pass
+_PAIR_CHUNK = 1 << 22
+
 
 def cell_neighbors(h: int) -> list[int]:
     """The cells adjacent to ``h`` (6, or 5 for pentagons) — exact IJK
@@ -228,27 +231,85 @@ def _wrap_lng(lng: float) -> float:
     return lng
 
 
-def line_sample_points(coords: list[tuple[float, float]], res: int):
-    """Densified sample points along a polyline as (lats, lngs) numpy
-    arrays — the vectorizable half of line_cells. Step as in
-    line_cells (0.75 × edge < inradius; see there)."""
+def ranges(starts, counts):
+    """The integer ranges ``[starts[i], starts[i] + counts[i])`` laid
+    end to end — the flat index of a CSR gather (``starts`` may be a
+    scalar)."""
     import numpy as np
 
+    counts = np.asarray(counts, dtype=np.int64)
+    ends = np.cumsum(counts)
+    return np.repeat(starts - ends + counts, counts) + np.arange(
+        ends[-1] if ends.shape[0] else 0
+    )
+
+
+def sample_paths(xy, offsets, res: int):
+    """Densified sample points along MANY polylines at once, over CSR
+    ("compressed sparse row") arrays: path ``i`` is the (lng, lat) rows
+    ``xy[offsets[i]:offsets[i + 1]]``. Each segment is cut into
+    n = max(1, ceil(length / step)) equal steps (step as in
+    line_cells) and yields its n + 1 points ``p1 + (t / n) · (p2 −
+    p1)``, t = 0…n; a path's samples are its segments' in order, so a
+    vertex shared by two segments appears twice. One numpy pass for
+    every segment of every path: no per-path or per-segment Python.
+
+    Returns ``(lats, lngs, sample_offsets)``, where path ``i``'s samples
+    are ``[sample_offsets[i], sample_offsets[i + 1])``; a path with
+    fewer than two vertices has none."""
+    import numpy as np
+
+    xy = np.asarray(xy, dtype=np.float64).reshape(-1, 2)
+    offsets = np.asarray(offsets, dtype=np.int64)
+    nv = xy.shape[0]
+    # segment k joins vertex k to k + 1 unless k ends its path
+    is_seg = np.ones(max(nv - 1, 0), dtype=bool)
+    ends = offsets[1:] - 1
+    is_seg[ends[(ends >= 0) & (ends < nv - 1)]] = False
+    seg = np.nonzero(is_seg)[0]
+    x1, y1 = xy[seg, 0], xy[seg, 1]
+    dx = xy[seg + 1, 0] - x1
+    dy = xy[seg + 1, 1] - y1
     step_deg = _EDGE_KM[res] / _EARTH_KM * (180.0 / math.pi) * 0.75
-    lats: list = []
-    lngs: list = []
-    for (x1, y1), (x2, y2) in zip(coords, coords[1:]):
-        seg_len = math.hypot(x2 - x1, y2 - y1)
-        n = max(1, int(math.ceil(seg_len / step_deg)))
-        f = np.arange(n + 1) / n
-        lats.append(y1 + f * (y2 - y1))
-        lngs.append(x1 + f * (x2 - x1))
-    return np.concatenate(lats), np.concatenate(lngs)
+    n = np.maximum(1, np.ceil(np.hypot(dx, dy) / step_deg)).astype(np.int64)
+    cnt = n + 1
+    seg_of = np.repeat(np.arange(seg.shape[0]), cnt)
+    f = ranges(0, cnt) / n[seg_of]
+    lats = y1[seg_of] + f * dy[seg_of]
+    lngs = x1[seg_of] + f * dx[seg_of]
+    seg_count = np.maximum(np.diff(offsets) - 1, 0)
+    cum = np.concatenate([[0], np.cumsum(cnt)])
+    sample_offsets = cum[np.concatenate([[0], np.cumsum(seg_count)])]
+    return lats, lngs, sample_offsets
+
+
+def line_sample_points(coords: list[tuple[float, float]], res: int):
+    """Densified sample points along one polyline as (lats, lngs) numpy
+    arrays: the one-path case of sample_paths."""
+    lats, lngs, _ = sample_paths(coords, [0, len(coords)], res)
+    return lats, lngs
 
 
 def dedupe_cells(cells) -> list[int]:
     """Order-preserving dedupe of a cell id array, dropping zeros."""
     return [c for c in dict.fromkeys(int(c) for c in cells) if c]
+
+
+def dedupe_segments(cells, offsets):
+    """dedupe_cells over every CSR segment of ``cells`` at once: each
+    segment's distinct nonzero cells in first-occurrence order.
+    Returns ``(cells, offsets)`` in the same layout."""
+    import numpy as np
+
+    cells = np.asarray(cells, dtype=np.int64)
+    offsets = np.asarray(offsets, dtype=np.int64)
+    seg = np.repeat(np.arange(offsets.shape[0] - 1), np.diff(offsets))
+    order = np.lexsort((cells, seg))  # stable: first occurrence leads
+    sc, ss = cells[order], seg[order]
+    first = np.ones(sc.shape[0], dtype=bool)
+    first[1:] = (sc[1:] != sc[:-1]) | (ss[1:] != ss[:-1])
+    pos = np.sort(order[first & (sc != 0)])
+    return cells[pos], np.searchsorted(seg[pos], np.arange(offsets.shape[0]))
 
 
 def line_cells(coords: list[tuple[float, float]], res: int) -> list[int]:
@@ -263,17 +324,10 @@ def line_cells(coords: list[tuple[float, float]], res: int) -> list[int]:
     callers complete coverage with a 1-ring expansion
     (udfs._expand_with_neighbors) + zero-ratio filter. Denser sampling
     would only re-find cells the expansion already produces."""
-    step_deg = _EDGE_KM[res] / _EARTH_KM * (180.0 / math.pi) * 0.75
-    seen: dict[int, None] = {}
-    for (x1, y1), (x2, y2) in zip(coords, coords[1:]):
-        seg_len = math.hypot(x2 - x1, y2 - y1)
-        n = max(1, int(math.ceil(seg_len / step_deg)))
-        for t in range(n + 1):
-            f = t / n
-            cell = core.latlng_to_cell(y1 + f * (y2 - y1), x1 + f * (x2 - x1), res)
-            if cell:
-                seen[cell] = None
-    return list(seen)
+    from h3_indexer_spark.functions.h3.vectorized import latlng_to_cell_batch
+
+    lats, lngs = line_sample_points(coords, res)
+    return dedupe_cells(latlng_to_cell_batch(lats, lngs, res))
 
 
 def _point_in_ring(lng: float, lat: float, ring: list[tuple[float, float]]) -> bool:
@@ -359,17 +413,29 @@ def polyfill(
     return list(result)
 
 
-def polyfill_many(specs, res: int) -> list:
-    """Batched polyfill: one vectorized index/center pass for MANY
-    polygons. ``specs`` is a list of ``(outer, holes, boundary_cells,
-    wrap)`` where ``outer``/``holes`` are (lng, lat) rings (closure
-    optional), ``boundary_cells`` the precomputed boundary-traversal
-    cells, and ``wrap`` True when the feature's coordinates were
-    shifted to the [0, 360) frame (antimeridian crossers) — cell
-    centers are then shifted into the same frame before the even-odd
-    test. Semantics per feature are identical to ``polyfill``; the
-    batching removes the per-call fixed cost that dominated when
-    thousands of small polygons were filled one at a time.
+def polyfill_many(xy, ring_off, part_off, boundary_cells, boundary_off,
+                  wrap, res: int):
+    """Batched polyfill: one vectorized grid, index, center and
+    point-in-polygon pass for MANY polygons, with per-polygon
+    semantics identical to ``polyfill``. Everything is CSR
+    ("compressed sparse row": flat values plus offsets): ring ``r`` is
+    the (lng, lat) rows ``xy[ring_off[r]:ring_off[r + 1]]`` (closure
+    optional); polygon ``p`` owns rings ``part_off[p]`` to
+    ``part_off[p + 1] − 1``, its outer ring first and its holes after;
+    its precomputed boundary-traversal cells are
+    ``boundary_cells[boundary_off[p]:boundary_off[p + 1]]``. ``wrap[p]``
+    is True when its coordinates were shifted to the [0, 360) frame
+    (antimeridian crossers) — cell centers are then shifted into the
+    same frame before the even-odd test.
+
+    Each polygon's candidates are its boundary cells plus the cells of
+    a 0.7 × edge sample grid over its outer ring's bbox (see
+    ``polyfill``). Every grid of the batch is built and indexed at
+    once, and all centers go through one points_in_polygons pass over
+    the outer rings and holes of the whole batch — no per-polygon
+    numpy calls. Returns ``(cells, offsets)``, one CSR segment per
+    polygon: its boundary cells in order, then its other candidates
+    whose centers lie inside, ascending.
     """
     import numpy as np
 
@@ -378,69 +444,143 @@ def polyfill_many(specs, res: int) -> list:
         latlng_to_cell_batch,
     )
 
-    step = _EDGE_KM[res] / _EARTH_KM * (180.0 / math.pi) * 0.7
-    grid_la, grid_ln, gsizes = [], [], []
-    rings_open = []
-    for outer, holes, bcells, wrap in specs:
-        ring = outer[:-1] if outer[0] == outer[-1] else list(outer)
-        rings_open.append(ring)
-        lngs = [p[0] for p in ring]
-        lats = [p[1] for p in ring]
-        glat = np.arange(min(lats), max(lats) + step, step)
-        glng = np.arange(min(lngs), max(lngs) + step, step)
-        la, ln = np.meshgrid(glat, glng, indexing="ij")
-        grid_la.append(la.ravel())
-        grid_ln.append(ln.ravel())
-        gsizes.append(la.size)
+    xy = np.asarray(xy, dtype=np.float64).reshape(-1, 2)
+    ring_off = np.asarray(ring_off, dtype=np.int64)
+    part_off = np.asarray(part_off, dtype=np.int64)
+    boundary_cells = np.asarray(boundary_cells, dtype=np.int64)
+    boundary_off = np.asarray(boundary_off, dtype=np.int64)
+    n_parts = part_off.shape[0] - 1
+    if n_parts == 0:
+        return np.empty(0, dtype=np.int64), np.zeros(1, dtype=np.int64)
 
-    all_la = np.concatenate(grid_la) if grid_la else np.empty(0)
-    all_ln = np.concatenate(grid_ln) if grid_ln else np.empty(0)
+    # bbox of each outer ring: reduceat over interleaved [lo, hi)
+    # bounds, odd slots discarded (a sentinel row keeps hi in range)
+    outer = part_off[:-1]
+    bounds = np.stack([ring_off[outer], ring_off[outer + 1]], axis=1).ravel()
+    padded = np.vstack([xy, np.zeros((1, 2))])
+    lo_xy = np.minimum.reduceat(padded, bounds, axis=0)[::2]
+    hi_xy = np.maximum.reduceat(padded, bounds, axis=0)[::2]
+    step = _EDGE_KM[res] / _EARTH_KM * (180.0 / math.pi) * 0.7
+    glats, glngs = [], []
+    for (x0, y0), (x1, y1) in zip(lo_xy.tolist(), hi_xy.tolist()):
+        glats.append(np.arange(y0, y1 + step, step))
+        glngs.append(np.arange(x0, x1 + step, step))
+    n_la = np.asarray([len(g) for g in glats], dtype=np.int64)
+    n_ln = np.asarray([len(g) for g in glngs], dtype=np.int64)
+    # grid point k of polygon p is (glat[k // n_ln], glng[k % n_ln]),
+    # the row-major order of meshgrid(glat, glng, indexing="ij")
+    g_size = n_la * n_ln
+    g_part = np.repeat(np.arange(n_parts), g_size)
+    row, col = np.divmod(ranges(0, g_size), n_ln[g_part])
+    all_la = np.concatenate(glats)[(np.cumsum(n_la) - n_la)[g_part] + row]
+    all_ln = np.concatenate(glngs)[(np.cumsum(n_ln) - n_ln)[g_part] + col]
     cells = np.empty(all_la.shape[0], dtype=np.int64)
     chunk = 4_000_000
     for lo in range(0, all_la.shape[0], chunk):
         sl = slice(lo, lo + chunk)
         cells[sl] = latlng_to_cell_batch(all_la[sl], all_ln[sl], res)
 
-    offs = np.cumsum([0] + gsizes)
-    cand_lists = []
-    for fi, (outer, holes, bcells, wrap) in enumerate(specs):
-        cand = np.unique(
-            np.concatenate(
-                [
-                    np.asarray(list(bcells), dtype=np.int64),
-                    cells[offs[fi] : offs[fi + 1]],
-                ]
-            )
-        )
-        cand_lists.append(cand[cand != 0])
+    # candidates: distinct nonzero (polygon, cell) pairs, sorted
+    b_part = np.repeat(np.arange(n_parts), np.diff(boundary_off))
+    c_part = np.concatenate([b_part, g_part])
+    c_cell = np.concatenate([boundary_cells, cells])
+    order = np.lexsort((c_cell, c_part))
+    c_part, c_cell = c_part[order], c_cell[order]
+    first = np.ones(c_cell.shape[0], dtype=bool)
+    first[1:] = (c_cell[1:] != c_cell[:-1]) | (c_part[1:] != c_part[:-1])
+    keep = first & (c_cell != 0)
+    c_part, c_cell = c_part[keep], c_cell[keep]
 
-    allc = (
-        np.concatenate(cand_lists) if cand_lists else np.empty(0, np.int64)
-    )
-    uniqc, inv = np.unique(allc, return_inverse=True)
+    uniqc, inv = np.unique(c_cell, return_inverse=True)
     ulat, ulng = cell_to_latlng_batch(uniqc)
     clat, clng = ulat[inv], ulng[inv]
+    shift = np.asarray(wrap, dtype=bool)[c_part] & (clng < 0.0)
+    clng = np.where(shift, clng + 360.0, clng)
+    inside = points_in_polygons(clng, clat, c_part, xy, ring_off, part_off)
 
-    results = []
-    pos = 0
-    for fi, (outer, holes, bcells, wrap) in enumerate(specs):
-        cand = cand_lists[fi]
-        m = len(cand)
-        la = clat[pos : pos + m]
-        ln = clng[pos : pos + m]
-        pos += m
-        if wrap:
-            ln = np.where(ln < 0.0, ln + 360.0, ln)
-        inside = _points_in_ring_v(ln, la, rings_open[fi])
-        for hole in holes or []:
-            inside &= ~_points_in_ring_v(ln, la, hole)
-        result: dict[int, None] = {}
-        for c in bcells:
-            result[c] = None
-        for c in cand[inside]:
-            result[int(c)] = None
-        results.append(list(result))
-    return results
+    # per polygon: boundary cells first, then the inside candidates
+    # (a stable sort on 2·polygon + is_inside keeps both in order)
+    key = np.concatenate([2 * b_part, 2 * c_part[inside] + 1])
+    order = np.argsort(key, kind="stable")
+    return dedupe_segments(
+        np.concatenate([boundary_cells, c_cell[inside]])[order],
+        np.searchsorted(key[order], 2 * np.arange(n_parts + 1)),
+    )
+
+
+def points_in_polygons(lng, lat, pt_part, xy, ring_off, part_off):
+    """Even-odd point-in-polygon for many (point, polygon) pairs at
+    once: point ``i`` is tested against polygon ``pt_part[i]`` (rings
+    in the CSR layout of polyfill_many) and is inside when it is inside
+    the outer ring and in none of the holes.
+
+    One pass over (point, ring-edge) pairs, restricted to the pairs
+    whose edge spans the point's latitude — the only ones where the
+    even-odd test can count a crossing ((y1 > lat) != (y2 > lat) holds
+    exactly when min(y1, y2) ≤ lat < max(y1, y2)). Latitudes are
+    replaced by their rank among the points' distinct latitudes, so
+    each edge finds its points with two searchsorted calls over the
+    points sorted by (polygon, rank). Each pair evaluates the same
+    crossing arithmetic as _points_in_ring_v, and a ring's parity is
+    its crossing count mod 2. Pairs are generated at most _PAIR_CHUNK
+    at a time."""
+    import numpy as np
+
+    lng = np.asarray(lng, dtype=np.float64)
+    lat = np.asarray(lat, dtype=np.float64)
+    pt_part = np.asarray(pt_part, dtype=np.int64)
+    n_pts = lng.shape[0]
+    n_rings = ring_off.shape[0] - 1
+    ring_len = np.diff(ring_off)
+    # edge v runs from vertex v to the next vertex of its ring (the
+    # last vertex closes back to the first)
+    v_to = np.arange(1, xy.shape[0] + 1)
+    nonempty = ring_len > 0
+    v_to[ring_off[1:][nonempty] - 1] = ring_off[:-1][nonempty]
+    e_ring = np.repeat(np.arange(n_rings), ring_len)
+    ring_part = np.repeat(np.arange(part_off.shape[0] - 1), np.diff(part_off))
+    e_part = ring_part[e_ring]
+    e_outer = np.zeros(n_rings, dtype=bool)
+    e_outer[part_off[:-1][np.diff(part_off) > 0]] = True
+    e_outer = e_outer[e_ring]
+    x1, y1 = xy[:, 0], xy[:, 1]
+    x2, y2 = xy[v_to, 0], xy[v_to, 1]
+
+    ulat = np.unique(lat)
+    width = ulat.shape[0] + 1
+    key = pt_part * width + np.searchsorted(ulat, lat)
+    order = np.argsort(key, kind="stable")
+    skey = key[order]
+    base = e_part * width
+    start = np.searchsorted(skey, base + np.searchsorted(ulat, np.minimum(y1, y2)))
+    stop = np.searchsorted(skey, base + np.searchsorted(ulat, np.maximum(y1, y2)))
+    cnt = stop - start
+
+    odd_outer = np.zeros(n_pts, dtype=np.int64)
+    hole_keys = []
+    cum = np.cumsum(cnt)
+    e0 = 0
+    while e0 < cnt.shape[0]:
+        done = cum[e0 - 1] if e0 else 0
+        e1 = max(e0 + 1, int(np.searchsorted(cum, done + _PAIR_CHUNK, "right")))
+        c = cnt[e0:e1]
+        pe = np.repeat(np.arange(e0, e1), c)
+        pp = order[ranges(start[e0:e1], c)]
+        xint = x1[pe] + (lat[pp] - y1[pe]) / (y2[pe] - y1[pe]) * (
+            x2[pe] - x1[pe]
+        )
+        hit = lng[pp] < xint
+        outer_hit = hit & e_outer[pe]
+        odd_outer += np.bincount(pp[outer_hit], minlength=n_pts)
+        hole_hit = hit & ~e_outer[pe]
+        if hole_hit.any():
+            hole_keys.append(pp[hole_hit] * n_rings + e_ring[pe[hole_hit]])
+        e0 = e1
+    inside = (odd_outer & 1).astype(bool)
+    if hole_keys:
+        keys, counts = np.unique(np.concatenate(hole_keys), return_counts=True)
+        inside[keys[(counts & 1) == 1] // n_rings] = False
+    return inside
 
 
 def _points_in_ring_v(lng, lat, ring):

@@ -113,6 +113,16 @@ def canonical_wkt_udf(geom: pd.Series) -> pd.Series:
     return geom.map(conv)
 
 
+# The function is pure. The nondeterministic flag only stops Catalyst
+# from copying the call into a filter on its output that it pushes
+# below the projection (and through a repartition into the scan): the
+# Validate stage's not-null filter did that, and every row was
+# canonicalized twice, the first time in the scan's tasks.
+# (asNondeterministic() flags the shared UDF object itself, so it is
+# set here, once, rather than at a call site.)
+canonical_wkt_udf = canonical_wkt_udf.asNondeterministic()
+
+
 # --- the indexing kernel: feature → (cell, ratio, metric) rows ------------
 
 
@@ -292,37 +302,77 @@ def _index_polygons(
 # without clipping — O(perimeter) clip work instead of O(area)).
 
 
-def _maybe_unwrap(parts):
-    """Antimeridian handling: a feature is treated as crossing ±180°
-    only when some ring has a CONSECUTIVE-vertex lng jump > 180° — the
-    GeoJSON RFC 7946 §3.1.9 convention, where a segment nominally
-    spanning more than half the globe means "the short way across the
-    antimeridian". A legitimately wide feature (span > 180° but densely
-    vertexed, so no single jump exceeds 180°) is left untouched. When
-    crossing, every coordinate shifts into the continuous [0, 360)
-    frame (lng < 0 → +360). All planar math downstream (sampling,
-    polyfill, clipping, centroids) runs in that frame; cell indexing
-    and the spheroid metrics are trigonometric and accept lng > 180
-    unchanged. The batch allocators shift candidate-cell boundaries
-    into the same frame per feature. Returns (parts, wrap)."""
-    crosses = any(
-        abs(ring[i][0] - ring[i - 1][0]) > 180.0
-        for _, rings in parts
-        for ring in rings
-        for i in range(1, len(ring))
-    )
-    if not crosses:
-        return parts, False
-    return [
-        (
-            kind,
-            [
-                [(x + 360.0 if x < 0.0 else x, y) for x, y in ring]
-                for ring in rings
-            ],
-        )
-        for kind, rings in parts
-    ], True
+def _ring_csr(rings):
+    """CSR arrays of a list of (lng, lat) rings: ``(xy, offsets)`` with
+    ring ``r`` the rows ``xy[offsets[r]:offsets[r + 1]]``."""
+    import numpy as np
+    from itertools import chain
+
+    lens = np.fromiter(map(len, rings), np.int64, len(rings))
+    offsets = np.concatenate([[0], np.cumsum(lens)])
+    xy = np.fromiter(
+        chain.from_iterable(chain.from_iterable(rings)),
+        np.float64,
+        2 * int(offsets[-1]),
+    ).reshape(-1, 2)
+    return xy, offsets
+
+
+def _pad_rings(xy, starts, counts):
+    """(len(starts), max(counts), 2) zero-padded array whose row ``i``
+    begins with the ``counts[i]`` rows of ``xy`` from ``starts[i]``."""
+    import numpy as np
+
+    counts = np.asarray(counts, dtype=np.int64)
+    cap = int(counts.max()) if counts.shape[0] else 0
+    padded = np.zeros((counts.shape[0], cap, 2), dtype=np.float64)
+    row = np.repeat(np.arange(counts.shape[0]), counts)
+    padded[row, coverage.ranges(0, counts)] = xy[coverage.ranges(starts, counts)]
+    return padded
+
+
+def _closed_paths(xy, starts, counts, close):
+    """CSR ``(xy, offsets)`` of the rings ``xy[starts[i]:starts[i] +
+    counts[i]]``, each followed by its first vertex again where
+    ``close`` (a mask, or True for all) holds."""
+    import numpy as np
+
+    close = np.broadcast_to(np.asarray(close, dtype=bool), counts.shape)
+    cnt = counts + close
+    idx = coverage.ranges(starts, cnt)
+    idx[np.cumsum(cnt)[close] - 1] = starts[close]
+    return xy[idx], np.concatenate([[0], np.cumsum(cnt)])
+
+
+def _unwrap_antimeridian(xy, ring_off, ring_feat, n_feats):
+    """Antimeridian handling over a batch's CSR coordinates: a feature
+    is treated as crossing ±180° only when some ring has a
+    CONSECUTIVE-vertex lng jump > 180° — the GeoJSON RFC 7946 §3.1.9
+    convention, where a segment nominally spanning more than half the
+    globe means "the short way across the antimeridian". A legitimately
+    wide feature (span > 180° but densely vertexed, so no single jump
+    exceeds 180°) is left untouched. When crossing, every coordinate of
+    the feature shifts into the continuous [0, 360) frame (lng < 0 →
+    +360). All planar math downstream (sampling, polyfill, clipping,
+    centroids) runs in that frame; cell indexing and the spheroid
+    metrics are trigonometric and accept lng > 180 unchanged. The
+    batch allocators shift candidate-cell boundaries into the same
+    frame per feature. ``ring_feat`` maps each ring to its feature.
+    Returns ``(xy, wrap)``: the shifted coordinates (a copy when any
+    feature wraps) and the (n_feats,) crossing mask."""
+    import numpy as np
+
+    v_feat = np.repeat(ring_feat, np.diff(ring_off))
+    jump = np.abs(np.diff(xy[:, 0])) > 180.0
+    # the vertex pair straddling two rings is no segment
+    starts = ring_off[1:-1]
+    jump[starts[(starts > 0) & (starts < xy.shape[0])] - 1] = False
+    wrap = np.zeros(n_feats, dtype=bool)
+    wrap[v_feat[1:][jump]] = True
+    if wrap.any():
+        xy = xy.copy()
+        xy[wrap[v_feat] & (xy[:, 0] < 0.0), 0] += 360.0
+    return xy, wrap
 
 
 def _shift_wrapped(bpts, wrap_mask):
@@ -487,191 +537,201 @@ def _index_polygons_batch(poly_feats, res: int, method: AllocationMethod,
     """Batched POLYGON allocation for [(uid, plist, wrap)] features
     (non-CENTROID methods); returns (uids, cells, ratios, metrics).
 
-    Candidate cells and ratios are identical to _index_polygons; the
-    coverage comes from one polyfill_many pass over every part of the
-    batch, the area of each (ring, cell) clip from the vectorized
-    kernel, and cells provably interior (in the polyfill set and not
-    within one ring of any outer/hole boundary cell — sampling
-    guarantees every boundary-crossed cell is within one ring of a
-    sampled one) skip clipping entirely and keep the full hexagon
-    area."""
+    Candidate cells and ratios are identical to _index_polygons. The
+    batch's rings are laid out once as CSR arrays (every part's outer
+    ring, then its holes); the metric and planar areas, the hole
+    boundary cells, the coverage (one polyfill_many pass over every
+    part) and the clip padding all read those arrays. The area of each
+    (ring, cell) clip comes from the vectorized kernel, and cells
+    provably interior (in the polyfill set and not within one ring of
+    any outer/hole boundary cell — sampling guarantees every
+    boundary-crossed cell is within one ring of a sampled one) skip
+    clipping entirely and keep the full hexagon area."""
     import numpy as np
 
     from h3_indexer_spark.functions.h3 import clipbatch
-    from h3_indexer_spark.functions.h3.vectorized import cell_boundary_batch
+    from h3_indexer_spark.functions.h3.vectorized import (
+        cell_boundary_batch,
+        latlng_to_cell_batch,
+    )
 
-    uids_out: list = []
-    cells_out: list = []
-    ratios_out: list = []
-    metrics_out: list = []
     F = len(poly_feats)
 
-    parts_f, total_area_f = [], []
-    metric_rings, metric_feat, metric_sign = [], [], []
-    edge_base_f = []  # outer sampled + hole boundary cells per feature
-    hole_cell_lists = []  # extra neighbor-batch inputs (holes only)
-    specs = []  # one polyfill spec per part
-    spec_feat = []  # owning feature of each spec
-    for fi, (_, plist, wrap) in enumerate(poly_feats):
-        parts = [_split_outer_holes(rings) for _, rings, _, _ in plist]
-        parts_f.append(parts)
-        for outer, holes in parts:
-            metric_rings.append(outer)
-            metric_feat.append(fi)
-            metric_sign.append(1.0)
-            for h in holes:
-                metric_rings.append(h)
-                metric_feat.append(fi)
-                metric_sign.append(-1.0)
-        total_area_f.append(
-            sum(
-                geodesy.planar_polygon_area(outer)
-                - sum(geodesy.planar_polygon_area(h) for h in holes)
-                for outer, holes in parts
-            )
-        )
-        boundaries = [
-            coverage.dedupe_cells(sample_cells[lo:hi]) if hi > lo else None
-            for _, _, lo, hi in plist
-        ]
-        edge_base: list[int] = []
-        hole_cells: list[int] = []
-        for (outer, holes), boundary in zip(parts, boundaries):
-            if boundary is None:
-                closed = outer + [outer[0]]
-                boundary = coverage.line_cells(closed, res)
-            specs.append((outer, holes or None, boundary, wrap))
-            spec_feat.append(fi)
-            edge_base.extend(boundary)
-            for hole in holes:
-                hc = coverage.line_cells(hole + [hole[0]], res)
-                edge_base.extend(hc)
-                hole_cells.extend(hc)
-        edge_base_f.append(edge_base)
-        hole_cell_lists.append(hole_cells)
+    # every ring opened as _split_outer_holes does; part p owns rings
+    # part_off[p]…part_off[p + 1] − 1, its outer ring first
+    rings, part_rings, part_feat, part_span = [], [], [], []
+    for fi, (_, plist, _) in enumerate(poly_feats):
+        for _, prings, lo, hi in plist:
+            outer, holes = _split_outer_holes(prings)
+            rings.append(outer)
+            rings.extend(holes)
+            part_rings.append(1 + len(holes))
+            part_feat.append(fi)
+            part_span.append((lo, hi))
+    xy, ring_off = _ring_csr(rings)
+    n_rings = len(rings)
+    part_off = np.concatenate([[0], np.cumsum(part_rings)])
+    part_feat = np.asarray(part_feat, dtype=np.int64)
+    ring_feat = np.repeat(part_feat, part_rings)
+    is_outer = np.zeros(n_rings, dtype=bool)
+    is_outer[part_off[:-1]] = True
+    feat_ring_off = np.searchsorted(ring_feat, np.arange(F + 1))
+    wrap_f = np.asarray([bool(w) for _, _, w in poly_feats], dtype=bool)
+    ring_len = np.diff(ring_off)
 
-    # total_area_km2 metric: one batched authalic-area call over every
-    # ring of the batch (holes subtract)
+    # total_area_km2 metric and the planar total area: one padded array
+    # of every ring, with a closing vertex that survived the opening
+    # dropped once more (as spheroid_polygon_area_m2_many and
+    # planar_polygon_area drop it)
+    last = np.maximum(ring_off[1:] - 1, 0)
+    dup = (ring_len >= 2) & (xy[ring_off[:-1]] == xy[last]).all(axis=1)
+    nv = ring_len - dup
+    padded = _pad_rings(xy, ring_off[:-1], nv)
+    signed_m2 = np.where(is_outer, 1.0, -1.0) * geodesy.spheroid_ring_areas_m2(
+        padded, nv
+    )
     metrics_arr = np.zeros(F, dtype=np.float64)
-    if metric_rings:
-        areas_m2 = geodesy.spheroid_polygon_area_m2_many(metric_rings)
-        np.add.at(
-            metrics_arr,
-            np.asarray(metric_feat, dtype=np.int64),
-            np.asarray(metric_sign) * areas_m2,
-        )
+    np.add.at(metrics_arr, ring_feat, signed_m2)
     metrics_f = (metrics_arr / 1.0e6).tolist()
+    planar = geodesy.planar_ring_areas(padded, nv).tolist()
+    total_area_f = [0] * F
+    for p, fi in enumerate(part_feat.tolist()):
+        r0, r1 = part_off[p], part_off[p + 1]
+        total_area_f[fi] += planar[r0] - sum(planar[r0 + 1 : r1])
 
-    part_fills = coverage.polyfill_many(specs, res)
-    merged: list[dict[int, None]] = [{} for _ in range(F)]
-    for fi, fill in zip(spec_feat, part_fills):
-        for c in fill:
-            merged[fi].setdefault(c)
-    pf_lists = [list(d) for d in merged]
+    # boundary cells: an outer ring's own samples; holes (and an outer
+    # ring sampled by nobody) are closed, sampled and indexed here in
+    # one call
+    span = np.asarray(part_span, dtype=np.int64).reshape(-1, 2)
+    unsampled = ~is_outer
+    unsampled[part_off[:-1]] = span[:, 1] <= span[:, 0]
+    nr = np.nonzero(unsampled)[0]
+    la, ln, soff = coverage.sample_paths(
+        *_closed_paths(xy, ring_off[nr], ring_len[nr], True), res
+    )
+    # segments 0…P−1 are the parts' own spans (empty when unsampled),
+    # then one per ring in nr
+    own_len = np.maximum(span[:, 1] - span[:, 0], 0)
+    seg_cells = np.concatenate(
+        [np.asarray(sample_cells, dtype=np.int64)[
+            coverage.ranges(span[:, 0], own_len)],
+         latlng_to_cell_batch(la, ln, res)]
+    )
+    seg_off = np.concatenate(
+        [[0], np.cumsum(own_len), own_len.sum() + soff[1:]]
+    )
+    uc, uoff = coverage.dedupe_segments(seg_cells, seg_off)
+    ring_seg = np.repeat(np.arange(len(part_span)), part_rings)
+    ring_seg[nr] = len(part_span) + np.arange(nr.shape[0])
+    # every ring's boundary cells, CSR in ring order
+    rc_len = np.diff(uoff)[ring_seg]
+    rc_off = np.concatenate([[0], np.cumsum(rc_len)])
+    rc_cells = uc[coverage.ranges(uoff[ring_seg], rc_len)]
 
-    expanded, nbmap = _grouped_neighbors(pf_lists + hole_cell_lists)
-    cand_lists = expanded[:F]
-    offsets = np.cumsum([0] + [len(c) for c in cand_lists])
-    kept = np.zeros(int(offsets[-1]), dtype=np.float64)
+    outer_ids = part_off[:-1]
+    b_off = np.concatenate([[0], np.cumsum(rc_len[outer_ids])])
+    b_cells = rc_cells[coverage.ranges(rc_off[outer_ids], rc_len[outer_ids])]
+    fill_cells, fill_off = coverage.polyfill_many(
+        xy, ring_off, part_off, b_cells, b_off, wrap_f[part_feat], res
+    )
+    # a feature's coverage is the union of its parts' fills, in order
+    # (parts of a feature are consecutive)
+    pf_cells, pf_off = coverage.dedupe_segments(
+        fill_cells, fill_off[np.searchsorted(part_feat, np.arange(F + 1))]
+    )
+    pf_feat = np.repeat(np.arange(F), np.diff(pf_off))
 
-    # classify candidates; collect clip pairs and interior cells
-    rings_all: list[np.ndarray] = []  # open rings, np (n, 2)
-    pair_cell, pair_ring, pair_acc, pair_sign, pair_wrap = [], [], [], [], []
-    interior_cells, interior_acc, interior_wrap = [], [], []
-    for fi in range(F):
-        wrap = bool(poly_feats[fi][2])
-        edge = set(edge_base_f[fi])
-        for c in list(edge):
-            edge.update(nbmap.get(c, ()))
-        pfset = set(pf_lists[fi])
-        ring_ids = []
-        for outer, holes in parts_f[fi]:
-            rings_all.append(np.asarray(outer, dtype=np.float64))
-            ring_ids.append((len(rings_all) - 1, 1.0))
-            for h in holes:
-                rings_all.append(np.asarray(h, dtype=np.float64))
-                ring_ids.append((len(rings_all) - 1, -1.0))
-        clip_cells, clip_acc = [], []
-        for ci, c in enumerate(cand_lists[fi]):
-            if c in pfset and c not in edge:
-                interior_cells.append(c)
-                interior_acc.append(offsets[fi] + ci)
-                interior_wrap.append(wrap)
-            else:
-                clip_cells.append(c)
-                clip_acc.append(offsets[fi] + ci)
-        if clip_cells:
-            cl = np.asarray(clip_cells, dtype=np.int64)
-            ac = np.asarray(clip_acc, dtype=np.int64)
-            for rid, sign in ring_ids:
-                pair_cell.append(cl)
-                pair_ring.append(np.full(len(cl), rid, dtype=np.int64))
-                pair_acc.append(ac)
-                pair_sign.append(np.full(len(cl), sign))
-                pair_wrap.append(np.full(len(cl), wrap, dtype=bool))
+    # edge cells: every outer/hole boundary cell and its neighbors
+    edge_feat = np.repeat(ring_feat, rc_len)
+    uniq = np.unique(np.concatenate([pf_cells, rc_cells]))
+    nb = coverage.cell_neighbors_batch(uniq)
+    edge_nb = nb[np.searchsorted(uniq, rc_cells)].ravel()
+    edge_cells = np.concatenate([rc_cells, edge_nb])
+    edge_feat = np.concatenate([edge_feat, np.repeat(edge_feat, 6)])
+    # candidates: each feature's coverage, then its cells' neighbors
+    # (row order), deduped — the _expand_with_neighbors order
+    pf_nb = nb[np.searchsorted(uniq, pf_cells)].ravel()
+    src_cells = np.concatenate([pf_cells, pf_nb])
+    src_key = np.concatenate([2 * pf_feat, 2 * np.repeat(pf_feat, 6) + 1])
+    order = np.argsort(src_key, kind="stable")
+    cand_cells, offsets = coverage.dedupe_segments(
+        src_cells[order],
+        np.searchsorted(src_key[order], 2 * np.arange(F + 1)),
+    )
+    cand_feat = np.repeat(np.arange(F), np.diff(offsets))
+    kept = np.zeros(cand_cells.shape[0], dtype=np.float64)
+
+    # (feature, cell) membership through dense cell ids
+    ids = np.unique(np.concatenate([cand_cells, edge_cells]))
+    width = ids.shape[0]
+
+    def keys(feat, cells):
+        return feat * width + np.searchsorted(ids, cells)
+
+    cand_key = keys(cand_feat, cand_cells)
+    in_pf = np.isin(cand_key, keys(pf_feat, pf_cells))
+    interior = in_pf & ~np.isin(cand_key, keys(edge_feat, edge_cells))
+    interior_acc = np.nonzero(interior)[0]
+    interior_cells = cand_cells[interior_acc]
+    interior_wrap = wrap_f[cand_feat[interior_acc]]
+
+    # clip pairs, feature by feature: every non-interior candidate
+    # against each of the feature's rings (outer +, holes −)
+    clip_acc = np.nonzero(~interior)[0]
+    k_f = np.bincount(cand_feat[clip_acc], minlength=F)
+    r_f = np.diff(feat_ring_off)
+    size = k_f * r_f
+    pf_ = np.repeat(np.arange(F), size)
+    ring_local, cell_local = np.divmod(
+        coverage.ranges(0, size), np.maximum(k_f, 1)[pf_]
+    )
+    pair_ring = feat_ring_off[:-1][pf_] + ring_local
+    pair_at = clip_acc[(np.cumsum(k_f) - k_f)[pf_] + cell_local]
+    pair_cell = cand_cells[pair_at]
 
     # one boundary batch for every distinct candidate cell
-    all_cells = np.concatenate(
-        [np.concatenate(pair_cell) if pair_cell else np.empty(0, np.int64),
-         np.asarray(interior_cells, dtype=np.int64)]
-    )
-    if all_cells.size:
-        uniqc = np.unique(all_cells)
-        bpts, bnv = cell_boundary_batch(uniqc)
-        if interior_cells:
-            sel = np.searchsorted(uniqc, np.asarray(interior_cells,
-                                                    dtype=np.int64))
-            areas = clipbatch.shoelace_abs_batch(
-                _shift_wrapped(
-                    bpts[sel], np.asarray(interior_wrap, dtype=bool)
-                ),
-                bnv[sel],
-            )
-            kept[np.asarray(interior_acc, dtype=np.int64)] += areas
-        if pair_cell:
-            pc = np.concatenate(pair_cell)
-            pr = np.concatenate(pair_ring)
-            pa = np.concatenate(pair_acc)
-            ps = np.concatenate(pair_sign)
-            pw = np.concatenate(pair_wrap)
-            cell_row = np.searchsorted(uniqc, pc)
-            ring_len = np.asarray([len(r) for r in rings_all])
-            # bucket pairs by ring-size class to bound padding waste
-            size_cls = np.ceil(np.log2(np.maximum(ring_len[pr], 4))
-                               ).astype(np.int64)
-            for cls in np.unique(size_cls):
-                idx = np.nonzero(size_cls == cls)[0]
-                rids = np.unique(pr[idx])
-                max_n = int(ring_len[rids].max())
-                padded = np.zeros((len(rids), max_n, 2), dtype=np.float64)
-                for u, rid in enumerate(rids):
-                    padded[u, : ring_len[rid]] = rings_all[rid]
-                ring_row = np.searchsorted(rids, pr[idx])
-                step = max(1, (1 << 22) // max(max_n, 1))
-                for lo in range(0, len(idx), step):
-                    sl = idx[lo : lo + step]
-                    rr = ring_row[lo : lo + step]
-                    a = clipbatch.clip_polygon_area_pairs(
-                        padded[rr],
-                        ring_len[pr[sl]],
-                        _shift_wrapped(bpts[cell_row[sl]], pw[sl]),
-                        bnv[cell_row[sl]],
-                    )
-                    np.add.at(kept, pa[sl], ps[sl] * a)
+    uniqc = np.unique(np.concatenate([pair_cell, interior_cells]))
+    bpts, bnv = cell_boundary_batch(uniqc)
+    if interior_cells.size:
+        sel = np.searchsorted(uniqc, interior_cells)
+        kept[interior_acc] += clipbatch.shoelace_abs_batch(
+            _shift_wrapped(bpts[sel], interior_wrap), bnv[sel]
+        )
+    if pair_cell.size:
+        ps = np.where(is_outer, 1.0, -1.0)[pair_ring]
+        pw = wrap_f[pf_]
+        cell_row = np.searchsorted(uniqc, pair_cell)
+        # bucket pairs by ring-size class to bound padding waste
+        size_cls = np.ceil(np.log2(np.maximum(ring_len[pair_ring], 4))
+                           ).astype(np.int64)
+        for cls in np.unique(size_cls):
+            idx = np.nonzero(size_cls == cls)[0]
+            rids = np.unique(pair_ring[idx])
+            ring_pad = _pad_rings(xy, ring_off[rids], ring_len[rids])
+            ring_row = np.searchsorted(rids, pair_ring[idx])
+            step = max(1, (1 << 22) // max(ring_pad.shape[1], 1))
+            for lo in range(0, len(idx), step):
+                sl = idx[lo : lo + step]
+                a = clipbatch.clip_polygon_area_pairs(
+                    ring_pad[ring_row[lo : lo + step]],
+                    ring_len[pair_ring[sl]],
+                    _shift_wrapped(bpts[cell_row[sl]], pw[sl]),
+                    bnv[cell_row[sl]],
+                )
+                np.add.at(kept, pair_at[sl], ps[sl] * a)
 
-    for fi, (uid, _, _) in enumerate(poly_feats):
-        pfset = set(pf_lists[fi])
-        tot = total_area_f[fi]
-        metric = metrics_f[fi]
-        vals = kept[offsets[fi] : offsets[fi + 1]]
-        for c, area in zip(cand_lists[fi], vals):
-            ratio = area / tot if tot > 0 else 0.0
-            if ratio > 0.0 or c in pfset:
-                uids_out.append(uid)
-                cells_out.append(c)
-                ratios_out.append(ratio)
-                metrics_out.append(metric)
-    return uids_out, cells_out, ratios_out, metrics_out
+    tot = np.asarray(total_area_f, dtype=np.float64)[cand_feat]
+    ratio = np.zeros(kept.shape[0], dtype=np.float64)
+    np.divide(kept, tot, out=ratio, where=tot > 0)
+    out = np.nonzero((ratio > 0.0) | in_pf)[0]
+    uids_f = [uid for uid, _, _ in poly_feats]
+    feat_out = cand_feat[out].tolist()
+    return (
+        [uids_f[fi] for fi in feat_out],
+        cand_cells[out].tolist(),
+        ratio[out].tolist(),
+        [metrics_f[fi] for fi in feat_out],
+    )
 
 
 def make_index_map_fn(
@@ -734,54 +794,88 @@ def make_index_map_fn(
                     )
                     continue
 
-            # phase 1: parse + generate every sample point of the batch,
-            # then index ALL samples in one vectorized call. Features
-            # may be MULTI* — each member becomes a part; allocation
-            # ratios are computed across the union of a feature's parts.
-            feats = []  # (uid, [(kind, rings, lo, hi), ...], wrap)
-            lat_parts, lng_parts = [], []
-            offset = 0
+            # phase 1: parse every feature and lay the batch's rings out
+            # as CSR arrays (flat coordinates plus ring offsets); shift
+            # antimeridian crossers into the [0, 360) frame, sample
+            # every line and every polygon's closed outer ring with ONE
+            # sample_paths call, and index ALL samples in one
+            # vectorized call. Features may be MULTI* — each member
+            # becomes a part; allocation ratios are computed across
+            # the union of a feature's parts.
+            parsed = []  # (uid, [(kind, rings), ...])
             for uid, wkt in zip(pdf[uid_col], pdf[GEOM_WKT]):
                 if wkt is None:
                     continue
                 try:
-                    parts = geometry.parse_wkt_parts(wkt)
+                    parsed.append((uid, geometry.parse_wkt_parts(wkt)))
                 except geometry.GeometryError:
                     continue
-                parts, wrap = _maybe_unwrap(parts)
+            xy, ring_off = _ring_csr(
+                [r for _, ps in parsed for _, rs in ps for r in rs]
+            )
+            n_rings = [sum(len(rs) for _, rs in ps) for _, ps in parsed]
+            ring_feat = np.repeat(
+                np.arange(len(parsed)), np.asarray(n_rings, dtype=np.int64)
+            )
+            xy, wrap_f = _unwrap_antimeridian(
+                xy, ring_off, ring_feat, len(parsed)
+            )
+            path_ring, path_close, point_v = [], [], []
+            refs = []  # per part: ("path" | "point" | None, index)
+            r = 0
+            for fi, (_, parts) in enumerate(parsed):
+                for pi, (kind, rings) in enumerate(parts):
+                    if wrap_f[fi]:  # the shifted coordinates
+                        rings = [
+                            list(map(tuple, xy[a:b].tolist()))
+                            for a, b in zip(
+                                ring_off[r : r + len(rings)],
+                                ring_off[r + 1 : r + len(rings) + 1],
+                            )
+                        ]
+                        parts[pi] = (kind, rings)
+                    if kind == "point":
+                        refs.append(("point", len(point_v)))
+                        point_v.append(ring_off[r])
+                    elif kind == "line" or method != AllocationMethod.CENTROID:
+                        refs.append(("path", len(path_ring)))
+                        path_ring.append(r)
+                        path_close.append(kind != "line")
+                    else:
+                        refs.append((None, 0))  # centroid cell: phase 2
+                    r += len(rings)
+            # polygon outer rings are sampled closed
+            path_ring = np.asarray(path_ring, dtype=np.int64)
+            lo = ring_off[path_ring]
+            n = ring_off[path_ring + 1] - lo
+            close = np.asarray(path_close, dtype=bool) & (
+                xy[lo] != xy[lo + n - 1]
+            ).any(axis=1)
+            lats, lngs, soff = coverage.sample_paths(
+                *_closed_paths(xy, lo, n, close), res
+            )
+            point_v = np.asarray(point_v, dtype=np.int64)
+            sample_cells = latlng_to_cell_batch(
+                np.concatenate([lats, xy[point_v, 1]]),
+                np.concatenate([lngs, xy[point_v, 0]]),
+                res,
+            )
+            soff = soff.tolist()
+            n_path_samples = soff[-1]
+            feats = []  # (uid, [(kind, rings, lo, hi), ...], wrap)
+            ref = iter(refs)
+            for fi, (uid, parts) in enumerate(parsed):
                 plist = []
                 for kind, rings in parts:
-                    if kind == "point":
-                        (lng, lat) = rings[0][0]
-                        lat_parts.append(np.asarray([lat]))
-                        lng_parts.append(np.asarray([lng]))
-                        n = 1
-                    elif kind == "line":
-                        la, ln = coverage.line_sample_points(rings[0], res)
-                        lat_parts.append(la)
-                        lng_parts.append(ln)
-                        n = len(la)
-                    elif method == AllocationMethod.CENTROID:
-                        n = 0  # centroid cell computed scalar in phase 2
+                    src, k = next(ref)
+                    if src == "path":
+                        plist.append((kind, rings, soff[k], soff[k + 1]))
+                    elif src == "point":
+                        lo = n_path_samples + k
+                        plist.append((kind, rings, lo, lo + 1))
                     else:
-                        ring = rings[0]
-                        closed = (
-                            ring if ring[0] == ring[-1] else ring + [ring[0]]
-                        )
-                        la, ln = coverage.line_sample_points(closed, res)
-                        lat_parts.append(la)
-                        lng_parts.append(ln)
-                        n = len(la)
-                    plist.append((kind, rings, offset, offset + n))
-                    offset += n
-                feats.append((uid, plist, wrap))
-            sample_cells = (
-                latlng_to_cell_batch(
-                    np.concatenate(lat_parts), np.concatenate(lng_parts), res
-                )
-                if lat_parts
-                else np.empty(0, dtype=np.int64)
-            )
+                        plist.append((kind, rings, 0, 0))
+                feats.append((uid, plist, bool(wrap_f[fi])))
 
             # phase 2: batched geometry work on the precomputed cells.
             # Line and polygon features route to the numpy pair kernels

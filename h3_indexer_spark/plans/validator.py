@@ -9,7 +9,12 @@ Scale improvements over the reference:
   of two separate count actions (reference validator.py:24-31).
 - geometry repair + invalid-drop is a single vectorized pandas UDF
   pass instead of four chained Sedona expressions with two count
-  actions (reference geospatial.py:140-166).
+  actions (reference geospatial.py:140-166). The UDF is marked
+  nondeterministic so that it runs once per row, above read_parquet's
+  rebalance when there is one: otherwise Catalyst copies it into the
+  not-null filter it pushes below the projection (and through the
+  repartition into the scan), and every row is canonicalized twice,
+  the first time in the scan's tasks.
 - only one persist, at the stage boundary (the reference's
   cache+count-per-step serializes the pipeline, SURVEY.md §4).
 """
@@ -92,6 +97,10 @@ def _attach_canonical_geometry(df: DataFrame, vt: VectorTable) -> DataFrame:
                 ),
             ),
         )
+    # evaluated once per row: canonical_wkt_udf is flagged
+    # nondeterministic, so _drop_invalid_geometries' filter stays above
+    # this projection instead of being pushed, UDF call and all, below
+    # it and read_parquet's repartition into the scan
     return df.withColumn(GEOM_WKT, canonical_wkt_udf(F.col(vt.geometry_column_name)))
 
 

@@ -87,7 +87,11 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     one fat row group — a common ingest pathology), a single bounded
     round-robin repartition restores full parallelism for the
     compute-heavy narrow stages downstream; filters and column pruning
-    still push through the repartition to the scan. At real scale
+    still push through the repartition to the scan. A filter over a
+    Python-UDF column is pushed there too, UDF call and all, so the UDF
+    then runs in the scan's tasks (one per row group) before the
+    rebalance; a caller that wants it after the rebalance marks the UDF
+    nondeterministic (plans/validator.py does). At real scale
     (row groups ≫ cores) the probe is a cheap footer read and the
     rebalance NEVER fires — no extra shuffle on the 100 TB path."""
     df = spark.read.parquet(path)

@@ -283,3 +283,199 @@ class TestBatchAllocatorsMatchScalar:
             for cc in exp:
                 assert got[cc] == pytest.approx(exp[cc], abs=1e-9)
             assert m[0] == pytest.approx(metric, rel=1e-6)
+
+
+def _star_ring(rng, cx, cy, r, k, closed):
+    ang = np.sort(rng.uniform(0.0, 2 * math.pi, k))
+    rad = r * rng.uniform(0.5, 1.0, k)
+    ring = [(float(cx + a * math.cos(t)), float(cy + a * math.sin(t)))
+            for a, t in zip(rad, ang)]
+    return ring + [ring[0]] if closed else ring
+
+
+def _csr(rings):
+    offsets = np.concatenate([[0], np.cumsum([len(r) for r in rings])])
+    xy = np.asarray([p for r in rings for p in r], dtype=np.float64)
+    return xy.reshape(-1, 2), offsets
+
+
+class TestCsrRingKernels:
+    """The batch-wide CSR ring kernels (flat coordinates plus offsets)
+    against the per-ring loops they replaced, bit for bit."""
+
+    @staticmethod
+    def _ref_samples(coords, res):
+        """The per-ring sampling loop: n = ceil(length / step) steps
+        per segment, n + 1 points each."""
+        from h3_indexer_spark.functions.h3 import coverage
+
+        step = (coverage._EDGE_KM[res] / coverage._EARTH_KM
+                * (180.0 / math.pi) * 0.75)
+        lats, lngs = [], []
+        for (x1, y1), (x2, y2) in zip(coords, coords[1:]):
+            n = max(1, int(math.ceil(math.hypot(x2 - x1, y2 - y1) / step)))
+            f = np.arange(n + 1) / n
+            lats.append(y1 + f * (y2 - y1))
+            lngs.append(x1 + f * (x2 - x1))
+        return np.concatenate(lats), np.concatenate(lngs)
+
+    def _paths(self, rng):
+        """Two-vertex lines, lines with a zero-length segment, open and
+        closed rings, rings in the [0, 360) wrap frame, and holes."""
+        paths = []
+        for i in range(60):
+            cx, cy = rng.uniform(-100.0, -80.0), rng.uniform(30.0, 45.0)
+            if i % 5 == 0:
+                paths.append([(cx, cy), (cx + rng.uniform(-1, 1), cy + 0.3)])
+            elif i % 5 == 1:
+                line = [(cx, cy), (cx + 0.4, cy - 0.2), (cx + 0.4, cy - 0.2),
+                        (cx + 0.9, cy)]
+                paths.append(line)
+            elif i % 5 == 4:
+                paths.append(_star_ring(rng, rng.uniform(179.0, 181.0), cy,
+                                        0.8, 9, closed=i % 2 == 0))
+            else:
+                outer = _star_ring(rng, cx, cy, 0.6, int(rng.integers(4, 30)),
+                                   closed=i % 2 == 0)
+                paths.append(outer)
+                paths.append(_star_ring(rng, cx, cy, 0.15, 6, closed=True))
+        return paths
+
+    @pytest.mark.parametrize("res", [3, 4, 6])
+    def test_sample_paths_matches_per_ring_loop(self, res):
+        from h3_indexer_spark.functions.h3 import coverage
+
+        rng = np.random.default_rng(41 + res)
+        paths = self._paths(rng)
+        xy, offsets = _csr(paths)
+        lats, lngs, soff = coverage.sample_paths(xy, offsets, res)
+        assert soff[0] == 0 and soff[-1] == len(lats) == len(lngs)
+        for i, path in enumerate(paths):
+            ref_lat, ref_lng = self._ref_samples(path, res)
+            assert np.array_equal(lats[soff[i]:soff[i + 1]], ref_lat)
+            assert np.array_equal(lngs[soff[i]:soff[i + 1]], ref_lng)
+            one_lat, one_lng = coverage.line_sample_points(path, res)
+            assert np.array_equal(one_lat, ref_lat)
+            assert np.array_equal(one_lng, ref_lng)
+
+    def test_sample_paths_skips_paths_without_segments(self):
+        from h3_indexer_spark.functions.h3 import coverage
+
+        paths = [[(1.0, 2.0)], [(0.0, 0.0), (0.5, 0.5)], [], [(3.0, 3.0)]]
+        xy, offsets = _csr(paths)
+        _, _, soff = coverage.sample_paths(xy, offsets, 4)
+        counts = np.diff(soff).tolist()
+        assert counts[0] == counts[2] == counts[3] == 0
+        assert counts[1] == len(self._ref_samples(paths[1], 4)[0])
+
+    def _polygons(self, rng, wrap_frame):
+        polys = []
+        for i in range(40):
+            cx = rng.uniform(179.0, 181.0) if wrap_frame else rng.uniform(
+                -100.0, -80.0)
+            cy = rng.uniform(30.0, 45.0)
+            outer = _star_ring(rng, cx, cy, 0.7, int(rng.integers(4, 40)),
+                               closed=i % 3 != 0)
+            holes = [
+                _star_ring(rng, cx + dx, cy, 0.12, int(rng.integers(3, 8)),
+                           closed=i % 2 == 0)
+                for dx in (-0.2, 0.25)[: i % 3]
+            ]
+            polys.append([outer, *holes])
+        return polys
+
+    @pytest.mark.parametrize("wrap_frame", [False, True])
+    @pytest.mark.parametrize("pair_chunk", [None, 7])
+    def test_points_in_polygons_matches_per_ring_test(
+        self, wrap_frame, pair_chunk, monkeypatch
+    ):
+        from h3_indexer_spark.functions.h3 import coverage
+
+        if pair_chunk:
+            monkeypatch.setattr(coverage, "_PAIR_CHUNK", pair_chunk)
+        rng = np.random.default_rng(7 if wrap_frame else 8)
+        polys = self._polygons(rng, wrap_frame)
+        xy, ring_off = _csr([r for rings in polys for r in rings])
+        part_off = np.concatenate([[0], np.cumsum([len(p) for p in polys])])
+        lng, lat, part = [], [], []
+        for p, rings in enumerate(polys):
+            pts = np.asarray(rings[0])
+            x0, y0 = pts.min(axis=0)
+            x1, y1 = pts.max(axis=0)
+            n = 300
+            lng.append(rng.uniform(x0 - 0.05, x1 + 0.05, n))
+            # a third of the points on vertex latitudes: the edge-band
+            # bounds must match (y1 > lat) != (y2 > lat) exactly
+            la = rng.uniform(y0 - 0.05, y1 + 0.05, n)
+            verts = np.asarray([v for r in rings for v in r])
+            la[: n // 3] = verts[rng.integers(0, len(verts), n // 3), 1]
+            lat.append(la)
+            part.append(np.full(n, p))
+        lng, lat, part = map(np.concatenate, (lng, lat, part))
+        # the first vertex of every outer ring, exactly
+        lng = np.concatenate([lng, xy[ring_off[part_off[:-1]], 0]])
+        lat = np.concatenate([lat, xy[ring_off[part_off[:-1]], 1]])
+        part = np.concatenate([part, np.arange(len(polys))])
+
+        got = coverage.points_in_polygons(
+            lng, lat, part, xy, ring_off, part_off
+        )
+        want = np.zeros(len(lng), dtype=bool)
+        for p, (outer, *holes) in enumerate(polys):
+            m = part == p
+            inside = coverage._points_in_ring_v(lng[m], lat[m], outer)
+            for hole in holes:
+                inside &= ~coverage._points_in_ring_v(lng[m], lat[m], hole)
+            want[m] = inside
+        assert np.array_equal(got, want)
+        assert 0 < want.sum() < len(want)
+
+    @pytest.mark.parametrize("res", [4, 6])
+    def test_polyfill_many_matches_polyfill(self, res):
+        from h3_indexer_spark.functions.h3 import coverage
+
+        rng = np.random.default_rng(90 + res)
+        polys = self._polygons(rng, wrap_frame=False)[:15]
+        xy, ring_off = _csr([r for rings in polys for r in rings])
+        part_off = np.concatenate([[0], np.cumsum([len(p) for p in polys])])
+        bounds = [
+            coverage.line_cells(rings[0] + [rings[0][0]], res)
+            for rings in polys
+        ]
+        b_off = np.concatenate([[0], np.cumsum([len(b) for b in bounds])])
+        cells, off = coverage.polyfill_many(
+            xy, ring_off, part_off,
+            np.asarray([c for b in bounds for c in b], dtype=np.int64),
+            b_off, np.zeros(len(polys), dtype=bool), res,
+        )
+        for p, (outer, *holes) in enumerate(polys):
+            want = coverage.polyfill(
+                outer, res, holes=holes or None, boundary_cells=bounds[p]
+            )
+            assert cells[off[p]:off[p + 1]].tolist() == want
+
+    def test_dedupe_segments_matches_dedupe_cells(self):
+        from h3_indexer_spark.functions.h3 import coverage
+
+        rng = np.random.default_rng(3)
+        segs = [rng.integers(0, 6, int(rng.integers(0, 12))) for _ in range(50)]
+        cells = np.concatenate(segs).astype(np.int64)
+        offsets = np.concatenate([[0], np.cumsum([len(s) for s in segs])])
+        got, got_off = coverage.dedupe_segments(cells, offsets)
+        for i, seg in enumerate(segs):
+            assert got[got_off[i]:got_off[i + 1]].tolist() == \
+                coverage.dedupe_cells(seg)
+
+    def test_planar_ring_areas_match_scalar(self):
+        from h3_indexer_spark.functions import geodesy, udfs
+
+        rng = np.random.default_rng(5)
+        rings = [
+            _star_ring(rng, rng.uniform(-100, -80), rng.uniform(30, 45),
+                       0.5, int(rng.integers(3, 50)), closed=False)
+            for _ in range(40)
+        ] + [[(0.0, 0.0), (1.0, 1.0)]]
+        xy, off = _csr(rings)
+        nv = np.diff(off)
+        got = geodesy.planar_ring_areas(udfs._pad_rings(xy, off[:-1], nv), nv)
+        assert got.tolist() == [geodesy.planar_polygon_area(r) for r in rings]

@@ -10,10 +10,13 @@ reference's documented invariants (README.md:278-341):
 
 from __future__ import annotations
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from h3_indexer_spark.config.job import Job, JobStatus
+from h3_indexer_spark.functions import geometry
 from h3_indexer_spark.plans.indexer import index_job
 from h3_indexer_spark.plans.resolver import resolve_job
 from h3_indexer_spark.plans.validator import ValidationError, validate_config
@@ -145,10 +148,79 @@ class TestValidate:
         )
         job = _job(fixture_dir, {"pts": spec})
         validate_config(job, spark)
-        kept = job.inputs["pts"].df.count()
+        vt = job.inputs["pts"]
+        kept = vt.df.count()
         total = spark.read.parquet(spec["path"]).count()
         assert kept < total  # nulls + malformed dropped
         assert kept > total * 0.9
+
+        def accepted(v):
+            if v is None:
+                return False
+            try:
+                parts = geometry.parse_any_parts(v)
+                return any(geometry.repair(k, r) is not None for k, r in parts)
+            except Exception:
+                return False
+
+        source = pq.read_table(spec["path"], columns=["geometry"])
+        assert kept == sum(map(accepted, source.column("geometry").to_pylist()))
+        src_schema = spark.read.parquet(spec["path"]).schema
+        assert [(f.name, f.dataType) for f in vt.df.schema.fields] == [
+            (f.name, f.dataType) for f in src_schema.fields
+        ] + [("geom_wkt", StringType())]
+
+    @pytest.mark.parametrize("files", [1, 8])
+    def test_geometry_canonicalized_once(self, spark, fixture_dir, tmp_path, files):
+        """The canonical-geometry UDF runs once per row: the validated
+        frame's executed plan has exactly one Python node evaluating it,
+        and for a one-row-group input that node sits above the reader's
+        round-robin rebalance, not in the scan's single task."""
+        spec = _polygons_input(fixture_dir)
+        if files > 1:
+            table = pq.read_table(spec["path"])
+            step = -(-table.num_rows // files)
+            for i in range(files):
+                pq.write_table(table.slice(i * step, step),
+                               tmp_path / f"part-{i}.parquet")
+            spec["path"] = str(tmp_path)
+        job = _job(fixture_dir, {"polys": spec})
+        validate_config(job, spark)
+        df = job.inputs["polys"].df
+        df.count()
+
+        def walk(node, below_exchange=False):
+            """(node string, is below a round-robin exchange) pairs of
+            the executed plan, entering the persisted relation."""
+            text = node.simpleString(400)
+            name = node.nodeName()
+            if name == "AdaptiveSparkPlan":
+                kids = [node.executedPlan()]
+            elif name.endswith("QueryStage"):
+                kids = [node.plan()]
+            elif name == "InMemoryTableScan":
+                kids = [node.relation().cachedPlan()]
+            else:
+                it = node.children().iterator()
+                kids = []
+                while it.hasNext():
+                    kids.append(it.next())
+            out = [(text, below_exchange)]
+            below = below_exchange or "RoundRobinPartitioning" in text
+            for k in kids:
+                out += walk(k, below)
+            return out
+
+        nodes = walk(df._jdf.queryExecution().executedPlan())
+        udf_nodes = [
+            below for text, below in nodes
+            if text.startswith("ArrowEvalPython")
+            and "canonical_wkt_udf" in text
+        ]
+        assert udf_nodes == [False]
+        rebalanced = any("RoundRobinPartitioning" in t for t, _ in nodes)
+        assert rebalanced == (files == 1)
+        assert df.count() == pq.read_table(spec["path"]).num_rows
 
 
 class TestIndexPoints:
