@@ -9,7 +9,7 @@ equivalent of the reference's distinct-then-join-back optimization
 from __future__ import annotations
 
 from functools import lru_cache
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -292,14 +292,42 @@ def _index_polygons(
 
 # --- batched allocation: numpy over every (part, cell) pair of a batch ----
 #
-# The scalar allocators above clip one candidate cell at a time in
-# Python — the round-1 scale limiter (~7.2k polygons/s flat). The
-# functions below compute identical ratios for ALL features of an Arrow
-# batch at once: one exact-IJK neighbor expansion, one boundary batch,
-# and one vectorized Sutherland-Hodgman / Cyrus-Beck kernel call over
-# the stacked (part, cell) pairs, plus an interior fast path (cells not
-# within one ring of any boundary cell keep the full hexagon area
-# without clipping — O(perimeter) clip work instead of O(area)).
+# Phase 1 of the Index kernel (_batch_layout) lays a batch out once, as
+# a _Batch of CSR ("compressed sparse row": flat values plus offsets)
+# arrays. Both batch allocators take that layout as it is, with the
+# ascending features to allocate, and return (feature, cell, ratio,
+# metric) row arrays whose cells and ratios are the scalar allocators'.
+
+_POINT, _LINE, _POLYGON = 0, 1, 2  # part kinds
+_KINDS = {"point": _POINT, "line": _LINE, "polygon": _POLYGON}
+
+
+class _Batch(NamedTuple):
+    """The layout of one batch; every field is a numpy array."""
+
+    # (V, 2) every (lng, lat) vertex, antimeridian crossers shifted into
+    # the [0, 360) frame
+    xy: np.ndarray
+    # (R + 1,) ring r is xy[ring_off[r]:ring_off[r + 1]], as parsed (a
+    # polygon ring may end with its first vertex again)
+    ring_off: np.ndarray
+    # (P + 1,) part p owns rings part_off[p] … part_off[p + 1] − 1, a
+    # polygon's outer ring first
+    part_off: np.ndarray
+    # (P,) _POINT, _LINE or _POLYGON
+    part_kind: np.ndarray
+    # (P,) each part's feature; a feature's parts are consecutive and of
+    # one kind (as geometry.parse_wkt_parts returns them)
+    part_feat: np.ndarray
+    # (F,) the feature crosses the antimeridian
+    wrap: np.ndarray
+    # (P, 2) part p's samples are cells[span[p, 0]:span[p, 1]]: a
+    # point's vertex, a line's or a polygon's closed outer ring's path
+    # samples, none for a CENTROID polygon; a feature's parts' spans
+    # are consecutive
+    span: np.ndarray
+    # (S,) the cell of every sample
+    cells: np.ndarray
 
 
 def _ring_csr(rings):
@@ -388,165 +416,189 @@ def _shift_wrapped(bpts, wrap_mask):
     return bpts
 
 
-def _grouped_neighbors(cell_lists):
-    """One-ring expansion for many cell lists via a single batched
-    exact-IJK neighbor call. Returns (expanded_lists, nbmap) where
-    expanded_lists[i] preserves _expand_with_neighbors order and nbmap
-    maps every input cell to its neighbor list."""
+def _batch_layout(features, res: int, method: AllocationMethod) -> _Batch:
+    """Phase 1 of the Index kernel: lay parsed features (each a list of
+    ``(kind, rings)`` parts, as geometry.parse_wkt_parts returns) out
+    as a _Batch. Antimeridian crossers shift into the [0, 360) frame;
+    every line and every polygon's closed outer ring is sampled by ONE
+    sample_paths call (CENTROID polygons are not sampled), and every
+    sample and point is indexed by one vectorized call."""
     import numpy as np
 
-    flat = [c for lst in cell_lists for c in lst]
-    if not flat:
-        return [list(lst) for lst in cell_lists], {}
-    uniq = np.unique(np.asarray(flat, dtype=np.int64))
-    nb = coverage.cell_neighbors_batch(uniq)
-    nbmap = {}
-    for c, row in zip(uniq.tolist(), nb):
-        nbmap[c] = [int(x) for x in row if x]
-    out = []
-    for lst in cell_lists:
-        seen = dict.fromkeys(lst)
-        for c in lst:
-            for x in nbmap[c]:
-                seen.setdefault(x)
-        out.append(list(seen))
-    return out, nbmap
+    from h3_indexer_spark.functions.h3.vectorized import latlng_to_cell_batch
+
+    parts = [p for feat in features for p in feat]
+    xy, ring_off = _ring_csr([r for _, rings in parts for r in rings])
+    n_rings = np.fromiter((len(r) for _, r in parts), np.int64, len(parts))
+    part_off = np.concatenate([[0], np.cumsum(n_rings)])
+    part_kind = np.fromiter(
+        (_KINDS[k] for k, _ in parts), np.int64, len(parts)
+    )
+    part_feat = np.repeat(
+        np.arange(len(features)),
+        np.fromiter(map(len, features), np.int64, len(features)),
+    )
+    xy, wrap = _unwrap_antimeridian(
+        xy, ring_off, np.repeat(part_feat, n_rings), len(features)
+    )
+    # each part's first ring: a point's vertex, a line, an outer ring
+    lo = ring_off[part_off[:-1]]
+    n = ring_off[part_off[:-1] + 1] - lo
+    is_point = part_kind == _POINT
+    is_path = (part_kind == _LINE) | (
+        (part_kind == _POLYGON) & (method != AllocationMethod.CENTROID)
+    )
+    lo_p, n_p = lo[is_path], n[is_path]
+    close = (part_kind[is_path] == _POLYGON) & (
+        xy[lo_p] != xy[lo_p + n_p - 1]
+    ).any(axis=1)
+    lats, lngs, soff = coverage.sample_paths(
+        *_closed_paths(xy, lo_p, n_p, close), res
+    )
+    pv = lo[is_point]
+    cells = latlng_to_cell_batch(
+        np.concatenate([lats, xy[pv, 1]]),
+        np.concatenate([lngs, xy[pv, 0]]),
+        res,
+    )
+    span = np.zeros((len(parts), 2), dtype=np.int64)
+    span[is_path] = np.stack([soff[:-1], soff[1:]], axis=1)
+    span[is_point, 0] = soff[-1] + np.arange(pv.shape[0])
+    span[is_point, 1] = span[is_point, 0] + 1
+    return _Batch(xy, ring_off, part_off, part_kind, part_feat, wrap, span,
+                  cells)
 
 
-def _index_lines_batch(line_feats, res: int, method: AllocationMethod,
-                       sample_cells):
-    """Batched LINE allocation for [(uid, plist, wrap)] features;
-    returns (uids, cells, ratios, metrics) row lists. Ratios are
-    identical to _index_lines (same clip arithmetic, vectorized)."""
+def _sampled_cells(b: _Batch, feats):
+    """Each of the features ``feats``' distinct nonzero sample cells in
+    first-occurrence order (dedupe_cells over its parts' samples, which
+    are one span), as CSR ``(cells, offsets)``."""
+    import numpy as np
+
+    lo = b.span[np.searchsorted(b.part_feat, feats), 0]
+    hi = b.span[np.searchsorted(b.part_feat, feats, side="right") - 1, 1]
+    return coverage.dedupe_segments(
+        b.cells[coverage.ranges(lo, hi - lo)],
+        np.concatenate([[0], np.cumsum(hi - lo)]),
+    )
+
+
+def _expand_candidates(cells, offsets, uniq, nb):
+    """_expand_with_neighbors over every CSR segment of distinct nonzero
+    ``cells`` at once: each segment's cells, then their neighbors (cell
+    by cell, in row order), deduped. ``nb`` is cell_neighbors_batch of
+    ``uniq``, a sorted array holding every cell. Returns ``(cand,
+    cand_off, own)``: the candidates in the same CSR layout, and which
+    of them are the segment's own cells (they lead their segment)."""
+    import numpy as np
+
+    n = offsets.shape[0] - 1
+    seg = np.repeat(np.arange(n), np.diff(offsets))
+    src = np.concatenate([cells, nb[np.searchsorted(uniq, cells)].ravel()])
+    key = np.concatenate([2 * seg, 2 * np.repeat(seg, 6) + 1])
+    order = np.argsort(key, kind="stable")
+    cand, cand_off = coverage.dedupe_segments(
+        src[order], np.searchsorted(key[order], 2 * np.arange(n + 1))
+    )
+    cand_len = np.diff(cand_off)
+    own = coverage.ranges(0, cand_len) < np.repeat(np.diff(offsets), cand_len)
+    return cand, cand_off, own
+
+
+def _feature_pairs(n_a, n_b):
+    """Every (a, b) pair of each feature ``f``'s ``n_a[f] × n_b[f]``
+    grid, a-major: ``(feat, a, b)`` with a and b local to the feature."""
+    import numpy as np
+
+    size = n_a * n_b
+    feat = np.repeat(np.arange(size.shape[0]), size)
+    a, b = np.divmod(coverage.ranges(0, size), np.maximum(n_b, 1)[feat])
+    return feat, a, b
+
+
+def _index_lines_batch(b: _Batch, feats, method: AllocationMethod):
+    """LINE allocation of the batch features ``feats`` (ascending; a
+    MULTILINESTRING allocates across the union of its parts): returns
+    ``(feat, cells, ratios, metrics)`` row arrays with _index_lines'
+    cells and ratios (the same clip arithmetic, vectorized over every
+    (candidate, segment) pair of the batch)."""
     import numpy as np
 
     from h3_indexer_spark.functions.h3 import clipbatch
     from h3_indexer_spark.functions.h3.vectorized import cell_boundary_batch
 
-    uids_out: list = []
-    cells_out: list = []
-    ratios_out: list = []
-    metrics_out: list = []
-
-    sampled_lists = []
-    lines_f = []
-    for _, plist, _ in line_feats:
-        sampled = list(
-            dict.fromkeys(
-                c
-                for _, _, lo, hi in plist
-                for c in coverage.dedupe_cells(sample_cells[lo:hi])
-            )
-        )
-        sampled_lists.append(sampled)
-        lines_f.append([rings[0] for _, rings, _, _ in plist])
-    # total_length_km metric: one batched Vincenty call over every
-    # segment of the batch instead of per-segment scalar iteration
-    seg_p1, seg_p2, seg_feat = [], [], []
-    for fi, lines in enumerate(lines_f):
-        for line in lines:
-            a = np.asarray(line, dtype=np.float64)
-            seg_p1.append(a[:-1])
-            seg_p2.append(a[1:])
-            seg_feat.append(np.full(len(a) - 1, fi, dtype=np.int64))
-    metrics_arr = np.zeros(len(line_feats), dtype=np.float64)
-    if seg_p1:
-        P1m = np.concatenate(seg_p1)
-        P2m = np.concatenate(seg_p2)
-        dists = geodesy.vincenty_distance_m_batch(
-            P1m[:, 1], P1m[:, 0], P2m[:, 1], P2m[:, 0]
-        )
-        np.add.at(metrics_arr, np.concatenate(seg_feat), dists)
-    metrics_f = (metrics_arr / 1000.0).tolist()
+    F = feats.shape[0]
+    parts = np.nonzero(np.isin(b.part_feat, feats))[0]
+    # the batch's segments, feature by feature: segment k runs from
+    # vertex v1[k] to v1[k] + 1
+    lo = b.ring_off[b.part_off[parts]]
+    n_seg = b.ring_off[b.part_off[parts] + 1] - lo - 1
+    v1 = coverage.ranges(lo, n_seg)
+    seg_f = np.repeat(np.searchsorted(feats, b.part_feat[parts]), n_seg)
+    p1, p2 = b.xy[v1], b.xy[v1 + 1]
+    # total_length_km metric: one batched Vincenty call
+    metric = np.bincount(
+        seg_f,
+        geodesy.vincenty_distance_m_batch(p1[:, 1], p1[:, 0], p2[:, 1],
+                                          p2[:, 0]),
+        minlength=F,
+    ) / 1000.0
+    sampled, s_off = _sampled_cells(b, feats)
     if method == AllocationMethod.PASS_THROUGH:
-        for (uid, _, _), sampled, metric in zip(
-            line_feats, sampled_lists, metrics_f
-        ):
-            for c in sampled:
-                uids_out.append(uid)
-                cells_out.append(c)
-                ratios_out.append(1.0)
-                metrics_out.append(metric)
-        return uids_out, cells_out, ratios_out, metrics_out
+        row_f = np.repeat(np.arange(F), np.diff(s_off))
+        return feats[row_f], sampled, np.ones(row_f.shape[0]), metric[row_f]
 
-    cand_lists, _ = _grouped_neighbors(sampled_lists)
-
-    seg_arrs = []
-    total_len_f = []
-    for lines in lines_f:
-        pts = [np.asarray(line, dtype=np.float64) for line in lines]
-        p1 = np.concatenate([a[:-1] for a in pts])
-        p2 = np.concatenate([a[1:] for a in pts])
-        seg_arrs.append((p1, p2))
-        d = p2 - p1
-        total_len_f.append(float(np.hypot(d[:, 0], d[:, 1]).sum()))
-
-    offsets = np.cumsum([0] + [len(c) for c in cand_lists])
-    pair_cell, pair_p1, pair_p2, pair_acc, pair_wrap = [], [], [], [], []
-    for fi, (cands, (p1, p2)) in enumerate(zip(cand_lists, seg_arrs)):
-        C, S = len(cands), len(p1)
-        if C == 0 or S == 0:
-            continue
-        carr = np.asarray(cands, dtype=np.int64)
-        pair_cell.append(np.repeat(carr, S))
-        pair_p1.append(np.tile(p1, (C, 1)))
-        pair_p2.append(np.tile(p2, (C, 1)))
-        pair_acc.append(np.repeat(np.arange(C) + offsets[fi], S))
-        pair_wrap.append(
-            np.full(C * S, bool(line_feats[fi][2]), dtype=bool)
+    uniq = np.unique(sampled)
+    cand, cand_off, own = _expand_candidates(
+        sampled, s_off, uniq, coverage.cell_neighbors_batch(uniq)
+    )
+    cand_f = np.repeat(np.arange(F), np.diff(cand_off))
+    # each feature's planar length, summed in segment order
+    d = p2 - p1
+    total = np.bincount(seg_f, np.hypot(d[:, 0], d[:, 1]), minlength=F)
+    seg_off = np.concatenate([[0], np.cumsum(np.bincount(seg_f, minlength=F))])
+    pair_f, c_local, s_local = _feature_pairs(
+        np.diff(cand_off), np.diff(seg_off)
+    )
+    pair_cand = cand_off[pair_f] + c_local
+    pair_seg = seg_off[pair_f] + s_local
+    uniqc, inv = np.unique(cand[pair_cand], return_inverse=True)
+    bpts, bnv = cell_boundary_batch(uniqc)
+    pair_wrap = b.wrap[feats][pair_f]
+    lengths = np.empty(pair_cand.shape[0], dtype=np.float64)
+    step = 1 << 18
+    for s in range(0, lengths.shape[0], step):
+        sl = slice(s, s + step)
+        lengths[sl] = clipbatch.clip_line_length_pairs(
+            p1[pair_seg[sl]],
+            p2[pair_seg[sl]],
+            _shift_wrapped(bpts[inv[sl]], pair_wrap[sl]),
+            bnv[inv[sl]],
         )
-
-    acc = np.zeros(int(offsets[-1]), dtype=np.float64)
-    if pair_cell:
-        pc = np.concatenate(pair_cell)
-        P1 = np.concatenate(pair_p1)
-        P2 = np.concatenate(pair_p2)
-        acc_idx = np.concatenate(pair_acc)
-        wrap_arr = np.concatenate(pair_wrap)
-        uniqc, inv = np.unique(pc, return_inverse=True)
-        bpts, bnv = cell_boundary_batch(uniqc)
-        lengths = np.empty(len(pc), dtype=np.float64)
-        step = 1 << 18
-        for lo in range(0, len(pc), step):
-            sl = slice(lo, min(lo + step, len(pc)))
-            lengths[sl] = clipbatch.clip_line_length_pairs(
-                P1[sl],
-                P2[sl],
-                _shift_wrapped(bpts[inv[sl]], wrap_arr[sl]),
-                bnv[inv[sl]],
-            )
-        np.add.at(acc, acc_idx, lengths)
-
-    for fi, (uid, _, _) in enumerate(line_feats):
-        sampled_set = set(sampled_lists[fi])
-        tot = total_len_f[fi]
-        metric = metrics_f[fi]
-        vals = acc[offsets[fi] : offsets[fi + 1]]
-        for c, ln in zip(cand_lists[fi], vals):
-            ratio = ln / tot if tot > 0 else 0.0
-            if ratio > 0.0 or c in sampled_set:
-                uids_out.append(uid)
-                cells_out.append(c)
-                ratios_out.append(ratio)
-                metrics_out.append(metric)
-    return uids_out, cells_out, ratios_out, metrics_out
+    kept = np.bincount(pair_cand, lengths, minlength=cand.shape[0])
+    tot = total[cand_f]
+    ratio = np.zeros(cand.shape[0], dtype=np.float64)
+    np.divide(kept, tot, out=ratio, where=tot > 0)
+    out = np.nonzero((ratio > 0.0) | own)[0]
+    return feats[cand_f[out]], cand[out], ratio[out], metric[cand_f[out]]
 
 
-def _index_polygons_batch(poly_feats, res: int, method: AllocationMethod,
-                          sample_cells):
-    """Batched POLYGON allocation for [(uid, plist, wrap)] features
-    (non-CENTROID methods); returns (uids, cells, ratios, metrics).
+def _index_polygons_batch(b: _Batch, feats, res: int):
+    """POLYGON allocation of the batch features ``feats`` (ascending;
+    every method but CENTROID allocates by area): returns ``(feat, cells, ratios, metrics)``
+    row arrays with _index_polygons' cells and ratios.
 
-    Candidate cells and ratios are identical to _index_polygons. The
-    batch's rings are laid out once as CSR arrays (every part's outer
-    ring, then its holes); the metric and planar areas, the hole
-    boundary cells, the coverage (one polyfill_many pass over every
-    part) and the clip padding all read those arrays. The area of each
-    (ring, cell) clip comes from the vectorized kernel, and cells
-    provably interior (in the polyfill set and not within one ring of
-    any outer/hole boundary cell — sampling guarantees every
-    boundary-crossed cell is within one ring of a sampled one) skip
-    clipping entirely and keep the full hexagon area."""
+    The features' rings are opened (a ring's count drops by one where
+    its last vertex repeats its first, as _split_outer_holes drops it)
+    and gathered into one CSR layout (every part's outer ring, then its
+    holes); the metric and planar areas, the hole boundary cells, the
+    coverage (one polyfill_many pass over every part) and the clip
+    padding all read it. The area of each (ring, cell) clip comes from
+    the vectorized kernel, and cells provably interior (in the polyfill
+    set and not within one ring of any outer/hole boundary cell —
+    sampling guarantees every boundary-crossed cell is within one ring
+    of a sampled one) skip clipping entirely and keep the full hexagon
+    area."""
     import numpy as np
 
     from h3_indexer_spark.functions.h3 import clipbatch
@@ -555,29 +607,27 @@ def _index_polygons_batch(poly_feats, res: int, method: AllocationMethod,
         latlng_to_cell_batch,
     )
 
-    F = len(poly_feats)
-
-    # every ring opened as _split_outer_holes does; part p owns rings
-    # part_off[p]…part_off[p + 1] − 1, its outer ring first
-    rings, part_rings, part_feat, part_span = [], [], [], []
-    for fi, (_, plist, _) in enumerate(poly_feats):
-        for _, prings, lo, hi in plist:
-            outer, holes = _split_outer_holes(prings)
-            rings.append(outer)
-            rings.extend(holes)
-            part_rings.append(1 + len(holes))
-            part_feat.append(fi)
-            part_span.append((lo, hi))
-    xy, ring_off = _ring_csr(rings)
-    n_rings = len(rings)
+    F = feats.shape[0]
+    parts = np.nonzero(np.isin(b.part_feat, feats))[0]
+    P = parts.shape[0]
+    part_feat = np.searchsorted(feats, b.part_feat[parts])
+    part_rings = np.diff(b.part_off)[parts]
+    # the parts' rings, opened, in their own CSR layout: part p owns
+    # rings part_off[p]…part_off[p + 1] − 1, its outer ring first
+    rid = coverage.ranges(b.part_off[parts], part_rings)
+    start = b.ring_off[rid]
+    ring_len = np.diff(b.ring_off)[rid]
+    ring_len -= (b.xy[start] == b.xy[start + ring_len - 1]).all(axis=1)
+    xy = b.xy[coverage.ranges(start, ring_len)]
+    ring_off = np.concatenate([[0], np.cumsum(ring_len)])
+    n_rings = rid.shape[0]
     part_off = np.concatenate([[0], np.cumsum(part_rings)])
-    part_feat = np.asarray(part_feat, dtype=np.int64)
-    ring_feat = np.repeat(part_feat, part_rings)
+    ring_part = np.repeat(np.arange(P), part_rings)
+    ring_feat = part_feat[ring_part]
     is_outer = np.zeros(n_rings, dtype=bool)
     is_outer[part_off[:-1]] = True
     feat_ring_off = np.searchsorted(ring_feat, np.arange(F + 1))
-    wrap_f = np.asarray([bool(w) for _, _, w in poly_feats], dtype=bool)
-    ring_len = np.diff(ring_off)
+    wrap_f = b.wrap[feats]
 
     # total_area_km2 metric and the planar total area: one padded array
     # of every ring, with a closing vertex that survived the opening
@@ -590,39 +640,30 @@ def _index_polygons_batch(poly_feats, res: int, method: AllocationMethod,
     signed_m2 = np.where(is_outer, 1.0, -1.0) * geodesy.spheroid_ring_areas_m2(
         padded, nv
     )
-    metrics_arr = np.zeros(F, dtype=np.float64)
-    np.add.at(metrics_arr, ring_feat, signed_m2)
-    metrics_f = (metrics_arr / 1.0e6).tolist()
-    planar = geodesy.planar_ring_areas(padded, nv).tolist()
-    total_area_f = [0] * F
-    for p, fi in enumerate(part_feat.tolist()):
-        r0, r1 = part_off[p], part_off[p + 1]
-        total_area_f[fi] += planar[r0] - sum(planar[r0 + 1 : r1])
+    metric = np.bincount(ring_feat, signed_m2, minlength=F) / 1.0e6
+    planar = geodesy.planar_ring_areas(padded, nv)
+    holes = np.bincount(ring_part[~is_outer], planar[~is_outer], minlength=P)
+    total_area = np.bincount(part_feat, planar[is_outer] - holes, minlength=F)
 
-    # boundary cells: an outer ring's own samples; holes (and an outer
-    # ring sampled by nobody) are closed, sampled and indexed here in
-    # one call
-    span = np.asarray(part_span, dtype=np.int64).reshape(-1, 2)
-    unsampled = ~is_outer
-    unsampled[part_off[:-1]] = span[:, 1] <= span[:, 0]
-    nr = np.nonzero(unsampled)[0]
+    # boundary cells: an outer ring's own samples (phase 1 sampled it);
+    # holes are closed, sampled and indexed here in one call
+    span = b.span[parts]
+    nr = np.nonzero(~is_outer)[0]
     la, ln, soff = coverage.sample_paths(
         *_closed_paths(xy, ring_off[nr], ring_len[nr], True), res
     )
-    # segments 0…P−1 are the parts' own spans (empty when unsampled),
-    # then one per ring in nr
-    own_len = np.maximum(span[:, 1] - span[:, 0], 0)
+    # segments 0…P−1 are the parts' own spans, then one per hole
+    own_len = span[:, 1] - span[:, 0]
     seg_cells = np.concatenate(
-        [np.asarray(sample_cells, dtype=np.int64)[
-            coverage.ranges(span[:, 0], own_len)],
+        [b.cells[coverage.ranges(span[:, 0], own_len)],
          latlng_to_cell_batch(la, ln, res)]
     )
     seg_off = np.concatenate(
         [[0], np.cumsum(own_len), own_len.sum() + soff[1:]]
     )
     uc, uoff = coverage.dedupe_segments(seg_cells, seg_off)
-    ring_seg = np.repeat(np.arange(len(part_span)), part_rings)
-    ring_seg[nr] = len(part_span) + np.arange(nr.shape[0])
+    ring_seg = ring_part.copy()
+    ring_seg[nr] = P + np.arange(nr.shape[0])
     # every ring's boundary cells, CSR in ring order
     rc_len = np.diff(uoff)[ring_seg]
     rc_off = np.concatenate([[0], np.cumsum(rc_len)])
@@ -639,7 +680,6 @@ def _index_polygons_batch(poly_feats, res: int, method: AllocationMethod,
     pf_cells, pf_off = coverage.dedupe_segments(
         fill_cells, fill_off[np.searchsorted(part_feat, np.arange(F + 1))]
     )
-    pf_feat = np.repeat(np.arange(F), np.diff(pf_off))
 
     # edge cells: every outer/hole boundary cell and its neighbors
     edge_feat = np.repeat(ring_feat, rc_len)
@@ -649,15 +689,7 @@ def _index_polygons_batch(poly_feats, res: int, method: AllocationMethod,
     edge_cells = np.concatenate([rc_cells, edge_nb])
     edge_feat = np.concatenate([edge_feat, np.repeat(edge_feat, 6)])
     # candidates: each feature's coverage, then its cells' neighbors
-    # (row order), deduped — the _expand_with_neighbors order
-    pf_nb = nb[np.searchsorted(uniq, pf_cells)].ravel()
-    src_cells = np.concatenate([pf_cells, pf_nb])
-    src_key = np.concatenate([2 * pf_feat, 2 * np.repeat(pf_feat, 6) + 1])
-    order = np.argsort(src_key, kind="stable")
-    cand_cells, offsets = coverage.dedupe_segments(
-        src_cells[order],
-        np.searchsorted(src_key[order], 2 * np.arange(F + 1)),
-    )
+    cand_cells, offsets, in_pf = _expand_candidates(pf_cells, pf_off, uniq, nb)
     cand_feat = np.repeat(np.arange(F), np.diff(offsets))
     kept = np.zeros(cand_cells.shape[0], dtype=np.float64)
 
@@ -668,24 +700,19 @@ def _index_polygons_batch(poly_feats, res: int, method: AllocationMethod,
     def keys(feat, cells):
         return feat * width + np.searchsorted(ids, cells)
 
-    cand_key = keys(cand_feat, cand_cells)
-    in_pf = np.isin(cand_key, keys(pf_feat, pf_cells))
-    interior = in_pf & ~np.isin(cand_key, keys(edge_feat, edge_cells))
+    interior = in_pf & ~np.isin(
+        keys(cand_feat, cand_cells), keys(edge_feat, edge_cells)
+    )
     interior_acc = np.nonzero(interior)[0]
     interior_cells = cand_cells[interior_acc]
     interior_wrap = wrap_f[cand_feat[interior_acc]]
 
-    # clip pairs, feature by feature: every non-interior candidate
-    # against each of the feature's rings (outer +, holes −)
+    # clip pairs: every non-interior candidate against each of its
+    # feature's rings (outer +, holes −)
     clip_acc = np.nonzero(~interior)[0]
     k_f = np.bincount(cand_feat[clip_acc], minlength=F)
-    r_f = np.diff(feat_ring_off)
-    size = k_f * r_f
-    pf_ = np.repeat(np.arange(F), size)
-    ring_local, cell_local = np.divmod(
-        coverage.ranges(0, size), np.maximum(k_f, 1)[pf_]
-    )
-    pair_ring = feat_ring_off[:-1][pf_] + ring_local
+    pf_, ring_local, cell_local = _feature_pairs(np.diff(feat_ring_off), k_f)
+    pair_ring = feat_ring_off[pf_] + ring_local
     pair_at = clip_acc[(np.cumsum(k_f) - k_f)[pf_] + cell_local]
     pair_cell = cand_cells[pair_at]
 
@@ -720,18 +747,50 @@ def _index_polygons_batch(poly_feats, res: int, method: AllocationMethod,
                 )
                 np.add.at(kept, pair_at[sl], ps[sl] * a)
 
-    tot = np.asarray(total_area_f, dtype=np.float64)[cand_feat]
+
+    tot = total_area[cand_feat]
     ratio = np.zeros(kept.shape[0], dtype=np.float64)
     np.divide(kept, tot, out=ratio, where=tot > 0)
     out = np.nonzero((ratio > 0.0) | in_pf)[0]
-    uids_f = [uid for uid, _, _ in poly_feats]
-    feat_out = cand_feat[out].tolist()
+    return feats[cand_feat[out]], cand_cells[out], ratio[out], metric[
+        cand_feat[out]]
+
+
+def _index_centroids(b: _Batch, feats, res: int):
+    """CENTROID allocation of the batch polygon features ``feats``: one
+    scalar _index_polygons call per feature on its rings, sliced from
+    the layout. Returns ``(feat, cells, ratios, metrics)`` row arrays."""
+    import numpy as np
+
+    rows = []
+    first = np.searchsorted(b.part_feat, feats).tolist()
+    end = np.searchsorted(b.part_feat, feats, side="right").tolist()
+    ring_off = b.ring_off.tolist()
+    for fi, p0, p1 in zip(feats.tolist(), first, end):
+        polys = [
+            [
+                list(map(tuple, b.xy[ring_off[r] : ring_off[r + 1]].tolist()))
+                for r in range(b.part_off[p], b.part_off[p + 1])
+            ]
+            for p in range(p0, p1)
+        ]
+        pairs, metric = _index_polygons(polys, res, AllocationMethod.CENTROID)
+        rows += [(fi, cell, ratio, metric) for cell, ratio in pairs if cell]
+    f, c, r, m = zip(*rows) if rows else ((), (), (), ())
     return (
-        [uids_f[fi] for fi in feat_out],
-        cand_cells[out].tolist(),
-        ratio[out].tolist(),
-        [metrics_f[fi] for fi in feat_out],
+        np.asarray(f, dtype=np.int64),
+        np.asarray(c, dtype=np.int64),
+        np.asarray(r, dtype=np.float64),
+        np.asarray(m, dtype=np.float64),
     )
+
+
+def _concat(groups):
+    """Row arrays ``(feat, cells, ratios, metrics)`` of many groups,
+    concatenated field by field."""
+    import numpy as np
+
+    return tuple(np.concatenate(col) for col in zip(*groups))
 
 
 def make_index_map_fn(
@@ -794,151 +853,64 @@ def make_index_map_fn(
                     )
                     continue
 
-            # phase 1: parse every feature and lay the batch's rings out
-            # as CSR arrays (flat coordinates plus ring offsets); shift
-            # antimeridian crossers into the [0, 360) frame, sample
-            # every line and every polygon's closed outer ring with ONE
-            # sample_paths call, and index ALL samples in one
-            # vectorized call. Features may be MULTI* — each member
-            # becomes a part; allocation ratios are computed across
-            # the union of a feature's parts.
-            parsed = []  # (uid, [(kind, rings), ...])
-            for uid, wkt in zip(pdf[uid_col], pdf[GEOM_WKT]):
+            # phase 1: parse every feature (MULTI* features become one
+            # part per member) and lay the batch out as a _Batch: CSR
+            # coordinates, crossers shifted, every part sampled and
+            # every sample indexed batch-wide (_batch_layout)
+            features, feat_row = [], []
+            for row, wkt in enumerate(pdf[GEOM_WKT]):
                 if wkt is None:
                     continue
                 try:
-                    parsed.append((uid, geometry.parse_wkt_parts(wkt)))
+                    features.append(geometry.parse_wkt_parts(wkt))
                 except geometry.GeometryError:
                     continue
-            xy, ring_off = _ring_csr(
-                [r for _, ps in parsed for _, rs in ps for r in rs]
-            )
-            n_rings = [sum(len(rs) for _, rs in ps) for _, ps in parsed]
-            ring_feat = np.repeat(
-                np.arange(len(parsed)), np.asarray(n_rings, dtype=np.int64)
-            )
-            xy, wrap_f = _unwrap_antimeridian(
-                xy, ring_off, ring_feat, len(parsed)
-            )
-            path_ring, path_close, point_v = [], [], []
-            refs = []  # per part: ("path" | "point" | None, index)
-            r = 0
-            for fi, (_, parts) in enumerate(parsed):
-                for pi, (kind, rings) in enumerate(parts):
-                    if wrap_f[fi]:  # the shifted coordinates
-                        rings = [
-                            list(map(tuple, xy[a:b].tolist()))
-                            for a, b in zip(
-                                ring_off[r : r + len(rings)],
-                                ring_off[r + 1 : r + len(rings) + 1],
-                            )
-                        ]
-                        parts[pi] = (kind, rings)
-                    if kind == "point":
-                        refs.append(("point", len(point_v)))
-                        point_v.append(ring_off[r])
-                    elif kind == "line" or method != AllocationMethod.CENTROID:
-                        refs.append(("path", len(path_ring)))
-                        path_ring.append(r)
-                        path_close.append(kind != "line")
-                    else:
-                        refs.append((None, 0))  # centroid cell: phase 2
-                    r += len(rings)
-            # polygon outer rings are sampled closed
-            path_ring = np.asarray(path_ring, dtype=np.int64)
-            lo = ring_off[path_ring]
-            n = ring_off[path_ring + 1] - lo
-            close = np.asarray(path_close, dtype=bool) & (
-                xy[lo] != xy[lo + n - 1]
-            ).any(axis=1)
-            lats, lngs, soff = coverage.sample_paths(
-                *_closed_paths(xy, lo, n, close), res
-            )
-            point_v = np.asarray(point_v, dtype=np.int64)
-            sample_cells = latlng_to_cell_batch(
-                np.concatenate([lats, xy[point_v, 1]]),
-                np.concatenate([lngs, xy[point_v, 0]]),
-                res,
-            )
-            soff = soff.tolist()
-            n_path_samples = soff[-1]
-            feats = []  # (uid, [(kind, rings, lo, hi), ...], wrap)
-            ref = iter(refs)
-            for fi, (uid, parts) in enumerate(parsed):
-                plist = []
-                for kind, rings in parts:
-                    src, k = next(ref)
-                    if src == "path":
-                        plist.append((kind, rings, soff[k], soff[k + 1]))
-                    elif src == "point":
-                        lo = n_path_samples + k
-                        plist.append((kind, rings, lo, lo + 1))
-                    else:
-                        plist.append((kind, rings, 0, 0))
-                feats.append((uid, plist, bool(wrap_f[fi])))
+                feat_row.append(row)
+            b = _batch_layout(features, res, method)
 
-            # phase 2: batched geometry work on the precomputed cells.
-            # Line and polygon features route to the numpy pair kernels
-            # (_index_lines_batch/_index_polygons_batch); points and
-            # CENTROID polygons stay scalar (no clipping involved).
-            uids, cells, ratios, metrics = [], [], [], []
-            line_feats, poly_feats = [], []
-            for uid, plist, wrap in feats:
-                kinds = {k for k, _, _, _ in plist}
-                if len(kinds) != 1:
-                    continue  # mixed-kind collections are not allocatable
-                kind = next(iter(kinds))
-                if kind == "point":
-                    seen = dict.fromkeys(
-                        int(sample_cells[lo]) for _, _, lo, _ in plist
-                    )
-                    for cell in seen:
-                        if cell:
-                            uids.append(uid)
-                            cells.append(cell)
-                            ratios.append(1.0)
-                            metrics.append(1.0)
-                elif kind == "line":
-                    line_feats.append((uid, plist, wrap))
-                elif method == AllocationMethod.CENTROID:
-                    pairs, metric = _index_polygons(
-                        [rings for _, rings, _, _ in plist], res, method
-                    )
-                    for cell, ratio in pairs:
-                        if cell:
-                            uids.append(uid)
-                            cells.append(cell)
-                            ratios.append(ratio)
-                            metrics.append(metric)
-                else:
-                    poly_feats.append((uid, plist, wrap))
-            if line_feats:
-                u2, c2, r2, m2 = _index_lines_batch(
-                    line_feats, res, method, sample_cells
-                )
-                uids += u2
-                cells += c2
-                ratios += r2
-                metrics += m2
-            if poly_feats:
-                u3, c3, r3, m3 = _index_polygons_batch(
-                    poly_feats, res, method, sample_cells
-                )
-                uids += u3
-                cells += c3
-                ratios += r3
-                metrics += m3
-            areas = areas_for_cells(cells)
+            # phase 2: rows from the layout. A point keeps its sampled
+            # cells and a CENTROID polygon is one scalar call; lines
+            # and the other polygons go to the batch allocators, which
+            # read the layout as it is and allocate across the union of
+            # a feature's parts. Row order: points and CENTROID
+            # polygons in feature order, then lines, then polygons.
+            kind = b.part_kind[
+                np.searchsorted(b.part_feat, np.arange(len(features)))
+            ]
+            points = np.nonzero(kind == _POINT)[0]
+            lines = np.nonzero(kind == _LINE)[0]
+            polys = np.nonzero(kind == _POLYGON)[0]
+            pt_cells, pt_off = _sampled_cells(b, points)
+            ones = np.ones(pt_cells.shape[0])
+            groups = [
+                (np.repeat(points, np.diff(pt_off)), pt_cells, ones, ones)
+            ]
+            if method == AllocationMethod.CENTROID:
+                groups.append(_index_centroids(b, polys, res))
+            head = _concat(groups)
+            order = np.argsort(head[0], kind="stable")
+            groups = [tuple(col[order] for col in head)]
+            if lines.size:
+                groups.append(_index_lines_batch(b, lines, method))
+            if polys.size and method != AllocationMethod.CENTROID:
+                groups.append(_index_polygons_batch(b, polys, res))
+            feat, cells, ratios, metrics = _concat(groups)
+            cells = cells.tolist()
             yield pd.DataFrame(
                 {
-                    uid_col: pd.Series(uids, dtype=pdf[uid_col].dtype),
+                    uid_col: pdf[uid_col]
+                    .iloc[np.asarray(feat_row, dtype=np.int64)[feat]]
+                    .reset_index(drop=True),
                     H3_INDEX: pd.Series(
                         [core.h3_to_string(c) for c in cells], dtype="object"
                     ),
                     RATIO: pd.Series(ratios, dtype="float64"),
                     metric_col: pd.Series(metrics, dtype="float64"),
-                    H3_AREA_KM2: pd.Series(areas, dtype="float64"),
+                    H3_AREA_KM2: pd.Series(
+                        areas_for_cells(cells), dtype="float64"
+                    ),
                 }
             )
 
     return fn
+

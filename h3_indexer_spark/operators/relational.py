@@ -41,30 +41,9 @@ def with_literals(df: DataFrame, **values: object) -> DataFrame:
     return df.withColumns({name: F.lit(v) for name, v in values.items()})
 
 
-def scale_columns(
-    df: DataFrame, columns: Iterable[str], factor: Column | str
-) -> DataFrame:
-    """attribute × ratio arithmetic (reference h3_resolver.py:125-127).
-
-    Pure Catalyst expressions — stays inside whole-stage codegen.
-    """
-    f = F.col(factor) if isinstance(factor, str) else factor
-    return df.withColumns({c: F.col(c) * f for c in columns})
-
-
 def filter_not_null(df: DataFrame, column: str) -> DataFrame:
     """Null filter (reference utils/geospatial.py:150); pushed to scan."""
     return df.filter(F.col(column).isNotNull())
-
-
-def where_sql(df: DataFrame, predicate: str) -> DataFrame:
-    """User-supplied SQL predicate (reference validator.py:76-79).
-
-    The reference pushes this into the Athena JDBC query; expressed
-    declaratively here, Catalyst pushes supported conjuncts into the
-    Parquet scan (visible as PushedFilters).
-    """
-    return df.where(predicate)
 
 
 def join_left_small(

@@ -15,27 +15,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def extract_json_fields(
-    df: DataFrame,
-    json_col: str,
-    fields: dict[str, str],
-) -> DataFrame:
-    """Extract typed top-level fields from a JSON string column.
-
-    ``fields`` maps output column name -> type DDL (e.g. {"k": "int"}).
-    Uses ``from_json`` with an EXPLICIT struct schema: one parse per
-    row regardless of how many fields are pulled (N ``get_json_object``
-    calls would parse the string N times), fully codegen'd, malformed
-    rows yield NULLs (PERMISSIVE) instead of failing the job — the
-    right default for crawl-scale dirty data. Narrow: zero shuffles.
-    """
-    schema = ", ".join(f"{name} {ddl}" for name, ddl in fields.items())
-    parsed = F.from_json(F.col(json_col), schema)
-    return df.select(
-        "*", *[parsed[name].alias(name) for name in fields]
-    )
-
-
 def json_field_stats(
     df: DataFrame,
     json_col: str,

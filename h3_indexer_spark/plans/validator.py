@@ -98,16 +98,10 @@ def _attach_canonical_geometry(df: DataFrame, vt: VectorTable) -> DataFrame:
             ),
         )
     # evaluated once per row: canonical_wkt_udf is flagged
-    # nondeterministic, so _drop_invalid_geometries' filter stays above
+    # nondeterministic, so validate_input's not-null filter stays above
     # this projection instead of being pushed, UDF call and all, below
     # it and read_parquet's repartition into the scan
     return df.withColumn(GEOM_WKT, canonical_wkt_udf(F.col(vt.geometry_column_name)))
-
-
-def _drop_invalid_geometries(df: DataFrame, vt: VectorTable) -> DataFrame:
-    """Null/invalid geometry drop (reference geospatial.py:140-166;
-    P4+P5). The canonical-WKT UDF already nulled irreparable rows."""
-    return df.filter(F.col(GEOM_WKT).isNotNull())
 
 
 def validate_input(
@@ -127,7 +121,9 @@ def validate_input(
     _check_unique_id(df, vt.unique_id, input_name)
     _check_numeric_columns(df, vt)
     df = _attach_canonical_geometry(df, vt)
-    df = _drop_invalid_geometries(df, vt)
+    # null/invalid geometry drop (reference geospatial.py:140-166;
+    # P4+P5): the canonical-WKT UDF already nulled irreparable rows
+    df = df.filter(F.col(GEOM_WKT).isNotNull())
     # persist BEFORE any validation action: the POINT-type count below
     # is an eager pass over the full input, and without the persist the
     # downstream Index stage would re-scan + re-canonicalize everything

@@ -35,24 +35,6 @@ _POLYGON_TYPES = {5, 15, 25}
 _MULTIPOINT_TYPES = {8, 18, 28}
 
 
-def _read_shx_offsets(shx_path: str) -> list[tuple[int, int]]:
-    """(byte offset, content byte length) per record from the .shx
-    index (100-byte header + one big-endian 8-byte entry per record,
-    both measured in 16-bit words)."""
-    out = []
-    with open(shx_path, "rb") as f:
-        header = f.read(100)
-        if len(header) < 100 or struct.unpack(">i", header[:4])[0] != 9994:
-            raise ValueError(f"not a shapefile index: {shx_path}")
-        while True:
-            entry = f.read(8)
-            if len(entry) < 8:
-                break
-            off_words, len_words = struct.unpack(">ii", entry)
-            out.append((off_words * 2, len_words * 2))
-    return out
-
-
 def _scan_shp_offsets(shp_path: str) -> list[tuple[int, int]]:
     """Fallback when no .shx exists: walk the record headers."""
     out = []

@@ -215,16 +215,18 @@ class TestBatchedGeodesy:
 
 
 class TestBatchAllocatorsMatchScalar:
+    """Every generated feature goes through the batch allocators as ONE
+    batch, so an offset error between features shows."""
+
     def test_polygon_allocation_equivalence(self):
         from h3_indexer_spark.config.vector import AllocationMethod
         from h3_indexer_spark.functions import udfs
         from h3_indexer_spark.functions.h3 import coverage
-        from h3_indexer_spark.functions.h3.vectorized import (
-            latlng_to_cell_batch,
-        )
 
         rng = random.Random(11)
         res = 6
+        method = AllocationMethod.PCT_AREA
+        feats, refs = [], []
         for _ in range(15):
             cx, cy = rng.uniform(-100, -80), rng.uniform(30, 45)
             angs = sorted(rng.uniform(0, 2 * math.pi)
@@ -237,52 +239,70 @@ class TestBatchAllocatorsMatchScalar:
             ]
             rings = [outer + [outer[0]]]
             sampled = coverage.line_cells(outer + [outer[0]], res)
-            pairs, metric = udfs._index_polygons(
-                [rings], res, AllocationMethod.PCT_AREA,
-                boundaries=[sampled],
-            )
-            la, ln = coverage.line_sample_points(outer + [outer[0]], res)
-            sc = latlng_to_cell_batch(la, ln, res)
-            plist = [("polygon", rings, 0, len(sc))]
-            _, c, r, m = udfs._index_polygons_batch(
-                [(1, plist, False)], res, AllocationMethod.PCT_AREA, sc
-            )
-            got, exp = dict(zip(c, r)), dict(pairs)
-            assert set(got) == set(exp)
-            for cc in exp:
-                assert got[cc] == pytest.approx(exp[cc], abs=1e-9)
-            assert m[0] == pytest.approx(metric, rel=1e-6)
+            refs.append(udfs._index_polygons(
+                [rings], res, method, boundaries=[sampled]
+            ))
+            feats.append([("polygon", rings)])
+        batch = udfs._batch_layout(feats, res, method)
+        f, c, r, m = udfs._index_polygons_batch(
+            batch, np.arange(len(feats)), res
+        )
+        _assert_rows_match(f, c, r, m, refs)
 
-    def test_line_allocation_equivalence(self):
+    def test_line_allocation_equivalence(self, monkeypatch):
         from h3_indexer_spark.config.vector import AllocationMethod
         from h3_indexer_spark.functions import udfs
-        from h3_indexer_spark.functions.h3 import coverage
-        from h3_indexer_spark.functions.h3.vectorized import (
-            latlng_to_cell_batch,
-        )
 
         rng = random.Random(13)
         res = 4
+        method = AllocationMethod.PCT_LENGTH
+        feats, refs = [], []
         for _ in range(15):
             line = [(rng.uniform(-100, -80), rng.uniform(30, 45))]
             for _ in range(rng.randint(1, 4)):
                 line.append((line[-1][0] + rng.uniform(-0.5, 0.5),
                              line[-1][1] + rng.uniform(-0.5, 0.5)))
-            sampled = coverage.line_cells(line, res)
-            pairs, metric = udfs._index_lines(
-                [line], res, AllocationMethod.PCT_LENGTH, sampled=sampled
-            )
-            la, ln = coverage.line_sample_points(line, res)
-            sc = latlng_to_cell_batch(la, ln, res)
-            plist = [("line", [line], 0, len(sc))]
-            _, c, r, m = udfs._index_lines_batch(
-                [(1, plist, False)], res, AllocationMethod.PCT_LENGTH, sc
-            )
-            got, exp = dict(zip(c, r)), dict(pairs)
-            assert set(got) == set(exp)
-            for cc in exp:
-                assert got[cc] == pytest.approx(exp[cc], abs=1e-9)
-            assert m[0] == pytest.approx(metric, rel=1e-6)
+            refs.append(udfs._index_lines([line], res, method))
+            feats.append([("line", [line])])
+        # a two-part MULTILINESTRING allocates across both parts
+        multi = [[(-95.0, 35.0), (-94.4, 35.3), (-94.1, 35.1)],
+                 [(-94.0, 34.6), (-93.5, 34.9)]]
+        refs.append(udfs._index_lines(multi, res, method))
+        feats.append([("line", [part]) for part in multi])
+        # an antimeridian crosser runs in the [0, 360) frame: the scalar
+        # reference gets its shifted vertices and cell rings shifted
+        # the same way
+        crosser = [(179.7, 20.0), (-179.8, 20.2), (-179.5, 20.5)]
+        ring = udfs._cell_boundary_ring
+        with monkeypatch.context() as mp:
+            mp.setattr(udfs, "_cell_boundary_ring", lambda cell: tuple(
+                (x + 360.0 if x < 0.0 else x, y) for x, y in ring(cell)
+            ))
+            refs.append(udfs._index_lines(
+                [[(x + 360.0 if x < 0.0 else x, y) for x, y in crosser]],
+                res, method,
+            ))
+        feats.append([("line", [crosser])])
+
+        batch = udfs._batch_layout(feats, res, method)
+        assert batch.wrap.tolist() == [False] * 16 + [True]
+        f, c, r, m = udfs._index_lines_batch(
+            batch, np.arange(len(feats)), method
+        )
+        _assert_rows_match(f, c, r, m, refs)
+
+
+def _assert_rows_match(feat, cells, ratios, metrics, refs):
+    """Batch allocator rows against one scalar (pairs, metric) result
+    per feature: the same cells, ratios to 1e-9, metrics to 1e-6."""
+    assert sorted(set(feat.tolist())) == list(range(len(refs)))
+    for fi, (pairs, metric) in enumerate(refs):
+        sel = feat == fi
+        got, exp = dict(zip(cells[sel].tolist(), ratios[sel])), dict(pairs)
+        assert set(got) == set(exp)
+        for cc in exp:
+            assert got[cc] == pytest.approx(exp[cc], abs=1e-9)
+        assert metrics[sel] == pytest.approx(metric, rel=1e-6)
 
 
 def _star_ring(rng, cx, cy, r, k, closed):
@@ -479,3 +499,96 @@ class TestCsrRingKernels:
         nv = np.diff(off)
         got = geodesy.planar_ring_areas(udfs._pad_rings(xy, off[:-1], nv), nv)
         assert got.tolist() == [geodesy.planar_polygon_area(r) for r in rings]
+
+
+def _wkt_ring(cx, cy, r, k, phase=0.0):
+    """A closed, star-shaped ring of k vertices as WKT coordinates."""
+    pts = [
+        (cx + r * (0.7 + 0.075 * ((i * 7) % 5))
+         * math.cos(phase + 2 * math.pi * i / k),
+         cy + r * (0.7 + 0.075 * ((i * 7) % 5))
+         * math.sin(phase + 2 * math.pi * i / k))
+        for i in range(k)
+    ]
+    return "(" + ", ".join(f"{x!r} {y!r}" for x, y in pts + pts[:1]) + ")"
+
+
+def _mixed_frame():
+    """Every kind the Index kernel takes, in one frame: polygons with
+    holes, multipolygons, lines and multilines, antimeridian crossers,
+    points, multipoints, an unclosed ring, null and unparseable WKT."""
+    import pandas as pd
+
+    hole = _wkt_ring(-98.0, 38.0, 0.12, 7, math.pi)
+    wkts = [
+        f"POLYGON ({_wkt_ring(-98.0, 38.0, 0.45, 11)}, {hole})",
+        f"MULTIPOLYGON (({_wkt_ring(-95.0, 36.0, 0.3, 9)}, "
+        f"{_wkt_ring(-95.0, 36.0, 0.08, 5, 0.4)}), "
+        f"({_wkt_ring(-94.2, 36.3, 0.2, 8, 0.2)}))",
+        "MULTILINESTRING ((-101.0 40.0, -100.6 40.3, -100.1 40.2), "
+        "(-100.0 39.5, -99.7 39.9))",
+        "LINESTRING (179.6 10.0, -179.7 10.3, -179.4 10.1)",
+        "POLYGON ((179.7 -16.0, -179.6 -16.0, -179.6 -15.5, "
+        "179.7 -15.5, 179.7 -16.0))",
+        "POINT (-97.5 38.5)",
+        None,
+        "MULTIPOINT ((-96.0 37.0), (-96.001 37.001), (-93.0 35.0))",
+        "NOT A GEOMETRY",
+        "LINESTRING (-103.0 41.0, -102.2 41.5, -101.9 41.1, -101.0 41.6, "
+        "-100.8 41.0, -100.1 41.2, -99.7 40.8, -99.2 41.3, -98.9 41.0)",
+        "POLYGON ((-92.0 34.0, -91.6 34.1, -91.7 34.5, -92.1 34.4))",
+        f"POLYGON ({_wkt_ring(-90.0, 33.0, 0.02, 6)})",
+        "MULTIPOLYGON (((179.8 50.0, -179.8 50.0, -179.8 50.3, "
+        f"179.8 50.3, 179.8 50.0)), ({_wkt_ring(178.9, 50.1, 0.15, 7)}))",
+        "LINESTRING (-97.0 35.0, -97.00001 35.00001)",
+        f"POLYGON ({_wkt_ring(-99.0, 42.0, 0.6, 23)}, "
+        f"{_wkt_ring(-99.1, 42.0, 0.1, 6, math.pi)}, "
+        f"{_wkt_ring(-98.8, 42.1, 0.1, 5, math.pi)})",
+        "MULTILINESTRING ((179.5 -30.0, -179.5 -30.2), "
+        "(-179.4 -30.2, -179.0 -30.5))",
+        "POINT (-88.0 30.0)",
+        "LINESTRING (-89.0 31.0, -88.5 31.4)",
+        f"POLYGON ({_wkt_ring(-87.0, 32.0, 0.25, 14, 0.7)})",
+        "MULTIPOINT (-86.0 33.0, -85.5 33.2)",
+    ]
+    return pd.DataFrame({"uid": range(len(wkts)), "geom_wkt": wkts})
+
+
+class TestBatchPartitionInvariance:
+    """make_index_map_fn gives the same rows however a frame is cut
+    into batches (a task retry or another maxRecordsPerBatch cuts it
+    differently): one batch, batches of 7 and one feature per batch."""
+
+    @pytest.mark.parametrize("res", [3, 4, 6])
+    @pytest.mark.parametrize(
+        "method", ["PCT_AREA", "PCT_LENGTH", "PASS_THROUGH", "CENTROID"]
+    )
+    def test_rows_do_not_depend_on_batching(self, res, method):
+        import pandas as pd
+
+        from h3_indexer_spark.config.vector import (
+            AllocationMethod,
+            GeometryType,
+        )
+        from h3_indexer_spark.functions.udfs import make_index_map_fn
+
+        df = _mixed_frame()
+        fn = make_index_map_fn(
+            "uid", GeometryType.POLYGON, AllocationMethod(method), res,
+            "metric",
+        )
+
+        def rows(size):
+            out = pd.concat(
+                fn(df.iloc[i : i + size] for i in range(0, len(df), size))
+            )
+            return out.sort_values(["uid", "h3_index"], ignore_index=True)
+
+        whole = rows(len(df))
+        assert set(whole["uid"]) == set(range(len(df))) - {6, 8}
+        for size in (7, 1):
+            # a polygon's total_area_km2 may differ in its last bit: the
+            # area kernel sums a one-ring call pairwise, others in order
+            pd.testing.assert_frame_equal(
+                rows(size), whole, check_exact=False, rtol=1e-12, atol=0.0
+            )
