@@ -351,7 +351,9 @@ def spheroid_ring_areas_m2(pts, nv) -> "np.ndarray":
     )
     excess = 2.0 * np.arctan2(num, den)
     fan = np.arange(cap - 2)[:, None] < (nv - 2)[None, :]
-    total = np.where(fan, excess, 0.0).sum(axis=0)
+    # sequential fan sum (np.add.accumulate), not .sum(): numpy sums a
+    # single ring pairwise, so an area would depend on the ring count
+    total = np.add.accumulate(np.where(fan, excess, 0.0), axis=0)[-1]
     return np.abs(total) * AUTHALIC_RADIUS_M * AUTHALIC_RADIUS_M
 
 

@@ -2562,8 +2562,8 @@ def ohlc_bars(
     gcols = list(group_cols or [])
     # TRUE floor alignment: % follows the dividend's sign in Spark
     # (and DuckDB), so t - t % b would CEIL pre-epoch timestamps and
-    # diverge from streaming_ohlc_bars' F.window floor semantics; the
-    # double-mod ((t % b) + b) % b is the sign-safe remainder
+    # diverge from F.window's floor semantics; the double-mod
+    # ((t % b) + b) % b is the sign-safe remainder
     t = F.col(ts_col).cast("bigint")
     b = F.lit(bucket_ns)
     bucket = (t - ((t % b) + b) % b).alias("bucket_start")
@@ -4605,12 +4605,10 @@ def classification_report(
 def class_report_contributions(
     df: DataFrame, label_col: str, pred_col: str
 ) -> DataFrame:
-    """Shared front end of the batch classification_report and the
-    streaming_class_report twin (extracting it is what KEEPS them in
-    lockstep — a ratio/cast fix lands in both automatically): each
-    non-null (label, pred) row explodes into its label-role and
-    pred-role contributions. Narrow map — every other input column
-    (e.g. the streaming twin's event-time column) rides along."""
+    """Front end of classification_report: each non-null (label,
+    pred) row explodes into its label-role and pred-role
+    contributions. Narrow map — every other input column rides
+    along."""
     lbl = F.col(label_col).cast("string")
     prd = F.col(pred_col).cast("string")
     others = [c for c in df.columns if c not in (label_col, pred_col)]
@@ -4641,7 +4639,7 @@ def class_report_contributions(
 
 def class_report_aggs() -> list[Column]:
     """The exact-BIGINT confusion-cell aggregates over the
-    contributions frame (shared batch/streaming)."""
+    contributions frame."""
     return [
         F.sum("_t").cast("bigint").alias("n_true"),
         F.sum("_p").cast("bigint").alias("n_pred"),
@@ -4650,10 +4648,10 @@ def class_report_aggs() -> list[Column]:
 
 
 def class_report_columns() -> list[Column]:
-    """Post-aggregation derived columns (shared batch/streaming):
-    fp/fn as exact integers; precision, recall and F1 each ONE IEEE
-    division of exact integers (F1 via 2tp/(2tp+fp+fn), never the
-    2PR/(P+R) float compound), ROUND 9 ([0,1]-bounded)."""
+    """Post-aggregation derived columns: fp/fn as exact integers;
+    precision, recall and F1 each ONE IEEE division of exact integers
+    (F1 via 2tp/(2tp+fp+fn), never the 2PR/(P+R) float compound),
+    ROUND 9 ([0,1]-bounded)."""
     tp = F.col("tp").cast("double")
     fp_i = F.col("n_pred") - F.col("tp")
     fn_i = F.col("n_true") - F.col("tp")
@@ -4764,11 +4762,9 @@ def fisher_contingency_counts(
     a_col: str,
     b_col: str,
 ) -> DataFrame:
-    """Shared front end of the batch fisher_exact and the streaming
-    twin: the four exact-BIGINT 2x2 partials (n, r1, c1, n11) per
-    group — ONE groupBy with map-side combine; rows with a NULL in
-    either boolean are excluded. (Extracting it keeps batch and
-    streaming in lockstep — the class_report_contributions pattern.)"""
+    """Front end of fisher_exact: the four exact-BIGINT 2x2 partials
+    (n, r1, c1, n11) per group — ONE groupBy with map-side combine;
+    rows with a NULL in either boolean are excluded."""
     a = F.col(a_col).cast("boolean")
     b = F.col(b_col).cast("boolean")
     return (
@@ -4789,13 +4785,11 @@ def fisher_contingency_counts(
 
 
 def fisher_readout(counts: DataFrame, carry_cols: list[str]) -> DataFrame:
-    """Shared back end of the batch fisher_exact and the streaming
-    twin: from the exact-BIGINT partials (n, r1, c1, n11) to the full
-    test readout — all cells, the exact p_num/p_den rational via the
-    integer-preserving binomial folds, the ROUND-9 p-value, and the
-    odds ratio. Pure stateless projections (whole-stage-codegen'd
-    higher-order functions), so the streaming twin stays append-safe
-    after its single stateful aggregation."""
+    """Back end of fisher_exact: from the exact-BIGINT partials (n,
+    r1, c1, n11) to the full test readout — all cells, the exact
+    p_num/p_den rational via the integer-preserving binomial folds,
+    the ROUND-9 p-value, and the odds ratio. Pure stateless
+    projections (whole-stage-codegen'd higher-order functions)."""
     w_at = "{c1} * {c2}".format(
         c1=_binom_fold_sql("r1", "kk"),
         c2=_binom_fold_sql("n - r1", "c1 - kk"),
@@ -4913,15 +4907,13 @@ def classification_summary(
 
 
 def class_summary_aggs() -> list[Column]:
-    """The summary aggregates over a per-class report frame (shared
-    batch/streaming — extracting them is what keeps the twins in
-    lockstep): exact BIGINT totals plus the six sorted-fold sums.
+    """The summary aggregates over a per-class report frame: exact
+    BIGINT totals plus the six sorted-fold sums.
     Every mean's inputs are the per-class ROUND-9 metrics; each fold
     runs over the SORTED term list (the q_entropy rule — pins the
     float addition order), with NULL metrics contributing 0
     (sklearn's zero_division=0). collect_list is bounded by the class
-    vocabulary — a report-sized census by definition (and per open
-    window in the streaming twin)."""
+    vocabulary — a report-sized census by definition."""
 
     def _sorted_fold(term: Column) -> Column:
         return F.aggregate(
@@ -4949,11 +4941,9 @@ def class_summary_aggs() -> list[Column]:
 
 
 def class_summary_rows(agg: DataFrame, carry_cols: list[str]) -> DataFrame:
-    """Shared back end (batch/streaming): unpivot the one-row-per-key
-    summary aggregate into the 3 averaging-mode rows via stack —
-    stateless projections, so the streaming twin stays append-safe
-    after its chained aggregations. ``carry_cols`` (e.g. the window
-    start) ride along."""
+    """Unpivot the one-row-per-key summary aggregate into the 3
+    averaging-mode rows via stack — stateless projections.
+    ``carry_cols`` ride along."""
     nc = F.col("n_classes").cast("double")
     sup = F.col("support").cast("double")
     acc = F.col("sum_tp").cast("double") / sup

@@ -1228,11 +1228,9 @@ def t_closeness_pairs(
     quasi_cols: list[str],
     sensitive_col: str,
 ) -> DataFrame:
-    """Shared front end of the batch t_closeness_report and the
-    streaming twin: the (quasi..., _v, _c) level-1 census — one
-    map-side-combined groupBy whose shuffle carries one row per
-    (class, sensitive value) pair (the fisher_contingency_counts
-    extraction pattern, keeping batch and streaming in lockstep)."""
+    """Front end of t_closeness_report: the (quasi..., _v, _c)
+    level-1 census — one map-side-combined groupBy whose shuffle
+    carries one row per (class, sensitive value) pair."""
     return (
         df.select(*quasi_cols, F.col(sensitive_col).alias("_v"))
         .groupBy(*quasi_cols, "_v")
@@ -1247,14 +1245,12 @@ def t_closeness_readout(
     n_buckets: int,
     carry_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Shared back end of the batch t_closeness_report and the
-    streaming twin: from the (carry..., quasi..., _v, _c) census to
-    the violation histogram. ``carry_cols`` scope the GLOBAL
-    distribution — empty for the batch corpus-wide readout, the
-    window column for the streaming twin, where each window's classes
-    are compared against THAT window's global distribution (a
-    cross-window global would mix traffic regimes and is not what a
-    per-window monitor should alarm on)."""
+    """Back end of t_closeness_report: from the (carry..., quasi...,
+    _v, _c) census to the violation histogram. ``carry_cols`` scope
+    the GLOBAL distribution — empty for the corpus-wide readout, so
+    each class is compared against the whole corpus; a carry key
+    compares each scope's classes against that scope's own
+    distribution."""
     carry = list(carry_cols or [])
     # one row per class: value->count map (NULL sensitive excluded
     # from the distribution but kept in the at-risk size)
@@ -1276,9 +1272,9 @@ def t_closeness_readout(
     )
     # global sorted category array with counts — report-sized (the
     # sensitive vocabulary), ONE row per carry scope, broadcast back
-    # (constant-key 1-row fold in batch — Catalyst folds the trivial
-    # condition, leaving the standard bounded BroadcastNestedLoop —
-    # or a hash join on the carry key in the streaming twin).
+    # (constant-key 1-row fold without carry columns — Catalyst folds
+    # the trivial condition, leaving the standard bounded
+    # BroadcastNestedLoop — or a hash join on the carry key).
     # Derived from the CLASS table's value->count maps rather than
     # from a second reference to the census: the two census branches
     # could never share one exchange (this side filters NULL

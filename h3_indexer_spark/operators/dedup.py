@@ -150,8 +150,7 @@ def minhash_signatures(
         "bands array<long>"
     )
     for c in carry_cols:
-        # passthrough columns (e.g. the event-time column the
-        # streaming twin watermarks on) ride the same Arrow hop
+        # passthrough columns ride the same Arrow hop
         ct = shingle_df.schema[c].dataType.simpleString()
         schema += f", {c} {ct}"
     return shingle_df.mapInPandas(fn, schema=schema)

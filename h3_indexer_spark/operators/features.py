@@ -698,7 +698,7 @@ def feature_hash(
     step, and no train/serve skew — bucket = hash(col:=value) mod m,
     sign = ± from an independent hash bit, output[b] = Σ signs. The
     no-state property is what makes it the default categorical
-    encoder for streaming/100 TB pipelines (one-hot needs a fitted
+    encoder for streaming and 100 TB pipelines (one-hot needs a fitted
     vocabulary broadcast; this needs nothing).
 
     Pure narrow expressions on the engine's portable md5 hash

@@ -1,17 +1,14 @@
-"""Hex-grid analytics over indexed tables: multi-resolution compaction
-and spatial (k-ring) smoothing — the "window functions" of the H3 grid.
+"""Hex-grid analytics over indexed tables: multi-resolution compaction.
 
 These operate on the OUTPUT of the index/resolve pipeline (tables keyed
 by an ``h3_index`` cell column), extending the reference's surface: the
-reference stops at per-cell aggregates (h3_resolver.py:45-98); these
-add the cross-cell operations a cell-keyed 100 TB table needs —
-shrinking storage by collapsing uniform regions to coarser cells, and
-neighborhood statistics without a geometry join.
+reference stops at per-cell aggregates (h3_resolver.py:45-98); this
+adds the cross-cell operation a cell-keyed 100 TB table needs —
+shrinking storage by collapsing uniform regions to coarser cells.
 
-Both are pure DataFrame compositions over the repo's own H3 kernels:
-compaction is Catalyst bit-ops + iterative shrinking aggregates (no
-Python in the loop), smoothing is one Arrow neighbor-expansion hop +
-one aggregation.
+Compaction is a pure DataFrame composition over the repo's own H3
+kernels: Catalyst bit-ops + iterative shrinking aggregates (no Python
+in the loop).
 """
 
 from __future__ import annotations
@@ -172,64 +169,4 @@ def uncompact_cells_df(
 
     return df.select(cell_col).mapInPandas(
         expand, schema=f"{cell_col} string"
-    )
-
-
-def hex_smooth(
-    df: DataFrame,
-    value_col: str,
-    cell_col: str = "h3_index",
-    include_self: bool = True,
-) -> DataFrame:
-    """K-ring spatial smoothing: each cell's value replaced by the mean
-    over its immediate hex neighborhood (the 6 grid neighbors, plus
-    itself by default) — the hex-grid convolution behind hotspot
-    de-noising and spatial gradient features. Cells on the data's edge
-    average over their PRESENT neighbors only (no zero-padding bias).
-    Output: (cell, n_contributors, smoothed value).
-
-    One Arrow hop expands each cell to its neighbor list (the same
-    exact-IJK batched neighbor kernel the coverage engine uses), then
-    one aggregation keyed on the receiving cell — contributions
-    partial-sum map-side, so the shuffle carries at most 7 rows per
-    input cell collapsing to one row per distinct cell. DECIMAL-exact
-    sums keep the mean bit-deterministic."""
-    from h3_indexer_spark.functions.h3.coverage import cell_neighbors_batch
-
-    import numpy as np
-
-    def fan_out(batches):
-        for pdf in batches:
-            cells = np.asarray(
-                [int(s, 16) for s in pdf[cell_col]], dtype=np.int64
-            )
-            neigh = cell_neighbors_batch(cells)  # (n, 6), 0-padded
-            src_vals = pdf[value_col].to_numpy()
-            dst: list[str] = []
-            vals: list[float] = []
-            for i in range(len(cells)):
-                if include_self:
-                    dst.append(pdf[cell_col].iloc[i])
-                    vals.append(float(src_vals[i]))
-                for nb in neigh[i]:
-                    if nb:
-                        dst.append(format(int(nb), "x"))
-                        vals.append(float(src_vals[i]))
-            yield pd.DataFrame({cell_col: dst, "_v": vals})
-
-    contributions = df.select(cell_col, value_col).mapInPandas(
-        fan_out, schema=f"{cell_col} string, _v double"
-    )
-    # only cells present in the input receive a smoothed value
-    present = df.select(cell_col).distinct()
-    return (
-        contributions.join(present, cell_col, "semi")
-        .groupBy(cell_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_contributors"),
-            (
-                F.sum(F.col("_v").cast("decimal(19,4)")).cast("double")
-                / F.count(F.lit(1)).cast("double")
-            ).alias(f"{value_col}_smooth"),
-        )
     )

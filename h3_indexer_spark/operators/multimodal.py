@@ -19,9 +19,7 @@ Design for 100 TB of media:
   metadata-only queries from ever reading the bytes;
 - ``mapInPandas`` with small Arrow batches (payloads are fat — cap
   ``spark.sql.execution.arrow.maxRecordsPerBatch`` well below the
-  default for media tables);
-- feature extraction emits fixed-size float arrays, so downstream
-  similarity search (operators/similarity.py) composes directly.
+  default for media tables).
 """
 
 from __future__ import annotations
@@ -64,7 +62,6 @@ def _resolve_codec(codec: str) -> str:
 IMAGE_META_SCHEMA = (
     "media_id long, width int, height int, channels int, format string"
 )
-EMBED_SCHEMA = "media_id long, feature array<float>"
 FRAME_SCHEMA = "media_id long, frame_no int, frame_bytes binary"
 RESIZED_SCHEMA = (
     "media_id long, width int, height int, channels int, pixels binary"
@@ -119,21 +116,6 @@ def _meta_batch(pdf: pd.DataFrame, codec: str, id_col: str,
             "format": pd.Series(fmts, dtype="object"),
         }
     )
-
-
-def _features_batch(pdf: pd.DataFrame, codec: str, id_col: str,
-                    payload_col: str, dim: int) -> pd.DataFrame:
-    ids, feats = [], []
-    for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-        if payload is None:
-            continue
-        img, _ = _decode_image(bytes(payload), codec)
-        hist, _ = np.histogram(img, bins=dim, range=(0, 255))
-        v = hist.astype(np.float32)
-        norm = float(np.linalg.norm(v)) or 1.0
-        ids.append(mid)
-        feats.append((v / norm).tolist())
-    return pd.DataFrame({id_col: ids, "feature": feats})
 
 
 def _resize_batch(pdf: pd.DataFrame, codec: str, id_col: str,
@@ -232,24 +214,6 @@ def decode_metadata(
     )
 
 
-def extract_features(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-    dim: int = 64,
-    codec: str = "auto",
-) -> DataFrame:
-    """Fixed-size float feature vector per media row (composes with
-    similarity search): normalized pixel histogram of the decode."""
-    codec = _resolve_codec(codec)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _features_batch(pdf, codec, id_col, payload_col, dim)
-
-    return df.select(id_col, payload_col).mapInPandas(fn, schema=EMBED_SCHEMA)
-
-
 def resize_images(
     df: DataFrame,
     target_w: int = 4,
@@ -317,7 +281,6 @@ AUDIO_META_SCHEMA = (
     "media_id long, sample_rate int, n_samples long, n_channels int, "
     "duration_s double"
 )
-AUDIO_FEATURE_SCHEMA = "media_id long, feature array<float>"
 
 
 def _have_soundfile() -> bool:
@@ -375,26 +338,6 @@ def _audio_meta_batch(pdf: pd.DataFrame, codec: str, id_col: str,
     )
 
 
-def _audio_features_batch(pdf: pd.DataFrame, codec: str, id_col: str,
-                          payload_col: str, n_bands: int) -> pd.DataFrame:
-    """Log-spectral band energies via numpy rFFT — a real DSP feature
-    (not a fake) over whatever waveform the codec produced."""
-    ids, feats = [], []
-    for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-        if payload is None:
-            continue
-        wav, _ = _decode_audio(bytes(payload), codec)
-        mono = wav.mean(axis=1)
-        spec = np.abs(np.fft.rfft(mono)) ** 2
-        bands = np.array_split(spec, n_bands)
-        e = np.log1p(np.asarray([b.sum() for b in bands],
-                                dtype=np.float64))
-        norm = float(np.linalg.norm(e)) or 1.0
-        ids.append(mid)
-        feats.append((e / norm).astype(np.float32).tolist())
-    return pd.DataFrame({id_col: ids, "feature": feats})
-
-
 def decode_audio_metadata(
     df: DataFrame,
     payload_col: str = "payload",
@@ -411,29 +354,6 @@ def decode_audio_metadata(
 
     return df.select(id_col, payload_col).mapInPandas(
         fn, schema=AUDIO_META_SCHEMA
-    )
-
-
-def extract_audio_features(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-    n_bands: int = 32,
-    codec: str = "auto",
-) -> DataFrame:
-    """Fixed-size log-spectral band-energy vector per row (the feature
-    extraction itself is real numpy DSP; only the decode is swappable).
-    Composes with operators/similarity.py search."""
-    codec = _resolve_audio_codec(codec)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _audio_features_batch(
-                pdf, codec, id_col, payload_col, n_bands
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        fn, schema=AUDIO_FEATURE_SCHEMA
     )
 
 

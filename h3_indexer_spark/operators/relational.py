@@ -783,7 +783,6 @@ def merge_by_key(
     key_cols: list[str],
     value_cols: list[str] | None = None,
     delete_col: str | None = None,
-    seq_col: str | None = None,
 ) -> DataFrame:
     """Row-level MERGE (upsert + delete-vector) without a table
     format: returns the post-merge state of ``target`` after applying
@@ -808,14 +807,6 @@ def merge_by_key(
     on the target side (locked in tests/test_round6_ops.py), reading
     and rewriting only shuffled-once source data. Idempotent: merging
     the same source twice converges to the same state.
-
-    ``seq_col`` (a version/sequence column present on BOTH sides)
-    makes the update CONDITIONAL: a matched source row wins — and a
-    matched delete applies — only when source.seq > target.seq
-    (strictly greater: equal-seq keeps the target, so replays and
-    late re-deliveries of the already-applied version are no-ops).
-    This is what protects a maintained table from out-of-order change
-    delivery (streaming.stream_merge_upsert passes it through).
     """
     if value_cols is None:
         tgt_vals = [c for c in target.columns if c not in key_cols]
@@ -824,14 +815,9 @@ def merge_by_key(
             for c in source.columns
             if c not in key_cols and c != delete_col and c in tgt_vals
         ]
-    if seq_col is not None and seq_col not in value_cols:
-        raise ValueError(
-            f"seq_col {seq_col!r} must be a value column present on "
-            "both sides so the merged row carries its version"
-        )
     tsel = target.select(
         *key_cols, *[F.col(c).alias(f"_t_{c}") for c in value_cols]
-    ).withColumn("_in_t", F.lit(1))
+    )
     scols = [F.col(c).alias(f"_s_{c}") for c in value_cols]
     if delete_col is not None:
         scols.append(
@@ -842,29 +828,10 @@ def merge_by_key(
     ssel = source.select(*key_cols, *scols).withColumn("_in_s", F.lit(1))
     j = tsel.join(ssel, key_cols, "full_outer")
     src_wins = F.col("_in_s").isNotNull()
-    if seq_col is not None:
-        # Three-valued-logic hardening (review r6): a NULL source seq
-        # always LOSES (an unversioned change may not clobber or
-        # delete versioned state), a NULL target seq loses to any
-        # versioned source (unversioned state is upgradable), and the
-        # whole predicate must be non-NULL or .where() silently drops
-        # delete rows it should keep.
-        s_seq = F.col(f"_s_{seq_col}")
-        t_seq = F.col(f"_t_{seq_col}")
-        newer = (
-            F.when(s_seq.isNull(), F.lit(False))
-            .when(t_seq.isNull(), F.lit(True))
-            .otherwise(s_seq > t_seq)
-        )
-        src_wins = src_wins & (F.col("_in_t").isNull() | newer)
     if delete_col is not None:
-        # delete applies only when the delete's version wins (matched
-        # + winning seq → drop; unmatched tombstone → src_wins is true
-        # with no target row, so nothing inserts; STALE delete → the
-        # target row survives)
-        j = j.where(
-            ~(F.coalesce(F.col("_s_del"), F.lit(False)) & src_wins)
-        )
+        # a flagged source row drops its key (matched → delete;
+        # unmatched tombstone → nothing inserts)
+        j = j.where(~F.coalesce(F.col("_s_del"), F.lit(False)))
     out_vals = [
         F.when(src_wins, F.col(f"_s_{c}"))
         .otherwise(F.col(f"_t_{c}"))

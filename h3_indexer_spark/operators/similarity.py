@@ -207,48 +207,6 @@ def cosine_topk_lsh(
     return cosine_topk_brute(cand, query, k, vec_col, id_col)
 
 
-def cosine_topk_lsh_multitable(
-    df: DataFrame,
-    query: list[float],
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_planes: int = 8,
-    n_tables: int = 8,
-    seed: int = 42,
-) -> DataFrame:
-    """ANN top-k with L independent hash tables: a vector is a candidate
-    if it lands in the query's exact bucket in ANY table. For a pair at
-    angle θ, P(candidate) = 1-(1-(1-θ/π)^p)^L — much higher recall than
-    multi-probing one table at the same candidate budget.
-
-    All L·p plane projections happen in ONE numpy matmul per Arrow
-    batch (a 64-plane expression tree blows the codegen/compile budget;
-    a (batch × dim)·(dim × L·p) GEMM is microseconds). At scale,
-    materialize the candidate mask / bucket ids once and store
-    partitioned by bucket for pruning."""
-    import numpy as np
-
-    dim = len(query)
-    all_planes = []
-    for t in range(n_tables):
-        all_planes.extend(random_hyperplanes(dim, n_planes, seed + 1000 * t))
-    p_mat = np.asarray(all_planes, dtype=np.float64).T  # (dim, L*p)
-    q_signs = (np.asarray(query, dtype=np.float64) @ p_mat) >= 0  # (L*p,)
-    q_buckets = q_signs.reshape(n_tables, n_planes)
-
-    @F.pandas_udf("boolean")
-    def is_candidate(vecs: pd.Series) -> pd.Series:
-        m = np.asarray(vecs.tolist(), dtype=np.float64)  # (n, dim)
-        signs = (m @ p_mat) >= 0  # (n, L*p)
-        per_table = signs.reshape(len(m), n_tables, n_planes)
-        hit = (per_table == q_buckets[None, :, :]).all(axis=2).any(axis=1)
-        return pd.Series(hit)
-
-    cand = df.where(is_candidate(F.col(vec_col)))
-    return cosine_topk_brute(cand, query, k, vec_col, id_col)
-
-
 def sampled_centroids(
     df: DataFrame,
     n_cells: int,

@@ -141,8 +141,8 @@ def hll_registers_grouped(
 def hll_alpha(m: int) -> float:
     """Flajolet et al. 2007 bias constant — the paper's small-m
     constants for m ≤ 64 (0.673 / 0.697 / 0.709), the asymptotic
-    formula above that. hll_estimate, rolling_active_users_hll and
-    the streaming twin all read THIS function, so the branchpoint
+    formula above that. hll_estimate and rolling_active_users_hll
+    both read THIS function, so the branchpoint
     cannot drift between readouts (code-review catch: the rolling
     readout previously applied the asymptotic formula at any p,
     a systematic ~+0.4% bias at p=4)."""

@@ -219,8 +219,7 @@ def sessionize(
     running sum numbers them — the standard batch sessionization that
     needs no self-join. ``order_cols`` break ties at duplicate
     timestamps so the numbering is deterministic. Skewed keys cost
-    what any window does. (The streaming twin with watermarked state
-    is streaming/events.py::sessionized_agg.)
+    what any window does.
     """
     order = [F.col(ts_col).asc()] + [
         F.col(c).asc() for c in (order_cols or [])

@@ -567,8 +567,7 @@ def q_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding (hopping) event-time windows: 2-hour windows every 30
     minutes — each event lands in exactly 4 overlapping windows
-    (window size/slide are epoch-aligned in both engines). The
-    streaming sibling runs the same aggregation under a watermark."""
+    (window size/slide are epoch-aligned in both engines)."""
     ev = _load_events(spark, sf_dir).select("ts_micro", "value")
     return (
         ev.groupBy(
@@ -607,10 +606,9 @@ def q_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Windowed deduplication: keep the FIRST event per (user,
-    event_type) within each tumbling hour — the batch twin of
-    streaming_dedup (retries/replays collapse, one row survives per
-    key per window). One window shuffle; WindowGroupLimit stops
-    per-group work at row 1."""
+    event_type) within each tumbling hour (retries/replays collapse,
+    one row survives per key per window). One window shuffle;
+    WindowGroupLimit stops per-group work at row 1."""
     ev = _load_events(spark, sf_dir).select(
         "event_id", "user_id", "event_type",
         F.expr("ts div 1000").alias("ts_us"),
@@ -748,8 +746,7 @@ _PRICE_BANDS = [
 
 
 def q_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-time tumbling window aggregation (§2.8) — the batch analog
-    of the streaming windowed agg in streaming/events.py. Hour windows
+    """Event-time tumbling window aggregation (§2.8). Hour windows
     are unaffected by the nanos→micros conversion."""
     df = _load_events(spark, sf_dir)
     agg = (

@@ -587,8 +587,4 @@ class TestBatchPartitionInvariance:
         whole = rows(len(df))
         assert set(whole["uid"]) == set(range(len(df))) - {6, 8}
         for size in (7, 1):
-            # a polygon's total_area_km2 may differ in its last bit: the
-            # area kernel sums a one-ring call pairwise, others in order
-            pd.testing.assert_frame_equal(
-                rows(size), whole, check_exact=False, rtol=1e-12, atol=0.0
-            )
+            pd.testing.assert_frame_equal(rows(size), whole, check_exact=True)

@@ -154,32 +154,6 @@ class TestLshRecall:
         )
         return emb.unionByName(extra), {vid for vid, _ in planted}
 
-    def test_multitable_recall_on_planted(self, spark):
-        from h3_indexer_spark.operators.similarity import (
-            cosine_topk_brute,
-            cosine_topk_lsh_multitable,
-        )
-        from h3_indexer_spark.queries import _query_vector
-
-        q = _query_vector()
-        corpus, planted_ids = self._corpus_with_planted(spark, q)
-        exact = {
-            r.vec_id
-            for r in cosine_topk_brute(
-                corpus, q, k=10, vec_col="embedding", id_col="vec_id"
-            ).collect()
-        }
-        # the planted neighbors dominate the exact top-10
-        assert len(exact & planted_ids) >= 8
-        approx = {
-            r.vec_id
-            for r in cosine_topk_lsh_multitable(
-                corpus, q, k=10, vec_col="embedding", id_col="vec_id"
-            ).collect()
-        }
-        recall = len(exact & approx) / len(exact)
-        assert recall >= 0.9, f"LSH recall too low: {recall}"
-
     def test_ivf_recall_on_planted(self, spark):
         from h3_indexer_spark.operators.similarity import (
             cosine_topk_brute,

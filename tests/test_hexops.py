@@ -1,16 +1,14 @@
 """Hex-grid analytics: compaction round-trips against the scalar
-kernel, and k-ring smoothing semantics."""
+kernel."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from h3_indexer_spark.functions.h3 import core
 from h3_indexer_spark.functions.h3.coverage import polyfill
 from h3_indexer_spark.operators.hexops import (
     compact_cells_df,
-    hex_smooth,
     uncompact_cells_df,
 )
 
@@ -94,44 +92,3 @@ class TestCompact:
         )
         got = {r.h3_index for r in compact_cells_df(df).collect()}
         assert got == {core.h3_to_string(k) for k in kids}
-
-
-class TestHexSmooth:
-    def test_uniform_interior_stays_uniform(self, spark):
-        cover = _covering(6)
-        df = spark.createDataFrame(
-            [(c, 5.0) for c in cover], "h3_index string, value double"
-        )
-        out = {r.h3_index: r for r in hex_smooth(df, "value").collect()}
-        assert set(out) == set(cover)
-        interior = [r for r in out.values() if r.n_contributors == 7]
-        assert len(interior) > 0
-        assert all(r.value_smooth == 5.0 for r in out.values())
-
-    def test_impulse_spreads_to_neighbors(self, spark):
-        cover = _covering(6)
-        center = cover[len(cover) // 2]
-        df = spark.createDataFrame(
-            [(c, 7.0 if c == center else 0.0) for c in cover],
-            "h3_index string, value double",
-        )
-        out = {r.h3_index: r for r in hex_smooth(df, "value").collect()}
-        from h3_indexer_spark.functions.h3.coverage import cell_neighbors
-
-        nbrs = {
-            core.h3_to_string(n)
-            for n in cell_neighbors(core.string_to_h3(center))
-        }
-        # the impulse contributes 7.0 to itself and each neighbor
-        assert out[center].value_smooth == 7.0 / out[center].n_contributors
-        for nb in nbrs:
-            if nb in out:
-                assert (
-                    out[nb].value_smooth
-                    == 7.0 / out[nb].n_contributors
-                )
-        far = [
-            c for c in cover
-            if c != center and c not in nbrs and out[c].value_smooth != 0.0
-        ]
-        assert far == []

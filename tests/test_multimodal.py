@@ -91,11 +91,6 @@ def test_codec_paths_yield_declared_schema(monkeypatch):
     assert list(rr.columns) == list(rf.columns)
     assert all(len(b) == 2 * 2 * 3 for b in rr.pixels)
 
-    fr = mm._features_batch(pdf, "pil", "media_id", "payload", 8)
-    ff = mm._features_batch(pdf, "fake", "media_id", "payload", 8)
-    assert all(len(v) == 8 for v in fr.feature)
-    assert list(fr.columns) == list(ff.columns)
-
 
 def test_codec_auto_without_pil_uses_fake(monkeypatch):
     import builtins
@@ -132,28 +127,9 @@ def test_unknown_codec_rejected(spark):
         sample_frames(media, codec="quicktime")
 
 
-def test_features_compose_with_similarity(spark):
-    """extract_features output feeds cosine_topk_brute directly."""
-    from h3_indexer_spark.operators.multimodal import (
-        extract_features,
-        synthesize_media_table,
-    )
-    from h3_indexer_spark.operators.similarity import cosine_topk_brute
-
-    media = synthesize_media_table(spark, n=30)
-    feats = extract_features(media, dim=16)
-    first = feats.orderBy("media_id").first()
-    top = cosine_topk_brute(
-        feats, list(first.feature), k=3, vec_col="feature", id_col="media_id"
-    ).collect()
-    assert top[0].media_id == first.media_id
-    assert abs(top[0].cosine_sim - 1.0) < 1e-6
-
-
 def test_audio_meta_and_features(spark):
     from h3_indexer_spark.operators.multimodal import (
         decode_audio_metadata,
-        extract_audio_features,
         synthesize_media_table,
     )
 
@@ -163,11 +139,6 @@ def test_audio_meta_and_features(spark):
     for r in meta:
         assert r.sample_rate == 16000 and r.n_channels == 1
         assert r.duration_s == r.n_samples / 16000.0
-    feats = extract_audio_features(media, n_bands=16, codec="fake").collect()
-    assert len(feats) == 20
-    for r in feats:
-        assert len(r.feature) == 16
-        assert abs(sum(x * x for x in r.feature) - 1.0) < 1e-5
 
 
 def test_audio_codec_paths_yield_declared_schema(monkeypatch):
@@ -195,5 +166,3 @@ def test_audio_codec_paths_yield_declared_schema(monkeypatch):
     assert real.dtypes.equals(fake.dtypes)
     assert real.sample_rate.tolist() == [8000]
     assert real.n_channels.tolist() == [2]
-    fr = mm._audio_features_batch(pdf, "soundfile", "media_id", "payload", 8)
-    assert all(len(v) == 8 for v in fr.feature)

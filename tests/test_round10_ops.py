@@ -99,63 +99,6 @@ class TestContractKeysStayLazy:
         assert lazy == eager and lazy
 
 
-class TestRollupDecimalWidening:
-    def test_level2_fold_casts_up_not_down(self, spark):
-        """ADVICE r9: the level-2 rollup folded decimal(29,4) hourly
-        sums through a NARROWING decimal(28,4) cast — silent NULL (or
-        ANSI error) once an hourly bar's value sum needs 25+ integer
-        digits. Lock the widened cast into the analyzed plan."""
-        from h3_indexer_spark.streaming.events import streaming_bar_rollup
-
-        src = (
-            spark.readStream.format("rate")
-            .option("rowsPerSecond", 1)
-            .load()
-            .select(
-                F.col("timestamp").alias("ts"),
-                F.col("value").cast("double").alias("value"),
-            )
-        )
-        plan = (
-            streaming_bar_rollup(src)
-            ._jdf.queryExecution()
-            .analyzed()
-            .toString()
-        )
-        assert "decimal(38,4)" in plan
-        assert "decimal(28,4)" not in plan
-
-    def test_rollup_value_sum_still_exact(self, spark):
-        """Batch replay sanity after the cast change: one day of three
-        hourly bars folds value_sum exactly (decimal path end to end,
-        double only at the readout)."""
-        import datetime as dt
-
-        from h3_indexer_spark.streaming.events import streaming_bar_rollup
-
-        base = dt.datetime(2024, 1, 1, 0, 0, 0)
-        rows = [
-            (base + dt.timedelta(hours=h, minutes=m), float(v))
-            for h, m, v in [
-                (0, 5, 10.5),
-                (0, 45, 2.25),
-                (1, 10, 100.0),
-                (2, 30, 0.0625),
-            ]
-        ]
-        batch = spark.createDataFrame(rows, "ts timestamp, value double")
-        # withWatermark is a no-op on batch frames, so the streaming
-        # composition runs as-is and gives the exact fold
-        out = streaming_bar_rollup(batch).collect()
-        assert len(out) == 1
-        r = out[0]
-        assert r["n_bars"] == 3
-        assert r["volume"] == 4
-        assert r["value_sum"] == 112.8125  # exact in decimal AND double
-        assert r["open"] == 10.5 and r["close"] == 0.0625
-        assert r["high"] == 100.0 and r["low"] == 0.0625
-
-
 class TestSupportJoinsUnforced:
     """ADVICE r9: the per-item support table's size is the item
     vocabulary — unbounded at 100 TB — so item_cf_similarity and

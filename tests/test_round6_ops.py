@@ -609,196 +609,8 @@ class TestCupedWinsorWeightedMedian:
         assert got["c"] == 9.0
 
 
-class TestStreamMergeUpsert:
-    def test_stream_maintains_merged_table(self, spark, tmp_path):
-        """availableNow change stream maintained into a keyed parquet
-        table: latest-per-key wins within a batch, deletes drop keys,
-        final state equals the batch merge of the same changes."""
-        import pandas as pd
-
-        from h3_indexer_spark.streaming.events import stream_merge_upsert
-
-        src = tmp_path / "changes"
-        src.mkdir()
-        tbl = str(tmp_path / "table")
-        ckpt = str(tmp_path / "ckpt")
-        # two files -> two micro-batches (file source processes in
-        # order of modification time; force separation via file names)
-        pd.DataFrame(
-            {
-                "k": [1, 2, 3, 2],
-                "v": ["a", "b", "c", "b2"],
-                "seq": [10, 11, 12, 13],
-                "deleted": [False, False, False, False],
-            }
-        ).to_parquet(src / "part-000.parquet")
-        pd.DataFrame(
-            {
-                "k": [3, 4, 1],
-                "v": [None, "d", "a9"],
-                "seq": [20, 21, 22],
-                "deleted": [True, False, False],
-            }
-        ).to_parquet(src / "part-001.parquet")
-        schema = "k bigint, v string, seq bigint, deleted boolean"
-        stream = spark.readStream.schema(schema).option(
-            "maxFilesPerTrigger", "1"
-        ).parquet(str(src))
-        q = stream_merge_upsert(
-            stream, tbl, ["k"], ckpt, "seq",
-            delete_col="deleted", trigger_available_now=True,
-        )
-        q.awaitTermination(120)
-        got = {
-            r["k"]: (r["v"], r["seq"])
-            for r in spark.read.parquet(tbl).collect()
-        }
-        assert got == {1: ("a9", 22), 2: ("b2", 13), 4: ("d", 21)}
-
-    def test_replay_idempotent(self, spark, tmp_path):
-        """Re-running the whole stream from a FRESH checkpoint against
-        the already-maintained table converges to the same state (the
-        failure-replay guarantee)."""
-        import pandas as pd
-
-        from h3_indexer_spark.streaming.events import stream_merge_upsert
-
-        src = tmp_path / "changes"
-        src.mkdir()
-        tbl = str(tmp_path / "table")
-        pd.DataFrame(
-            {"k": [1, 2], "v": ["a", "b"], "seq": [1, 2]}
-        ).to_parquet(src / "part-000.parquet")
-        schema = "k bigint, v string, seq bigint"
-        for ck in ("c1", "c2"):
-            stream = spark.readStream.schema(schema).parquet(str(src))
-            q = stream_merge_upsert(
-                stream, tbl, ["k"], str(tmp_path / ck), "seq",
-                trigger_available_now=True,
-            )
-            q.awaitTermination(120)
-        got = {
-            r["k"]: (r["v"], r["seq"])
-            for r in spark.read.parquet(tbl).collect()
-        }
-        assert got == {1: ("a", 1), 2: ("b", 2)}
-
-
 class TestCodeReviewFixes:
     """Regression locks for the round-6 code-review findings."""
-
-    def test_merge_seq_conditional(self, spark):
-        """With seq_col, a stale source version (seq <= stored) must
-        not overwrite or delete; equal seq keeps the target."""
-        tgt = spark.createDataFrame(
-            [(1, "new", 20), (2, "keep", 5), (3, "x", 7)],
-            "k bigint, v string, seq bigint",
-        )
-        src = spark.createDataFrame(
-            [
-                (1, "old", 15, False),   # stale update -> ignored
-                (2, "keep2", 5, False),  # equal seq -> target kept
-                (3, None, 6, True),      # stale delete -> row survives
-                (4, "ins", 1, False),    # insert
-            ],
-            "k bigint, v string, seq bigint, deleted boolean",
-        )
-        got = {
-            r["k"]: (r["v"], r["seq"])
-            for r in merge_by_key(
-                tgt, src, ["k"], delete_col="deleted", seq_col="seq"
-            ).collect()
-        }
-        assert got == {
-            1: ("new", 20), 2: ("keep", 5), 3: ("x", 7), 4: ("ins", 1)
-        }
-        # and a WINNING update/delete still applies
-        src2 = spark.createDataFrame(
-            [(1, "newer", 21, False), (3, None, 8, True)],
-            "k bigint, v string, seq bigint, deleted boolean",
-        )
-        got2 = {
-            r["k"]: (r["v"], r["seq"])
-            for r in merge_by_key(
-                tgt, src2, ["k"], delete_col="deleted", seq_col="seq"
-            ).collect()
-        }
-        assert got2 == {1: ("newer", 21), 2: ("keep", 5)}
-
-    def test_stream_merge_late_batch_cannot_regress(self, spark, tmp_path):
-        """A later micro-batch carrying a STALE seq for an existing key
-        must not move the table backwards (code-review finding #3)."""
-        import pandas as pd
-
-        from h3_indexer_spark.streaming.events import stream_merge_upsert
-
-        src = tmp_path / "changes"
-        src.mkdir()
-        tbl = str(tmp_path / "table")
-        pd.DataFrame(
-            {"k": [1], "v": ["new"], "seq": [20]}
-        ).to_parquet(src / "part-000.parquet")
-        pd.DataFrame(
-            {"k": [1, 2], "v": ["old", "b"], "seq": [15, 1]}
-        ).to_parquet(src / "part-001.parquet")
-        stream = spark.readStream.schema(
-            "k bigint, v string, seq bigint"
-        ).option("maxFilesPerTrigger", "1").parquet(str(src))
-        q = stream_merge_upsert(
-            stream, tbl, ["k"], str(tmp_path / "ckpt"), "seq",
-            trigger_available_now=True,
-        )
-        q.awaitTermination(120)
-        got = {
-            r["k"]: (r["v"], r["seq"])
-            for r in spark.read.parquet(tbl).collect()
-        }
-        assert got == {1: ("new", 20), 2: ("b", 1)}
-
-    def test_stream_merge_recovers_from_interrupted_swap(
-        self, spark, tmp_path
-    ):
-        """Simulate a crash between the two swap renames (table gone,
-        __old_<id> left behind): the next batch must restore the backup
-        and keep all prior state (code-review finding #1)."""
-        import os
-        import shutil
-
-        import pandas as pd
-
-        from h3_indexer_spark.streaming.events import stream_merge_upsert
-
-        src = tmp_path / "changes"
-        src.mkdir()
-        tbl = str(tmp_path / "table")
-        pd.DataFrame(
-            {"k": [1, 2], "v": ["a", "b"], "seq": [1, 2]}
-        ).to_parquet(src / "part-000.parquet")
-        stream = spark.readStream.schema(
-            "k bigint, v string, seq bigint"
-        ).parquet(str(src))
-        q = stream_merge_upsert(
-            stream, tbl, ["k"], str(tmp_path / "c1"), "seq",
-            trigger_available_now=True,
-        )
-        q.awaitTermination(120)
-        # simulate the crash window: table renamed away, swap not done
-        shutil.move(tbl, f"{tbl}__old_99")
-        assert not os.path.exists(tbl)
-        pd.DataFrame(
-            {"k": [3], "v": ["c"], "seq": [3]}
-        ).to_parquet(src / "part-001.parquet")
-        stream2 = spark.readStream.schema(
-            "k bigint, v string, seq bigint"
-        ).parquet(str(src))
-        q2 = stream_merge_upsert(
-            stream2, tbl, ["k"], str(tmp_path / "c2"), "seq",
-            trigger_available_now=True,
-        )
-        q2.awaitTermination(120)
-        got = {r["k"]: r["v"] for r in spark.read.parquet(tbl).collect()}
-        assert got == {1: "a", 2: "b", 3: "c"}
-        assert not os.path.exists(f"{tbl}__old_99")
 
     def test_pick_res_raises_beyond_res0(self):
         from h3_indexer_spark.operators.geo_join import (
@@ -1090,94 +902,6 @@ class TestReviewRound2Fixes:
             by_cat.setdefault(r["cat"], []).append(r["cat_enc"])
         assert by_cat["b"] == [prior]
         assert by_cat[None] == [prior]
-
-    def test_merge_null_seq_loses_both_paths(self, spark):
-        tgt = spark.createDataFrame(
-            [(1, "a", 5), (2, "b", None)],
-            "k bigint, v string, seq bigint",
-        )
-        src = spark.createDataFrame(
-            [
-                (1, None, None, True),    # NULL-seq delete -> ignored
-                (1, "x", None, False),    # NULL-seq update -> ignored
-                (2, "b2", 7, False),      # versioned beats NULL target
-            ],
-            "k bigint, v string, seq bigint, deleted boolean",
-        )
-        # NULL-seq delete alone
-        got = {
-            r["k"]: (r["v"], r["seq"])
-            for r in merge_by_key(
-                tgt,
-                src.where(F.col("deleted")),
-                ["k"],
-                delete_col="deleted",
-                seq_col="seq",
-            ).collect()
-        }
-        assert got == {1: ("a", 5), 2: ("b", None)}
-        # NULL-seq update + versioned-over-NULL-target update
-        got2 = {
-            r["k"]: (r["v"], r["seq"])
-            for r in merge_by_key(
-                tgt,
-                src.where(~F.col("deleted")),
-                ["k"],
-                delete_col="deleted",
-                seq_col="seq",
-            ).collect()
-        }
-        assert got2 == {1: ("a", 5), 2: ("b2", 7)}
-
-    def test_stream_merge_with_map_column(self, spark, tmp_path):
-        """A map-typed attrs column must not break the latest-per-key
-        window (maps are not orderable; review-2 finding #3)."""
-        import pandas as pd
-
-        from h3_indexer_spark.streaming.events import stream_merge_upsert
-
-        src = tmp_path / "chg"
-        src.mkdir()
-        tbl = str(tmp_path / "tbl")
-        spark.createDataFrame(
-            [(1, "a", 1, {"x": "1"}), (1, "b", 2, {"x": "2"})],
-            "k bigint, v string, seq bigint, attrs map<string,string>",
-        ).coalesce(1).write.mode("append").parquet(str(src))
-        stream = spark.readStream.schema(
-            "k bigint, v string, seq bigint, attrs map<string,string>"
-        ).parquet(str(src))
-        q = stream_merge_upsert(
-            stream, tbl, ["k"], str(tmp_path / "ck"), "seq",
-            trigger_available_now=True,
-        )
-        q.awaitTermination(120)
-        rows = spark.read.parquet(tbl).collect()
-        assert len(rows) == 1 and rows[0]["v"] == "b"
-
-    def test_recovery_ignores_manual_backup_dirs(self, spark, tmp_path):
-        import pandas as pd
-
-        from h3_indexer_spark.streaming.events import stream_merge_upsert
-
-        src = tmp_path / "chg"
-        src.mkdir()
-        tbl = str(tmp_path / "tbl")
-        (tmp_path / "tbl__old_backup").mkdir()  # manual copy, non-numeric
-        pd.DataFrame({"k": [1], "v": ["a"], "seq": [1]}).to_parquet(
-            src / "p0.parquet"
-        )
-        stream = spark.readStream.schema(
-            "k bigint, v string, seq bigint"
-        ).parquet(str(src))
-        q = stream_merge_upsert(
-            stream, tbl, ["k"], str(tmp_path / "ck"), "seq",
-            trigger_available_now=True,
-        )
-        q.awaitTermination(120)
-        assert spark.read.parquet(tbl).count() == 1
-        import os
-
-        assert os.path.exists(tmp_path / "tbl__old_backup")
 
     def test_pip_multipolygon(self, spark):
         from h3_indexer_spark.operators.geo_join import (
