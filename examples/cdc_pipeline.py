@@ -6,13 +6,13 @@ primitives —
   1. snapshot_diff       classify yesterday→today changes (ONE
                          full-outer join; cost ∝ table, run once)
   2. merge_by_key        maintain the serving table from the change
-                         set (seq-conditional, delete vectors)
+                         set (delete vectors)
   3. update_grouped_sum  maintain the per-group aggregate from the
                          SAME diff (cost ∝ |changes|, bit-identical
                          to a full recompute — asserted below)
-  4. upsert_partitions / write_bucketed_table are the storage legs
-                         (see sources/writers.py; bucketing makes
-                         step 2 Exchange-free)
+
+Bucketing the serving table on the key at write time
+(DataFrameWriter.bucketBy) makes step 2 Exchange-free.
 
 Run: python examples/cdc_pipeline.py  (uses sf0.001 testdata)
 """

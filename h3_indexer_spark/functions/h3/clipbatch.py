@@ -18,6 +18,10 @@ from __future__ import annotations
 
 import numpy as np
 
+# Pairs clipped per numpy pass in clip_polygon_area_pairs: bounds the
+# (pairs x vertices) intermediate arrays of one pass.
+CLIP_CHUNK_ROWS = 65536
+
 
 def _predecessors(a: np.ndarray, last: np.ndarray) -> np.ndarray:
     """Each vertex's predecessor in padded rows of ``a``: column c − 1,
@@ -135,7 +139,6 @@ def clip_polygon_area_pairs(
     subj_nv: np.ndarray,
     cell_pts: np.ndarray,
     cell_nv: np.ndarray,
-    chunk_rows: int = 65536,
 ) -> np.ndarray:
     """Planar |area| of (subject-ring ∩ convex-cell-ring) per pair.
 
@@ -147,8 +150,8 @@ def clip_polygon_area_pairs(
     """
     R = subj_pts.shape[0]
     out = np.empty(R, dtype=np.float64)
-    for lo in range(0, R, chunk_rows):
-        sl = slice(lo, min(lo + chunk_rows, R))
+    for lo in range(0, R, CLIP_CHUNK_ROWS):
+        sl = slice(lo, min(lo + CLIP_CHUNK_ROWS, R))
         out[sl] = _clip_area_chunk(
             subj_pts[sl], subj_nv[sl], cell_pts[sl], cell_nv[sl]
         )

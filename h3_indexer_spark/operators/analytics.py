@@ -1925,7 +1925,6 @@ def roc_auc(
     df: DataFrame,
     score_col: str,
     label_col: str,
-    scalable_rank: bool = False,
 ) -> DataFrame:
     """ROC AUC via the rank formulation (Mann-Whitney U with midrank
     tie handling) — the threshold-free companion of calibration_bins:
@@ -1940,11 +1939,9 @@ def roc_auc(
     Scale shape (the gini/skyline aggregated-levels pattern): the
     corpus collapses to per-score-level counts FIRST, the rank window
     runs over |distinct scores| rows — never the row count — and the
-    readout is a 1-row fold. For a CONTINUOUS score whose level count
-    approaches the row count, pass ``scalable_rank=True`` to compute
-    the midranks with the two-level range-bucketed prefix sum
-    (_grouped_level_ranks) instead of the single-task global window —
-    identical exact-integer output, parallel sort. Returns
+    readout is a 1-row fold (roc_auc_ovr_summary's two-level midranks,
+    _grouped_level_ranks, are the parallel form for continuous scores
+    whose level count approaches the row count). Returns
     (n_pos, n_neg, sum_r2_pos, auc); auc is NULL when either class is
     empty.
     """
@@ -1960,20 +1957,15 @@ def roc_auc(
             F.sum("_y").cast("bigint").alias("n_pos_level"),
         )
     )
-    if scalable_rank:
-        cum = _grouped_level_ranks(
-            levels.withColumn("_one", F.lit(1)), "_one", "_s"
-        ).drop("_one")
-    else:
-        w = Window.orderBy("_s").rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        cum = levels.withColumn(
-            "first_rank",
-            (F.sum("n_level").over(w) - F.col("n_level") + F.lit(1)).cast(
-                "bigint"
-            ),
-        )
+    w = Window.orderBy("_s").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    cum = levels.withColumn(
+        "first_rank",
+        (F.sum("n_level").over(w) - F.col("n_level") + F.lit(1)).cast(
+            "bigint"
+        ),
+    )
     agg = cum.agg(
         F.sum("n_pos_level").cast("bigint").alias("n_pos"),
         F.sum(F.col("n_level") - F.col("n_pos_level"))
@@ -4903,7 +4895,7 @@ def classification_summary(
     per = classification_report(df, label_col, pred_col)
 
     agg = per.agg(*class_summary_aggs())
-    return class_summary_rows(agg, []).orderBy("avg_mode")
+    return class_summary_rows(agg).orderBy("avg_mode")
 
 
 def class_summary_aggs() -> list[Column]:
@@ -4940,15 +4932,13 @@ def class_summary_aggs() -> list[Column]:
     ]
 
 
-def class_summary_rows(agg: DataFrame, carry_cols: list[str]) -> DataFrame:
-    """Unpivot the one-row-per-key summary aggregate into the 3
-    averaging-mode rows via stack — stateless projections.
-    ``carry_cols`` ride along."""
+def class_summary_rows(agg: DataFrame) -> DataFrame:
+    """Unpivot the one-row summary aggregate into the 3 averaging-mode
+    rows via stack — stateless projections."""
     nc = F.col("n_classes").cast("double")
     sup = F.col("support").cast("double")
     acc = F.col("sum_tp").cast("double") / sup
     rows = agg.select(
-        *carry_cols,
         "n_classes",
         "support",
         F.expr(
@@ -4969,7 +4959,6 @@ def class_summary_rows(agg: DataFrame, carry_cols: list[str]) -> DataFrame:
         )
 
     return rows.select(
-        *carry_cols,
         "avg_mode",
         "n_classes",
         "support",

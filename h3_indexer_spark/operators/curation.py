@@ -977,7 +977,8 @@ def k_anonymity_report(
     the data, no risk of a report explosion: unlike a per-violating-
     group detail dump (unbounded when most classes are small — the
     common case on wide quasi-keys), the histogram stays ≤ k−1 rows.
-    Pair with ``suppress_small_groups`` to act on the report.
+    Act on the report by suppressing the violating classes' rows or
+    by generalizing the quasi-identifiers (k_anonymity_generalize).
     """
     if k < 2:
         raise ValueError(f"k must be >= 2: {k}")
@@ -997,44 +998,6 @@ def k_anonymity_report(
     )
 
 
-def suppress_small_groups(
-    df: DataFrame,
-    quasi_cols: list[str],
-    k: int = 10,
-) -> DataFrame:
-    """Enforce k-anonymity by SUPPRESSION: drop every row whose
-    quasi-identifier equivalence class has fewer than ``k`` members —
-    the action the k_anonymity_report gate prescribes (suppression is
-    the lossless-per-kept-row baseline; generalization ladders are a
-    policy layer above this primitive).
-
-    Scale: the class-size table (one row per equivalence class) joins
-    back on the quasi-identifier tuple. No broadcast hint — the class
-    table's cardinality is data-dependent (can approach |rows| on
-    wide quasi-keys), so Catalyst/AQE picks broadcast vs shuffle from
-    stats, and the equi-join shuffles BOTH sides on the same key when
-    it must (co-partitioned, no skew beyond the class sizes
-    themselves, which are < k on the dropped side by construction).
-    NULLs group with NULLs (null-safe key semantics via groupBy +
-    null-safe equality), matching the report.
-    """
-    if k < 2:
-        raise ValueError(f"k must be >= 2: {k}")
-    if not quasi_cols:
-        raise ValueError("quasi_cols must be non-empty")
-    keep = (
-        df.groupBy(*[F.col(c).alias(f"_q_{c}") for c in quasi_cols])
-        .agg(F.count(F.lit(1)).alias("_sz"))
-        .where(F.col("_sz") >= k)
-        .drop("_sz")
-    )
-    cond = None
-    for c in quasi_cols:
-        clause = F.col(c).eqNullSafe(F.col(f"_q_{c}"))
-        cond = clause if cond is None else (cond & clause)
-    return df.join(keep, cond, "left_semi")
-
-
 def k_anonymity_generalize(
     df: DataFrame,
     levels: list[tuple[str, list[Column | str]]],
@@ -1048,8 +1011,8 @@ def k_anonymity_generalize(
     generalization hierarchy), audit every level and mark the FIRST
     one at which the dataset is k-anonymous. Publishing at the chosen
     level loses the least resolution that still meets the gate;
-    suppression (``suppress_small_groups``) remains the fallback when
-    even the coarsest level violates.
+    suppression (dropping the rows of the violating classes) remains
+    the fallback when even the coarsest level violates.
 
     Output: one row per ladder level — (level, level_name, n_classes,
     n_violations, rows_at_risk, min_class_size, is_chosen) — at most
@@ -1243,18 +1206,13 @@ def t_closeness_readout(
     quasi_cols: list[str],
     t_max: float,
     n_buckets: int,
-    carry_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Back end of t_closeness_report: from the (carry..., quasi...,
-    _v, _c) census to the violation histogram. ``carry_cols`` scope
-    the GLOBAL distribution — empty for the corpus-wide readout, so
-    each class is compared against the whole corpus; a carry key
-    compares each scope's classes against that scope's own
-    distribution."""
-    carry = list(carry_cols or [])
+    """Back end of t_closeness_report: from the (quasi..., _v, _c)
+    census to the violation histogram; each class is compared against
+    the whole corpus's distribution."""
     # one row per class: value->count map (NULL sensitive excluded
     # from the distribution but kept in the at-risk size)
-    cls = pairs.groupBy(*carry, *quasi_cols).agg(
+    cls = pairs.groupBy(*quasi_cols).agg(
         F.map_from_entries(
             F.array_sort(
                 F.collect_list(
@@ -1271,10 +1229,9 @@ def t_closeness_readout(
         F.sum("_c").cast("bigint").alias("_sz"),
     )
     # global sorted category array with counts — report-sized (the
-    # sensitive vocabulary), ONE row per carry scope, broadcast back
-    # (constant-key 1-row fold without carry columns — Catalyst folds
-    # the trivial condition, leaving the standard bounded
-    # BroadcastNestedLoop — or a hash join on the carry key).
+    # sensitive vocabulary), ONE row, broadcast back (constant-key
+    # 1-row fold — Catalyst folds the trivial condition, leaving the
+    # standard bounded BroadcastNestedLoop).
     # Derived from the CLASS table's value->count maps rather than
     # from a second reference to the census: the two census branches
     # could never share one exchange (this side filters NULL
@@ -1283,10 +1240,10 @@ def t_closeness_readout(
     # twice (measured). Σ_class c_iv = g_v exactly (integer sums),
     # and NULL sensitive values are already absent from the maps.
     glob = (
-        cls.select(*carry, F.explode("_dist"))
-        .groupBy(*carry, F.col("key").alias("_v"))
+        cls.select(F.explode("_dist"))
+        .groupBy(F.col("key").alias("_v"))
         .agg(F.sum("value").cast("bigint").alias("_g"))
-        .groupBy(*carry)
+        .groupBy()
         .agg(
             F.array_sort(
                 F.collect_list(F.struct(F.col("_v"), F.col("_g")))
@@ -1295,13 +1252,9 @@ def t_closeness_readout(
             F.count(F.lit(1)).cast("bigint").alias("_m"),
         )
     )
-    join_key = carry if carry else ["_j"]
-    if not carry:
-        cls = cls.withColumn("_j", F.lit(1))
-        glob = glob.withColumn("_j", F.lit(1))
-    joined = cls.where(F.col("_n") > 0).join(
-        F.broadcast(glob), join_key
-    )
+    cls = cls.withColumn("_j", F.lit(1))
+    glob = glob.withColumn("_j", F.lit(1))
+    joined = cls.where(F.col("_n") > 0).join(F.broadcast(glob), ["_j"])
     # EMD numerator as one fold over the sorted global categories:
     # state = (prefix BIGINT, acc BIGINT); per category
     # prefix += c_i*N - g_i*n ; acc += |prefix| (the final category's
@@ -1318,7 +1271,6 @@ def t_closeness_readout(
         "st -> st.a)"
     )
     per_class = joined.select(
-        *carry,
         F.col("_sz"),
         F.when(F.col("_m") > 1, num.cast("double") / (
             F.col("_n") * F.col("_bign") * (F.col("_m") - F.lit(1))
@@ -1332,12 +1284,12 @@ def t_closeness_readout(
     ).cast("bigint")
     return (
         per_class.where(F.col("_emd") > F.lit(float(t_max)))
-        .groupBy(*carry, bucket.alias("t_bucket"))
+        .groupBy(bucket.alias("t_bucket"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_groups"),
             F.sum("_sz").cast("bigint").alias("n_rows"),
             F.round(F.min("_emd"), 9).alias("min_emd"),
             F.round(F.max("_emd"), 9).alias("max_emd"),
         )
-        .orderBy(*carry, "t_bucket")
+        .orderBy("t_bucket")
     )

@@ -83,7 +83,6 @@ def minhash_signatures(
     num_hashes: int = 64,
     seed: int = 42,
     bands: int = 16,
-    carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """MinHash signature per document: ``num_hashes`` minima over the
     shingle array — zero shuffle.
@@ -132,15 +131,12 @@ def minhash_signatures(
                 for r_ in range(rows_per_band):
                     acc = _splitmix64(acc ^ sig[:, b * rows_per_band + r_])
                 band_arr[:, b] = acc
-            out = {
+            yield pd.DataFrame({
                 id_col: pdf[id_col],
                 "sh_arr": pdf["sh_arr"],
                 "sig": list(sig.view(np.int64)),
                 "bands": list(band_arr.view(np.int64)),
-            }
-            for c in carry_cols:
-                out[c] = pdf[c]
-            yield pd.DataFrame(out)
+            })
 
     # preserve the caller's id type (string doc ids must survive the
     # Arrow hop, not be coerced to long)
@@ -149,10 +145,6 @@ def minhash_signatures(
         f"{id_col} {id_type}, sh_arr array<long>, sig array<long>, "
         "bands array<long>"
     )
-    for c in carry_cols:
-        # passthrough columns ride the same Arrow hop
-        ct = shingle_df.schema[c].dataType.simpleString()
-        schema += f", {c} {ct}"
     return shingle_df.mapInPandas(fn, schema=schema)
 
 
@@ -712,7 +704,6 @@ def duplicated_spans(
     id_col: str = "doc_id",
     width: int = 8,
     min_count: int = 2,
-    hashed: bool = False,
 ) -> DataFrame:
     """Exact duplicated-passage detection: every ``width``-token window
     (stride 1) that occurs at least ``min_count`` times anywhere in the
@@ -725,16 +716,9 @@ def duplicated_spans(
     a count window partitioned by the gram — and filter. The
     partial-agg + join alternative shuffles the gram table twice, so
     the window form is strictly better here. Consecutive duplicated
-    windows of a longer shared passage all surface; collapsing them to
-    maximal spans is the cheap narrow pass `collapse_spans`.
-
-    ``hashed=True`` is the 100 TB path: the shuffle key becomes
-    xxhash64(gram) and the gram string is dropped BEFORE the exchange,
-    so shuffle bytes shrink ~10x for 8-word windows (ship hashes, not
-    strings — measured rule from the minhash work) at the cost of an
-    astronomically small collision false-positive rate. Same plan
-    shape; `hashed=False` is the string-keyed oracle-checkable
-    sibling. Output: (id, start, gram|gram_hash, n_occ).
+    windows of a longer shared passage all surface, one row each.
+    The shuffle key is the gram string itself, so the output is
+    oracle-checkable. Output: (id, start, gram, n_occ).
     """
     words = F.split(F.col(text_col), " ")
     grams = df.select(
@@ -752,55 +736,10 @@ def duplicated_spans(
             )
         ).alias("start", "gram"),
     )
-    if hashed:
-        grams = grams.select(
-            id_col, "start", F.xxhash64("gram").alias("gram_hash")
-        )
-        key = "gram_hash"
-    else:
-        key = "gram"
-    n_occ = F.count(F.lit(1)).over(Window.partitionBy(key))
+    n_occ = F.count(F.lit(1)).over(Window.partitionBy("gram"))
     return (
         grams.withColumn("n_occ", n_occ)
         .where(F.col("n_occ") >= F.lit(min_count))
-    )
-
-
-def collapse_spans(
-    spans: DataFrame,
-    id_col: str = "doc_id",
-    width: int = 8,
-) -> DataFrame:
-    """Collapse consecutive duplicated windows into maximal character
-    spans per document: windows at starts s, s+1, ... of one shared
-    passage become one (id, span_start, span_end) row covering
-    [s, last + width). Session-style gap detection (lag + running sum)
-    partitioned by document — one shuffle on the id, standard interval
-    coalescing. Output: (id, span_start, span_end_excl, n_windows).
-    """
-    w_doc = Window.partitionBy(id_col).orderBy("start")
-    gap = (
-        F.col("start")
-        - F.lag("start", 1).over(w_doc)
-        > 1
-    ).cast("int")
-    grp = F.sum("_gap").over(
-        w_doc.rowsBetween(Window.unboundedPreceding, 0)
-    )
-    # (id, start) rows are already unique (posexplode yields one row
-    # per window start), so no distinct — both window passes share one
-    # sort within the single id-hash shuffle
-    return (
-        spans.select(id_col, "start")
-        .withColumn("_gap", F.coalesce(gap, F.lit(0)))
-        .withColumn("_grp", grp)
-        .groupBy(id_col, "_grp")
-        .agg(
-            F.min("start").alias("span_start"),
-            (F.max("start") + F.lit(width)).alias("span_end_excl"),
-            F.count(F.lit(1)).alias("n_windows"),
-        )
-        .drop("_grp")
     )
 
 

@@ -33,47 +33,30 @@ def _stats_join(
     df: DataFrame,
     stats: DataFrame,
     group_col: str | list[str] | None,
-    broadcast_groups: int | None = None,
-    probe: bool = True,
     how: str = "inner",
 ) -> DataFrame:
     """Join a per-group statistics table back onto the fact table.
 
     Ungrouped stats are a single row — always a broadcast cross join.
 
-    With ``probe=True`` (default), grouped stats broadcast only after
-    a bounded ``take`` verifies the cardinality is at most
-    ``broadcast_groups`` (default ``BROADCAST_GROUP_LIMIT``); the
-    fetched rows (a few MB at the cap) then re-enter the plan as a
-    LocalRelation, so the aggregation runs exactly once, nothing stays
-    cached, and the broadcast side is a local table Catalyst sizes
-    precisely — the fact side never shuffles, even in the STATIC plan.
-    Past the threshold the fact side takes one hash shuffle instead of
-    the driver taking an OOM — the correct degradation (the
-    aggregation recomputes inside that join: the probe's job was a
-    separate execution; rare by the tiny-stats contract, and cheap
-    next to the shuffle it accompanies). The bounded probe makes
-    callers EAGER: one aggregation job runs at operator-construction
-    time, not at first action — each caller's docstring states this.
-
-    With ``probe=False``, the operator stays fully LAZY: a plain
-    equi-join whose physical strategy AQE picks at runtime from the
-    stats side's ACTUAL shuffle size (small stats convert to a
-    runtime broadcast join with a local shuffle reader, so no full
-    fact-side exchange is transferred; huge stats keep the safe
-    shuffle join) and the aggregation executes exactly once either
-    way. Use this for repeated pipeline construction or when the
-    extra construction-time job matters more than a guaranteed
-    shuffle-free static plan.
+    Grouped stats broadcast only after a bounded ``take`` verifies the
+    cardinality is at most ``BROADCAST_GROUP_LIMIT``; the fetched rows
+    (a few MB at the cap) then re-enter the plan as a LocalRelation,
+    so the aggregation runs exactly once, nothing stays cached, and
+    the broadcast side is a local table Catalyst sizes precisely — the
+    fact side never shuffles, even in the STATIC plan. Past the
+    threshold the fact side takes one hash shuffle instead of the
+    driver taking an OOM — the correct degradation (the aggregation
+    recomputes inside that join: the probe's job was a separate
+    execution; rare by the tiny-stats contract, and cheap next to the
+    shuffle it accompanies). The bounded probe makes callers EAGER:
+    one aggregation job runs at operator-construction time, not at
+    first action — each caller's docstring states this.
     """
     if group_col is None:
         return df.crossJoin(F.broadcast(stats))
-    if not probe:
-        return df.join(stats, group_col, how)
-    if broadcast_groups is None:
-        broadcast_groups = BROADCAST_GROUP_LIMIT
-    head = stats.take(broadcast_groups + 1)
-    if len(head) <= broadcast_groups:
+    head = stats.take(BROADCAST_GROUP_LIMIT + 1)
+    if len(head) <= BROADCAST_GROUP_LIMIT:
         local = stats.sparkSession.createDataFrame(head, stats.schema)
         return df.join(F.broadcast(local), group_col, how)
     return df.join(stats, group_col, how)
@@ -267,7 +250,6 @@ def minmax_scale(
     value_col: str,
     group_col: str | None = None,
     out_col: str | None = None,
-    probe: bool = True,
 ) -> DataFrame:
     """Min-max normalization of ``value_col`` to [0, 1], optionally per
     ``group_col`` — feature conditioning before clustering / training.
@@ -282,12 +264,10 @@ def minmax_scale(
     IEEE ops with exact min/max inputs, so results are
     bit-deterministic and oracle-checkable.
 
-    Grouped calls are EAGER by default: the :func:`_stats_join`
-    cardinality probe runs one aggregation job at construction time,
-    and past ``BROADCAST_GROUP_LIMIT`` distinct groups the broadcast
-    degrades to a plain shuffle join instead of a driver OOM. Pass
-    ``probe=False`` for a fully lazy plan (plain equi-join; AQE
-    broadcasts small stats at runtime, the aggregation executes once).
+    Grouped calls are EAGER: the :func:`_stats_join` cardinality
+    probe runs one aggregation job at construction time, and past
+    ``BROADCAST_GROUP_LIMIT`` distinct groups the broadcast degrades
+    to a plain shuffle join instead of a driver OOM.
     """
     out_col = out_col or f"{value_col}_scaled"
     v = F.col(value_col).cast("double")
@@ -299,7 +279,7 @@ def minmax_scale(
         bounds = df.groupBy(group_col).agg(
             F.min(v).alias("_mn"), F.max(v).alias("_mx")
         )
-    joined = _stats_join(df, bounds, group_col, probe=probe)
+    joined = _stats_join(df, bounds, group_col)
     scaled = F.when(F.col("_mx") == F.col("_mn"), F.lit(0.5)).otherwise(
         (v - F.col("_mn")) / (F.col("_mx") - F.col("_mn"))
     )
@@ -311,7 +291,6 @@ def standardize(
     value_col: str,
     group_col: str | None = None,
     out_col: str | None = None,
-    probe: bool = True,
 ) -> DataFrame:
     """Z-score standardization of ``value_col`` — (x − mean) / stddev,
     optionally per ``group_col``. The mean/variance come from EXACT
@@ -327,12 +306,10 @@ def standardize(
     side never shuffles. Degenerate groups (stddev 0 or n = 1) map to
     0.0, mirrored in the oracle. Nulls pass through as null.
 
-    Grouped calls are EAGER by default: the :func:`_stats_join`
-    cardinality probe runs one aggregation job at construction time,
-    and past ``BROADCAST_GROUP_LIMIT`` distinct groups the broadcast
-    degrades to a plain shuffle join instead of a driver OOM. Pass
-    ``probe=False`` for a fully lazy plan (plain equi-join; AQE
-    broadcasts small stats at runtime, the aggregation executes once).
+    Grouped calls are EAGER: the :func:`_stats_join` cardinality
+    probe runs one aggregation job at construction time, and past
+    ``BROADCAST_GROUP_LIMIT`` distinct groups the broadcast degrades
+    to a plain shuffle join instead of a driver OOM.
     """
     out_col = out_col or f"{value_col}_z"
     dv = F.col(value_col).cast("decimal(19,4)")
@@ -345,7 +322,7 @@ def standardize(
         moments = df.agg(*aggs)
     else:
         moments = df.groupBy(group_col).agg(*aggs)
-    joined = _stats_join(df, moments, group_col, probe=probe)
+    joined = _stats_join(df, moments, group_col)
     n = F.col("_n").cast("double")
     sx = F.col("_sx").cast("double")
     sxx = F.col("_sxx").cast("double")
@@ -362,7 +339,6 @@ def robust_scale(
     value_col: str,
     group_col: str | None = None,
     out_col: str | None = None,
-    probe: bool = True,
 ) -> DataFrame:
     """Median/IQR robust scaling — (x − median) / (p75 − p25),
     optionally per group. The outlier-insensitive sibling of
@@ -378,12 +354,10 @@ def robust_scale(
     swap in percentile_approx (same shape, sketch state) when groups
     exceed ~10^8 rows and rank-exactness stops mattering.
 
-    Grouped calls are EAGER by default: the :func:`_stats_join`
-    cardinality probe runs one aggregation job at construction time,
-    and past ``BROADCAST_GROUP_LIMIT`` distinct groups the broadcast
-    degrades to a plain shuffle join instead of a driver OOM. Pass
-    ``probe=False`` for a fully lazy plan (plain equi-join; AQE
-    broadcasts small stats at runtime, the aggregation executes once).
+    Grouped calls are EAGER: the :func:`_stats_join` cardinality
+    probe runs one aggregation job at construction time, and past
+    ``BROADCAST_GROUP_LIMIT`` distinct groups the broadcast degrades
+    to a plain shuffle join instead of a driver OOM.
     """
     out_col = out_col or f"{value_col}_robust"
     aggs = [
@@ -395,7 +369,7 @@ def robust_scale(
         quart = df.agg(*aggs)
     else:
         quart = df.groupBy(group_col).agg(*aggs)
-    joined = _stats_join(df, quart, group_col, probe=probe)
+    joined = _stats_join(df, quart, group_col)
     iqr = F.col("_p75") - F.col("_p25")
     scaled = F.when(iqr <= 0.0, F.lit(0.0)).otherwise(
         (F.col(value_col).cast("double") - F.col("_p50")) / iqr
@@ -409,7 +383,6 @@ def impute(
     strategy: str = "mean",
     group_col: str | None = None,
     out_col: str | None = None,
-    probe: bool = True,
 ) -> DataFrame:
     """Missing-value imputation: replace nulls in ``value_col`` with
     the column's (or group's) mean or median — the standard
@@ -423,12 +396,10 @@ def impute(
     Same broadcast shape as the scalers: one tiny aggregate joined
     back, the fact side never shuffles.
 
-    Grouped calls are EAGER by default: the :func:`_stats_join`
-    cardinality probe runs one aggregation job at construction time,
-    and past ``BROADCAST_GROUP_LIMIT`` distinct groups the broadcast
-    degrades to a plain shuffle join instead of a driver OOM. Pass
-    ``probe=False`` for a fully lazy plan (plain equi-join; AQE
-    broadcasts small stats at runtime, the aggregation executes once).
+    Grouped calls are EAGER: the :func:`_stats_join` cardinality
+    probe runs one aggregation job at construction time, and past
+    ``BROADCAST_GROUP_LIMIT`` distinct groups the broadcast degrades
+    to a plain shuffle join instead of a driver OOM.
     """
     out_col = out_col or f"{value_col}_imputed"
     if strategy == "mean":
@@ -444,7 +415,7 @@ def impute(
         fills = df.agg(stat)
     else:
         fills = df.groupBy(group_col).agg(stat)
-    joined = _stats_join(df, fills, group_col, probe=probe)
+    joined = _stats_join(df, fills, group_col)
     return joined.withColumn(
         out_col,
         F.coalesce(F.col(value_col).cast("double"), F.col("_fill")),
@@ -561,7 +532,6 @@ def winsorize(
     upper: float = 0.95,
     group_col: str | None = None,
     out_col: str | None = None,
-    probe: bool = True,
 ) -> DataFrame:
     """Winsorization: clip ``value_col`` at the exact interpolated
     [lower, upper] quantiles, optionally per group — the heavy-tail
@@ -570,8 +540,7 @@ def winsorize(
     (recorded determinism rule), so clipped values are
     oracle-checkable; at corpus scale swap ``percentile_approx`` cut
     points (same plan shape). One tiny quantile aggregation broadcast
-    back (see :func:`_stats_join`; ``probe=False`` for the lazy AQE
-    path); the fact side never shuffles."""
+    back (see :func:`_stats_join`); the fact side never shuffles."""
     out_col = out_col or f"{value_col}_w"
     v = F.col(value_col).cast("double")
     aggs = [
@@ -582,7 +551,7 @@ def winsorize(
         stats = df.agg(*aggs)
     else:
         stats = df.groupBy(group_col).agg(*aggs)
-    joined = _stats_join(df, stats, group_col, probe=probe)
+    joined = _stats_join(df, stats, group_col)
     clipped = F.when(v < F.col("_qlo"), F.col("_qlo")).when(
         v > F.col("_qhi"), F.col("_qhi")
     ).otherwise(v)
@@ -596,7 +565,6 @@ def target_encode(
     smoothing: float = 20.0,
     leave_one_out: bool = False,
     out_col: str | None = None,
-    probe: bool = True,
 ) -> DataFrame:
     """Smoothed target (mean) encoding of a categorical column — the
     high-cardinality-categorical workhorse: each category maps to
@@ -609,7 +577,7 @@ def target_encode(
     All sums are exact DECIMAL(19,4), so the category table is
     deterministic; the final arithmetic runs in double mirroring the
     oracle op-for-op. One category aggregation broadcast back (same
-    shape and ``probe`` contract as the scaler family — fact side
+    shape and eager probe as the scaler family — fact side
     never shuffles) plus one 1-row global-prior broadcast; LOO is a
     pure per-row expression on top, no second shuffle. Null targets
     are excluded from the statistics and encode to the prior (or the
@@ -635,7 +603,6 @@ def target_encode(
         df.crossJoin(F.broadcast(glob)),
         stats,
         cat_col,
-        probe=probe,
         how="left",
     )
     prior = F.col("_gs") / F.col("_gn").cast("double")

@@ -240,7 +240,6 @@ def point_in_polygon_join(
     point_cols: tuple[str, str, str] = ("id", "lat", "lng"),
     poly_cols: tuple[str, str] = ("poly_id", "geom_wkt"),
     how: str = "inner",
-    broadcast_geoms: bool = True,
 ) -> DataFrame:
     """Distributed point-in-polygon join ("which region contains each
     point") via H3 cover bucketing: every polygon explodes to its
@@ -262,10 +261,9 @@ def point_in_polygon_join(
     Scale shape — the cover exchange carries NO geometry: the polygon
     side explodes to bare ``(poly_id, cell)`` pairs (16 bytes/row),
     candidates equi-join on the cell, and only the surviving
-    candidates re-attach the WKT by ``poly_id`` — broadcast when the
-    polygon table fits (``broadcast_geoms=True``, the region-table
-    norm), plain hash join keyed on ``poly_id`` otherwise (the WKT
-    then shuffles once per POLYGON, never once per cover cell). A
+    candidates re-attach the WKT by ``poly_id`` from a broadcast
+    polygon table (the region-table norm), so the WKT ships once per
+    POLYGON, never once per cover cell. A
     10⁴-vertex multipolygon with a 10³-cell cover ships ~16 KB of
     cover keys instead of ~100 MB of repeated WKT — the shuffled
     bytes no longer multiply cover size by geometry size. The exact
@@ -390,9 +388,7 @@ def point_in_polygon_join(
     geoms = polygons.select(
         F.col(gid).alias(f"pg_{gid}"), F.col(gwkt).alias("_wkt")
     )
-    if broadcast_geoms:
-        geoms = F.broadcast(geoms)
-    cand = cand.join(geoms, f"pg_{gid}").where(
+    cand = cand.join(F.broadcast(geoms), f"pg_{gid}").where(
         pip(F.col("_p_lat"), F.col("_p_lng"), F.col("_wkt"))
     )
     matched = cand.select(

@@ -35,7 +35,6 @@ def _normalize_undirected(
     dst: str,
     a: str = "a",
     b: str = "b",
-    keep_self_loops: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Canonical-first normalizer for an arbitrary undirected edge
     list: ONE distinct over the (min, max) canonical pairs (m rows),
@@ -45,34 +44,24 @@ def _normalize_undirected(
     2m directed rows through the dedup exchange to produce the same
     set. Returns (canon, dirs): canon is the deduped x < y half
     (useful directly as the existing-edge set), dirs both
-    orientations; self-loops are dropped unless ``keep_self_loops``
-    (then they appear ONCE, as before)."""
+    orientations; self-loops are dropped."""
     lo, hi = F.least(F.col(src), F.col(dst)), F.greatest(
         F.col(src), F.col(dst)
     )
     canon = (
         edges.select(lo.alias(a), hi.alias(b))
-        .where(
-            (F.col(a) <= F.col(b))
-            if keep_self_loops
-            else (F.col(a) < F.col(b))
-        )
+        .where(F.col(a) < F.col(b))
         .distinct()
     )
-    # The swap-side branch must NOT re-filter canon: with
-    # keep_self_loops=False every canon row already has a < b
-    # strictly, so the swap alone is self-loop-free — and a filter
-    # here pushes below the distinct's partial aggregation, making
-    # the two union branches' exchanges non-identical, which defeats
-    # AQE's runtime exchange reuse and re-runs the caller's WHOLE
-    # edge construction + dedup map side once per branch (profiled:
-    # two duplicate pair-explosion stages under every
-    # k_core/bfs_hops/degree census at sf0.1). Only the
-    # keep_self_loops path needs the a != b cut on the mirror.
-    mirror = canon if not keep_self_loops else canon.where(
-        F.col(a) != F.col(b)
-    )
-    mirror = mirror.select(F.col(b).alias(a), F.col(a).alias(b))
+    # The swap-side branch must NOT re-filter canon: every canon row
+    # already has a < b strictly, so the swap alone is self-loop-free
+    # — and a filter here pushes below the distinct's partial
+    # aggregation, making the two union branches' exchanges
+    # non-identical, which defeats AQE's runtime exchange reuse and
+    # re-runs the caller's WHOLE edge construction + dedup map side
+    # once per branch (profiled: two duplicate pair-explosion stages
+    # under every k_core/bfs_hops/degree census at sf0.1).
+    mirror = canon.select(F.col(b).alias(a), F.col(a).alias(b))
     return canon, canon.unionAll(mirror)
 
 

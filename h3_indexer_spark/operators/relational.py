@@ -727,8 +727,8 @@ def snapshot_diff(
     attribute is never mistaken for absence, and value comparison is
     null-safe (<=>). Keys must be non-null (the standard PK contract —
     a null key row would silently cross-match). At 100 TB, bucket both
-    snapshots on the key at write time and the join plans with ZERO
-    Exchange (writers.write_bucketed_table)."""
+    snapshots on the key at write time (DataFrameWriter.bucketBy) and
+    the join plans with ZERO Exchange."""
     osel = (
         old.select(
             *key_cols,
@@ -792,9 +792,8 @@ def merge_by_key(
     inserted, unmatched target rows pass through, and rows whose
     ``delete_col`` flag is true on the source side are dropped
     (matched → delete; unmatched-delete → no-op tombstone). This is
-    the key-level complement to partition-level
-    ``sources.writers.upsert_partitions`` and the CDC classifier
-    ``snapshot_diff`` (parity surface: reference emits full snapshots
+    the key-level complement to the CDC classifier ``snapshot_diff``
+    (parity surface: reference emits full snapshots
     only — this is beyond-reference MERGE INTO semantics, expressed as
     one relational plan instead of a table-format transaction log).
 
@@ -802,7 +801,7 @@ def merge_by_key(
     sides shuffle once on the same key; no window, no second pass.
     Keys must be non-null (PK contract, same as snapshot_diff). At
     100 TB: bucket the target on the key at write time
-    (writers.write_bucketed_table) and re-bucket each merged output
+    (DataFrameWriter.bucketBy) and re-bucket each merged output
     the same way — then every nightly merge joins with ZERO Exchange
     on the target side (locked in tests/test_round6_ops.py), reading
     and rewriting only shuffled-once source data. Idempotent: merging
@@ -1144,8 +1143,8 @@ def compaction_plan(
     size_col: str,
     target_bytes: int,
 ) -> DataFrame:
-    """Small-file compaction PLANNER — the oracle-checkable sibling of
-    sources/writers.py::compact_parquet (which rewrites): given a file
+    """Small-file compaction PLANNER (it plans the rewrite; the
+    rewrite itself is a coalesce per bin): given a file
     inventory (partition, file id, byte size), assign files to output
     bins by next-fit bin packing so each rewrite task reads ~
     ``target_bytes``. This is the maintenance-advisor table a

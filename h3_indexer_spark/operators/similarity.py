@@ -131,23 +131,6 @@ def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[flo
     ]
 
 
-def lsh_bucket(
-    df: DataFrame,
-    planes: list[list[float]],
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Sign-LSH bucket id per vector: one long whose bits are the signs
-    of the dot products with the random hyperplanes. Append-only and
-    fully JVM-side, so bucketing 10^11 vectors is a narrow map."""
-    bucket = F.lit(0).cast("long")
-    for b, plane in enumerate(planes):
-        bit = F.when(_dot_expr(vec_col, plane) >= 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        bucket = bucket.bitwiseOR(F.shiftleft(bit, b))
-    return df.withColumn("lsh_bucket", bucket)
-
-
 def lsh_bucket_fast(
     df: DataFrame,
     planes: list[list[float]],
@@ -155,9 +138,9 @@ def lsh_bucket_fast(
     out_col: str = "lsh_bucket",
 ) -> DataFrame:
     """Sign-LSH bucket id per vector via one numpy GEMM per Arrow
-    batch. (The pure-expression variant in lsh_bucket keeps everything
-    JVM-side but builds an n_planes × dim term tree — beyond ~8 planes
-    the generated code exceeds codegen budgets and falls out of
+    batch. (A pure-expression variant would keep everything JVM-side
+    but build an n_planes × dim term tree — beyond ~8 planes the
+    generated code exceeds codegen budgets and falls out of
     compilation; the GEMM path is faster from ~4 planes up.)"""
     import numpy as np
 

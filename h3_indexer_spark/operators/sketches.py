@@ -71,17 +71,6 @@ def hll_registers(
     )
 
 
-def hll_merge(*register_tables: DataFrame) -> DataFrame:
-    """Merge register tables (sketch union): groupBy-max over the
-    unioned rows — the mergeability that makes HLL pre-aggregable."""
-    if not register_tables:
-        raise ValueError("need at least one register table")
-    out = register_tables[0]
-    for t in register_tables[1:]:
-        out = out.unionByName(t)
-    return out.groupBy("bucket").agg(F.max("rho").alias("rho"))
-
-
 def hll_estimate(registers: DataFrame, p: int = 8) -> float:
     """The Flajolet-Fuss-Gandouet-Meunier 2007 estimate from a
     register table (driver-side readout over ≤2^p rows, with the
@@ -110,8 +99,9 @@ def hll_registers_grouped(
     deployment shape: one ≤2^p-row register set per group key (per
     day, per event type, per tenant), pre-aggregable into any coarser
     rollup with a groupBy-max (sketch-of-union == merge-of-sketches,
-    the same algebra hll_merge locks globally). Output: (group, bucket,
-    rho) integer rows — hash-checkable like the global variant.
+    the same algebra that makes global HLL pre-aggregable). Output:
+    (group, bucket, rho) integer rows — hash-checkable like the
+    global variant.
 
     Scale: ONE groupBy over (group, bucket) with map-side partial max
     — each partition contributes at most |groups|·2^p rows to the
@@ -264,7 +254,7 @@ def count_min_registers(
     reproduces the registers bit-for-bit.
 
     Unlike HLL's max-merge, CMS is a LINEAR sketch: registers from
-    different slices merge by groupBy-SUM (``cms_merge``), and point
+    different slices merge by groupBy-SUM over the union, and point
     queries read min over depth rows — a one-sided (over-)estimate
     with ε ≈ e/width overcount mass and failure prob e^-depth.
 
@@ -305,19 +295,6 @@ def count_min_registers(
         )
         .agg(F.sum("_w").alias("cnt"))
     )
-
-
-def cms_merge(*register_tables: DataFrame) -> DataFrame:
-    """Merge CMS register tables (sketch of the concatenated
-    streams): groupBy-SUM over the unioned rows — the linearity that
-    lets per-partition / per-day sketches pre-aggregate into any
-    coarser rollup."""
-    if not register_tables:
-        raise ValueError("need at least one register table")
-    out = register_tables[0]
-    for t in register_tables[1:]:
-        out = out.unionByName(t)
-    return out.groupBy("depth", "bucket").agg(F.sum("cnt").alias("cnt"))
 
 
 def count_min_estimate(
@@ -395,7 +372,7 @@ def kmv_bottom_k(df: DataFrame, col: str, k: int = 64) -> DataFrame:
     (rank, hash_val) — exact integers, hash-checkable cross-engine.
 
     Mergeability: bottom-k(A ∪ B) = bottom-k(bottom-k(A) ∪
-    bottom-k(B)) (``kmv_merge``), so per-slice sketches union into
+    bottom-k(B)), so per-slice sketches union into
     any rollup. Scale: distinct-by-hash collapses map-side, then
     orderBy(k).limit is a TakeOrderedAndProject — every partition
     forwards at most k rows, no global sort materializes."""
@@ -413,27 +390,6 @@ def kmv_bottom_k(df: DataFrame, col: str, k: int = 64) -> DataFrame:
     return hashes.select(
         F.row_number().over(W.orderBy("hash_val")).alias("rank"),
         "hash_val",
-    )
-
-
-def kmv_merge(k: int, *sketches: DataFrame) -> DataFrame:
-    """Union bottom-k sketches into the bottom-k of the union —
-    re-rank the distinct hash union and keep the k smallest."""
-    if not sketches:
-        raise ValueError("need at least one sketch")
-    out = sketches[0].select("hash_val")
-    for t in sketches[1:]:
-        out = out.unionByName(t.select("hash_val"))
-    from pyspark.sql import Window as W
-
-    return (
-        out.distinct()
-        .orderBy("hash_val")
-        .limit(k)
-        .select(
-            F.row_number().over(W.orderBy("hash_val")).alias("rank"),
-            "hash_val",
-        )
     )
 
 
@@ -502,7 +458,8 @@ def quantile_sketch(
     Mergeability (the rollup law, same shape as KMV):
     sketch(A ∪ B) = merge(sketch(A), sketch(B)) for disjoint slices —
     per-partition/per-day registers union into any coarser rollup
-    without touching raw data (``quantile_sketch_merge``).
+    without touching raw data (union, then re-take the k hash-smallest
+    rows).
 
     Scale: bottom-k rides orderBy(k).limit — TakeOrderedAndProject,
     every partition forwards at most k rows, no global sort. Output:
@@ -517,32 +474,6 @@ def quantile_sketch(
     )
     return (
         rows.orderBy("hash_val", "value")
-        .limit(k)
-        .select(
-            F.row_number()
-            .over(W.orderBy("hash_val", "value"))
-            .cast("bigint")
-            .alias("rank"),
-            "hash_val",
-            "value",
-        )
-    )
-
-
-def quantile_sketch_merge(k: int, *sketches: DataFrame) -> DataFrame:
-    """Merge quantile register tables of DISJOINT slices: union and
-    re-take the k hash-smallest rows — bottom-k(A ∪ B) =
-    bottom-k(bottom-k(A) ∪ bottom-k(B)), the KMV law with values
-    along for the ride."""
-    from pyspark.sql import Window as W
-
-    if not sketches:
-        raise ValueError("need at least one sketch")
-    out = sketches[0].select("hash_val", "value")
-    for s in sketches[1:]:
-        out = out.unionByName(s.select("hash_val", "value"))
-    return (
-        out.orderBy("hash_val", "value")
         .limit(k)
         .select(
             F.row_number()

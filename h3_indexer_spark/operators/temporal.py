@@ -99,7 +99,6 @@ def range_join(
     hi_col: str,
     bucket_width: float,
     how: str = "inner",
-    broadcast_intervals: bool = True,
 ) -> DataFrame:
     """Join fact rows to the intervals containing them:
     ``lo <= fact.value < hi`` — as an equi-join on a bucket id.
@@ -111,11 +110,10 @@ def range_join(
     length: shorter → more interval replication; longer → more
     false-pair filtering.
 
-    ``broadcast_intervals`` (default) pins the build side: interval
+    The interval side is always the broadcast build side: interval
     tables often come from literals/collected configs whose stats
     Catalyst doesn't know, and without the hint it can pick the FACT
-    side to broadcast — fatal at scale. Pass False for genuinely large
-    interval tables (the join then shuffles both sides on bucket id).
+    side to broadcast — fatal at scale.
     """
     bkt_f, bkt_i = "_range_bucket_f", "_range_bucket_i"
     f = fact.withColumn(
@@ -130,8 +128,6 @@ def range_join(
             )
         ),
     )
-    if broadcast_intervals:
-        iv = F.broadcast(iv)
     # the exact range predicate lives IN the join condition, not a
     # post-join filter: a filter after an outer join would discard the
     # null-extended rows and silently degenerate how='left' to inner
@@ -140,7 +136,7 @@ def range_join(
         & (F.col(value_col) >= F.col(lo_col))
         & (F.col(value_col) < F.col(hi_col))
     )
-    return f.join(iv, cond, how).drop(bkt_f, bkt_i)
+    return f.join(F.broadcast(iv), cond, how).drop(bkt_f, bkt_i)
 
 
 def interval_overlap_join(
@@ -151,7 +147,6 @@ def interval_overlap_join(
     r_lo: str,
     r_hi: str,
     bucket_width: float,
-    broadcast_right: bool = False,
 ) -> DataFrame:
     """Join interval PAIRS that overlap: ``l_lo < r_hi AND r_lo <
     l_hi`` (half-open) — the temporal generalization of
@@ -164,9 +159,10 @@ def interval_overlap_join(
     surface once per bucket; instead of a distinct (an extra
     corpus-sized shuffle), the join condition pins each pair to its
     FIRST shared bucket — ``greatest(floor(l_lo/w), floor(r_lo/w))``
-    — so every overlapping pair appears exactly once. Inner join
-    only: outer semantics over exploded replicas would null-extend
-    per bucket.
+    — so every overlapping pair appears exactly once. The right side
+    is the broadcast build side (a bounded window/calendar table).
+    Inner join only: outer semantics over exploded replicas would
+    null-extend per bucket.
     """
     bl, br = "_ov_bucket_l", "_ov_bucket_r"
     lf = left.withColumn(
@@ -187,8 +183,6 @@ def interval_overlap_join(
             )
         ),
     )
-    if broadcast_right:
-        rt = F.broadcast(rt)
     cond = (
         (F.col(bl) == F.col(br))
         & (
@@ -201,7 +195,7 @@ def interval_overlap_join(
         & (F.col(l_lo) < F.col(r_hi))
         & (F.col(r_lo) < F.col(l_hi))
     )
-    return lf.join(rt, cond, "inner").drop(bl, br)
+    return lf.join(F.broadcast(rt), cond, "inner").drop(bl, br)
 
 
 def sessionize(

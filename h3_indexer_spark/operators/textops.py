@@ -226,7 +226,6 @@ def tfidf_topk(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 3,
-    broadcast_vocab: bool = True,
 ) -> DataFrame:
     """Top-k highest-scoring terms per document, score = tf · N / df
     (linear inverse document frequency — integer-exact arithmetic, so
@@ -234,11 +233,8 @@ def tfidf_topk(
     when ulp-level portability is not required).
 
     Two shuffles: the (doc, term) count and the per-term document
-    frequency; the df table broadcasts back when the vocabulary is
-    bounded (``broadcast_vocab``, default). For open web-scale
-    vocabularies pass False — the join then shuffles on term, which
-    both sides are already partitioned by. Rank window is per-document
-    (WindowGroupLimit pushes the k)."""
+    frequency; the df table broadcasts back (a bounded vocabulary).
+    Rank window is per-document (WindowGroupLimit pushes the k)."""
     from pyspark.sql import Window
 
     tokens = df.select(
@@ -255,9 +251,8 @@ def tfidf_topk(
     n_docs = df.agg(
         F.count_distinct(F.col(id_col)).cast("double").alias("_n_docs")
     )
-    dfreq_side = F.broadcast(dfreq) if broadcast_vocab else dfreq
     scored = (
-        tf.join(dfreq_side, "term")
+        tf.join(F.broadcast(dfreq), "term")
         .crossJoin(F.broadcast(n_docs))
         .select(
             id_col,
@@ -408,8 +403,6 @@ def bpe_pair_counts(
     df: DataFrame,
     text_col: str = "text",
     k: int = 30,
-    symbol_col: Column | None = None,
-    weight_col: str | None = None,
 ) -> DataFrame:
     """One iteration of the BPE tokenizer-trainer's pair census: the
     corpus-wide frequency of every adjacent symbol pair, weighted by
@@ -423,114 +416,29 @@ def bpe_pair_counts(
     a plain word-count), (2) explode each distinct word's adjacent
     character pairs and sum word counts per pair. Pair work is then
     ∝ |vocab| × word-length, independent of corpus size. Output:
-    (pair, n) — top ``k`` by (n desc, pair asc), exact BIGINT counts.
-
-    ``symbol_col``/``weight_col`` run the census over an existing
-    symbol-sequence table (array<string> + count) instead — the
-    later-round input of ``bpe_train``."""
-    if symbol_col is not None:
-        pairs = df.select(
-            F.explode(
-                F.zip_with(
-                    F.slice(
-                        symbol_col, 1,
-                        F.greatest(F.size(symbol_col) - 1, F.lit(0)),
-                    ),
-                    F.slice(
-                        symbol_col, 2,
-                        F.greatest(F.size(symbol_col) - 1, F.lit(0)),
-                    ),
-                    lambda a, b: F.concat(a, F.lit(" "), b),
-                )
-            ).alias("pair"),
-            F.col(weight_col).alias("wn"),
-        )
-    else:
-        words = df.select(
-            F.explode(_lower_tokens(text_col)).alias("w")
-        ).where(F.length("w") >= 2)
-        wc = words.groupBy("w").agg(F.count(F.lit(1)).alias("wn"))
-        # adjacent CHARACTER pairs of each distinct word; sequence()
-        # only after the length>=2 filter (Spark's sequence(1, 0)
-        # counts DOWN — it would fabricate pairs for 1-char words)
-        pairs = wc.select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, length(w) - 1), "
-                    "i -> substring(w, i, 2))"
-                )
-            ).alias("pair"),
-            F.col("wn"),
-        )
+    (pair, n) — top ``k`` by (n desc, pair asc), exact BIGINT counts."""
+    words = df.select(
+        F.explode(_lower_tokens(text_col)).alias("w")
+    ).where(F.length("w") >= 2)
+    wc = words.groupBy("w").agg(F.count(F.lit(1)).alias("wn"))
+    # adjacent CHARACTER pairs of each distinct word; sequence() only
+    # after the length>=2 filter (Spark's sequence(1, 0) counts DOWN —
+    # it would fabricate pairs for 1-char words)
+    pairs = wc.select(
+        F.explode(
+            F.expr(
+                "transform(sequence(1, length(w) - 1), "
+                "i -> substring(w, i, 2))"
+            )
+        ).alias("pair"),
+        F.col("wn"),
+    )
     return (
         pairs.groupBy("pair")
         .agg(F.sum("wn").cast("bigint").alias("n"))
         .orderBy(F.col("n").desc(), F.col("pair").asc())
         .limit(k)
     )
-
-
-def bpe_train(
-    df: DataFrame,
-    text_col: str = "text",
-    n_merges: int = 8,
-) -> list[tuple[str, str]]:
-    """Bounded byte-pair-encoding trainer: ``n_merges`` rounds of
-    (census the adjacent pairs → pick the most frequent → merge it
-    everywhere), greedy left-to-right within each word — the exact
-    classic algorithm, distributed.
-
-    The corpus collapses ONCE to distinct words with counts; every
-    later round runs over that |vocab|-sized symbol table (array of
-    symbols + weight). The per-round argmax is a 1-row TakeOrdered
-    action (bounded driver pull); the merge rewrite is a pure
-    higher-order-function fold (aggregate() with a look-behind on
-    the accumulator tail — no Python in the rewrite). Rounds are
-    localCheckpointed so the iterative plan doesn't nest. Returns
-    the merge list in order — ties break lexicographically, so the
-    result is deterministic on any cluster."""
-    words = df.select(
-        F.explode(_lower_tokens(text_col)).alias("w")
-    ).where(F.length("w") >= 2)
-    sym = (
-        words.groupBy("w")
-        .agg(F.count(F.lit(1)).alias("wn"))
-        .select(
-            F.expr("split(w, '')").alias("syms"),
-            F.col("wn"),
-        )
-        .localCheckpoint()
-    )
-    merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
-        top = bpe_pair_counts(
-            sym, k=1, symbol_col=F.col("syms"), weight_col="wn"
-        ).collect()
-        if not top:
-            break
-        a, b = top[0]["pair"].split(" ", 1)
-        merges.append((a, b))
-        merged = F.lit(a + b)
-        # greedy left-to-right merge: fold symbols; when the
-        # accumulator tail is `a` and the next symbol is `b`,
-        # replace the tail with the merged symbol
-        sym = sym.select(
-            F.aggregate(
-                F.col("syms"),
-                F.expr("CAST(array() AS array<string>)"),
-                lambda acc, s: F.when(
-                    (F.size(acc) > 0)
-                    & (F.element_at(acc, -1) == F.lit(a))
-                    & (s == F.lit(b)),
-                    F.concat(
-                        F.slice(acc, 1, F.size(acc) - 1),
-                        F.array(merged),
-                    ),
-                ).otherwise(F.concat(acc, F.array(s))),
-            ).alias("syms"),
-            F.col("wn"),
-        ).localCheckpoint()
-    return merges
 
 
 def bm25_scores(
@@ -624,7 +532,6 @@ def lm_score_stupid_backoff(
     id_col: str = "doc_id",
     alpha: float = 0.4,
     quant: int = 1_000_000,
-    broadcast_counts: bool = True,
 ) -> DataFrame:
     """Per-document language-model quality score — the CCNet-style
     corpus filter: train bigram/unigram counts on ``train`` (defaults
@@ -647,9 +554,8 @@ def lm_score_stupid_backoff(
 
     Scale shape: counts are two groupBy aggregations over the train
     corpus; scoring explodes each doc's adjacent token pairs and
-    equi-joins the count tables on the bigram/unigram keys (broadcast
-    when the vocabulary is small — this fixture; shuffle hash join on
-    the token key at web scale, documented), then ONE doc-keyed
+    equi-joins the broadcast count tables on the bigram/unigram keys
+    (sized for a bounded vocabulary), then ONE doc-keyed
     integer sum. OOV tokens (count 0 even after backoff) contribute
     the floor of log10(alpha/T) — a finite floor, not -inf, keeping
     the score total-ordered."""
@@ -694,23 +600,18 @@ def lm_score_stupid_backoff(
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c_vw"))
     )
-    # broadcast_counts=True fits fixture-sized vocabularies; at web
-    # scale the bigram table outgrows a broadcast — pass False and the
-    # count attachment becomes plain hash joins keyed on the token
-    # columns (same semantics, one shuffle per count table)
-    maybe_b = F.broadcast if broadcast_counts else (lambda d: d)
     scored_pairs = (
         pairs_of(docs, with_id=True)
-        .join(maybe_b(bi), ["w1", "w2"], "left")
+        .join(F.broadcast(bi), ["w1", "w2"], "left")
         .join(
-            maybe_b(uni.select(F.col("w").alias("w1"),
-                               F.col("c_w").alias("c_v"))),
+            F.broadcast(uni.select(F.col("w").alias("w1"),
+                                   F.col("c_w").alias("c_v"))),
             "w1",
             "left",
         )
         .join(
-            maybe_b(uni.select(F.col("w").alias("w2"),
-                               F.col("c_w").alias("c_w2"))),
+            F.broadcast(uni.select(F.col("w").alias("w2"),
+                                   F.col("c_w").alias("c_w2"))),
             "w2",
             "left",
         )
@@ -743,7 +644,6 @@ def vocab_encode(
     text_col: str = "text",
     id_col: str = "doc_id",
     vocab_size: int = 1000,
-    broadcast_vocab: bool = True,
 ) -> DataFrame:
     """Rank-based vocabulary encoding — the tokenizer-adjacent step
     between raw text and model-ready integer sequences: the corpus's
@@ -755,10 +655,8 @@ def vocab_encode(
     Scale shape: ONE word-count aggregation (the |vocab| table), a
     top-N rank over that aggregated table (WindowGroupLimit-style cut
     at vocab_size rows), then a narrow position explode joined to the
-    vocabulary — broadcast by default (a 1000-row dimension; pass
-    ``broadcast_vocab=False`` for million-token vocabularies and the
-    attachment becomes a token-keyed hash join). No per-row Python
-    anywhere."""
+    broadcast vocabulary (a ``vocab_size``-row dimension). No per-row
+    Python anywhere."""
     from pyspark.sql import Window
 
     toks = F.filter(_lower_tokens(text_col), lambda t: F.length(t) > 0)
@@ -773,8 +671,6 @@ def vocab_encode(
         .where(F.col("token_id") <= vocab_size)
         .select("tok", "token_id")
     )
-    if broadcast_vocab:
-        vocab = F.broadcast(vocab)
     positions = df.select(
         F.col(id_col),
         F.posexplode(toks).alias("_pos0", "tok"),
@@ -783,7 +679,7 @@ def vocab_encode(
         (F.col("_pos0") + F.lit(1)).alias("pos"),
         "tok",
     )
-    return positions.join(vocab, "tok", "left").select(
+    return positions.join(F.broadcast(vocab), "tok", "left").select(
         id_col,
         F.col("pos").cast("int").alias("pos"),
         F.coalesce(F.col("token_id"), F.lit(0)).cast("int").alias(
@@ -797,8 +693,8 @@ _BPE_SEP = "|"  # never appears in symbols: tokens are \w+ only
 
 def _bpe_apply_merge(syms: Column, a: str, b: str) -> Column:
     """Apply ONE BPE merge (a, b) → ab to a symbol-array column,
-    greedy left-to-right — the exact rewrite bpe_train's fold
-    performs, restated so the accumulator is a STRING (symbols joined
+    greedy left-to-right — the classic BPE rewrite, with the
+    accumulator a STRING (symbols joined
     by ``_BPE_SEP``) instead of an array: a string accumulator is
     what DuckDB's list_reduce can mirror (its accumulator must have
     the element type), which is what makes the encoding
@@ -843,17 +739,16 @@ def bpe_encode_words(
     text_col: str = "text",
 ) -> DataFrame:
     """Apply a trained BPE merge list to the corpus VOCABULARY — the
-    scale-right half of the train/apply tokenizer pair (bpe_train
-    learns the merges; this encodes with them). The corpus collapses
+    apply half of a BPE tokenizer (bpe_pair_counts is one round of
+    the trainer's census). The corpus collapses
     ONCE to distinct words with counts, then every merge applies in
     rank order as a pure higher-order-function fold over each word's
-    symbol array — work is ∝ |vocab| · |merges|, never corpus size,
-    and per-document encodings attach by joining this table back
-    (bpe_encode_docs). Merge application is the classic sequential
-    semantics (merge r rewrites everywhere before merge r+1 — the
-    per-round rewrite bpe_train itself performs), so
-    bpe_encode_words(corpus, bpe_train(corpus)) reproduces the
-    trainer's final symbol table exactly (test-locked).
+    symbol array — work is ∝ |vocab| · |merges|, never corpus size;
+    per-document encodings attach by joining this table back on the
+    word. Merge application is the classic sequential semantics
+    (merge r rewrites everywhere before merge r+1, the per-round
+    rewrite a BPE trainer performs; test-locked against a pure-Python
+    reference).
 
     Output: (word, wn, n_symbols, encoded) — ``encoded`` joins the
     final symbols with spaces; all scalar columns, hash-checkable."""
@@ -873,51 +768,6 @@ def bpe_encode_words(
         F.col("wn").cast("bigint").alias("wn"),
         F.size(col).cast("int").alias("n_symbols"),
         F.array_join(col, " ").alias("encoded"),
-    )
-
-
-def bpe_encode_docs(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    broadcast_vocab: bool = True,
-) -> DataFrame:
-    """Per-document BPE encoding: tokenize, attach each word's
-    encoding from the vocabulary-level table (encode the vocab ONCE,
-    join back — never re-fold per occurrence), and reassemble the
-    document in token order. Output: (id, n_words, n_symbols,
-    encoded_text) with ``encoded_text`` the space-joined symbol
-    stream in document order (order restored by an explicit
-    position sort inside the aggregation — deterministic, no
-    collect_list luck). ``broadcast_vocab=False`` switches the
-    attachment to a word-keyed hash join for vocabularies too large
-    to broadcast."""
-    vocab = bpe_encode_words(df, merges, text_col).select(
-        F.col("word").alias("w"), "n_symbols", "encoded"
-    )
-    if broadcast_vocab:
-        vocab = F.broadcast(vocab)
-    toks = F.filter(_lower_tokens(text_col), lambda t: F.length(t) > 0)
-    positions = df.select(
-        F.col(id_col), F.posexplode(toks).alias("pos", "w")
-    )
-    return (
-        positions.join(vocab, "w")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_words"),
-            F.sum("n_symbols").cast("bigint").alias("n_symbols"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("pos", "encoded"))
-                    ),
-                    lambda x: x["encoded"],
-                ),
-                " ",
-            ).alias("encoded_text"),
-        )
     )
 
 
@@ -1370,7 +1220,6 @@ def rake_keywords(
     id_col: str = "doc_id",
     k: int = 10,
     quant: float = 1e9,
-    broadcast_vocab: bool = True,
 ) -> "DataFrame":
     """Corpus-level keyword extraction, RAKE-lite (Rose et al. 2010):
     candidate phrases are maximal runs of non-stopword tokens, each
@@ -1394,9 +1243,8 @@ def rake_keywords(
 
     Scale shape: one per-document window (the run-id cumulative sum),
     one (doc, run) aggregation, one word-keyed aggregation over the
-    phrase-word table, a map-side join back (broadcast when the
-    vocabulary is bounded — ``broadcast_vocab``, same trade as
-    tfidf_topk), and a TakeOrderedAndProject for the top-k. Nothing
+    phrase-word table, a broadcast join back (a bounded vocabulary,
+    as in tfidf_topk), and a TakeOrderedAndProject for the top-k. Nothing
     quadratic, nothing collected."""
     from pyspark.sql import Window
 
@@ -1442,9 +1290,8 @@ def rake_keywords(
         .cast("bigint")
         .alias("_wscore_q")
     )
-    ws_side = F.broadcast(word_scores) if broadcast_vocab else word_scores
     occ_scores = (
-        pw.join(ws_side, "_w")
+        pw.join(F.broadcast(word_scores), "_w")
         .groupBy("_d", "_run", "phrase")
         .agg(F.sum("_wscore_q").alias("_score_q"))
     )

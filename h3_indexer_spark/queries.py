@@ -666,7 +666,7 @@ def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return interval_overlap_join(
         sessions, windows, "s_lo", "s_hi", "w_lo", "w_hi",
-        bucket_width=float(hour_us), broadcast_right=True,
+        bucket_width=float(hour_us),
     ).select("user_id", "session_id", F.col("w_lo").alias("win_start_us"))
 
 
@@ -1287,9 +1287,8 @@ def q_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequency — one iteration of byte-pair-encoding training. The
     corpus collapses to distinct words first, so pair work is
     ∝ |vocab|, not corpus size; counts are exact BIGINTs and the
-    top-30 is (n desc, pair asc)-deterministic. The bounded
-    multi-round merge loop (bpe_train) is locked against a pure-
-    Python reference in tests/test_round7_ops.py."""
+    top-30 is (n desc, pair asc)-deterministic. Applying a trained
+    merge list is q_bpe_encode (bpe_encode_words)."""
     from h3_indexer_spark.operators.textops import bpe_pair_counts
 
     return bpe_pair_counts(load(spark, sf_dir, "documents"), "text", k=30)
@@ -1941,10 +1940,8 @@ def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact duplicated-passage detection (operators/dedup.py::
     duplicated_spans): every 8-token window occurring >= 2 times in the
     corpus, with positions — the n-gram formulation of exact substring
-    dedup (Lee et al. 2022). One shuffle (count window over the gram).
-    This string-keyed variant is the oracle; hashed=True is the 100 TB
-    sibling (hash replaces the string as the shuffle key), locked
-    equivalent by test."""
+    dedup (Lee et al. 2022). One shuffle (count window over the gram,
+    keyed by the gram string)."""
     from h3_indexer_spark.operators.dedup import duplicated_spans
 
     out = duplicated_spans(
@@ -8234,10 +8231,10 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenizer APPLY (operators/textops.py::bpe_encode_words):
     the corpus vocabulary encoded with a fixed 8-merge table, top-40
     words by frequency — the missing half of the train/apply pair
-    (q_bpe_pairs censuses, bpe_train learns, this encodes). Work is
+    (q_bpe_pairs censuses, this encodes). Work is
     ∝ |vocab|·|merges| via a pure aggregate() fold per word; the
-    string-accumulator restatement of the trainer's look-behind fold
-    is what DuckDB's list_reduce mirrors exactly."""
+    string-accumulator form of the look-behind merge fold is what
+    DuckDB's list_reduce mirrors exactly."""
     from h3_indexer_spark.operators.textops import bpe_encode_words
 
     enc = bpe_encode_words(load(spark, sf_dir, "documents"), _BPE_MERGES)
@@ -11741,7 +11738,7 @@ def q_file_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction_plan) over the documents inventory (source =
     partition, n_chars = bytes, 2 KiB target) — the nightly
     maintenance-advisor table the partitioned sink family
-    (sources/writers.py::compact_parquet executes what this plans).
+    (a coalesce per bin executes what this plans).
     Next-fit bin packing via ONE partition-keyed cumulative window;
     exact BIGINT arithmetic, deterministic by id order."""
     from h3_indexer_spark.operators.relational import compaction_plan

@@ -2,7 +2,8 @@
 
 Parity: reference ``spark/spark.py:154-196`` + call sites
 ``main.py:63-64,95-96`` — overwrite-mode snappy Parquet partitioned by
-``(h3_resolution, h3_r3_parent)`` with ≤500k records per file.
+``(h3_resolution, h3_r3_parent)`` with ≤500k records per file (the
+session's ``spark.sql.files.maxRecordsPerFile``, set in session.py).
 
 Scale posture: the caller repartitions by the partition key first
 (operators.relational.repartition_by), so each task owns few partition
@@ -18,114 +19,18 @@ from pyspark.sql import DataFrame
 from h3_indexer_spark.constants import OUTPUT_PARTITION_COLS
 
 
-def write_partitioned_parquet(
-    df: DataFrame,
-    path: str,
-    partition_cols: tuple[str, ...] = OUTPUT_PARTITION_COLS,
-    max_records_per_file: int = 500_000,
-    mode: str = "overwrite",
-) -> None:
+def write_partitioned_parquet(df: DataFrame, path: str) -> None:
     (
-        df.write.mode(mode)
+        df.write.mode("overwrite")
         .option("compression", "snappy")
-        .option("maxRecordsPerFile", str(max_records_per_file))
-        .partitionBy(*partition_cols)
+        .partitionBy(*OUTPUT_PARTITION_COLS)
         .parquet(path)
     )
 
 
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_parquet(df: DataFrame, path: str) -> None:
     """Unpartitioned sink for intermediate artifacts."""
-    df.write.mode(mode).option("compression", "snappy").parquet(path)
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    bucket_cols: str | list[str],
-    n_buckets: int = 32,
-    sort_cols: str | list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed (hash-clustered) managed table — the storage-level
-    answer to repeated big-big joins/aggregations on the same key: two
-    tables bucketed on the join key with the same bucket count join
-    WITHOUT any Exchange (locked in tests/test_sources.py), because
-    the files themselves carry the hash partitioning; a groupBy on the
-    bucket key likewise skips its shuffle. At 100 TB, bucketing the
-    fact table once at ingest amortizes the shuffle every downstream
-    join would otherwise pay.
-
-    ``sort_cols`` additionally orders rows within each bucket file, so
-    a sort-merge join reads presorted runs (and min/max row-group
-    stats tighten for the sort column). Requires a catalog
-    (``saveAsTable``) — bucketing metadata lives in the table, not in
-    loose parquet files.
-    """
-    buckets = (
-        [bucket_cols] if isinstance(bucket_cols, str) else list(bucket_cols)
-    )
-    w = (
-        df.write.mode(mode)
-        .option("compression", "snappy")
-        .bucketBy(n_buckets, *buckets)
-    )
-    if sort_cols is not None:
-        sorts = [sort_cols] if isinstance(sort_cols, str) else list(sort_cols)
-        w = w.sortBy(*sorts)
-    w.format("parquet").saveAsTable(table)
-
-
-def compact_parquet(
-    spark,
-    src_path: str,
-    dst_path: str,
-    target_mb: int = 128,
-) -> int:
-    """Small-files compaction — the maintenance job every long-running
-    partitioned sink needs: N tiny files (the classic output of many
-    incremental/streaming writes) rewritten as ceil(total_bytes /
-    target_mb) right-sized files. Small files hurt twice at 100 TB:
-    every query pays per-file open/footer costs, and the driver holds
-    file metadata for all of them.
-
-    Sizing comes from the actual on-disk bytes (not a row-count
-    guess) via the Hadoop FileSystem API, so it is correct on ANY
-    store the session can read (s3a://, hdfs://, file:…) — a
-    local-path stat would silently size remote datasets at 0 and
-    coalesce everything into one task. The rewrite is a coalesce — a
-    narrow, shuffle-free repack that only merges read-splits (it can
-    only lower the partition count, so the written file count may
-    come in under the byte-derived target). Returns the ACTUAL output
-    file count, read back from the written dataset. ``dst_path`` must
-    differ from ``src_path``: an in-place overwrite would delete the
-    source under the lazy read (use a temp dir + swap for in-place
-    compaction)."""
-    import math
-
-    from urllib.parse import urlparse
-
-    if urlparse(dst_path).path.rstrip("/") == urlparse(
-        src_path
-    ).path.rstrip("/") and urlparse(dst_path).netloc == urlparse(
-        src_path
-    ).netloc:
-        raise ValueError(
-            "compact_parquet cannot overwrite its own input "
-            "(dst_path == src_path); write to a scratch dir and swap"
-        )
-    df = spark.read.parquet(src_path)
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(src_path)
-    fs = hpath.getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
-    total = fs.getContentSummary(hpath).getLength()
-    n_out = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
-    df.coalesce(n_out).write.mode("overwrite").option(
-        "compression", "snappy"
-    ).parquet(dst_path)
-    return len(spark.read.parquet(dst_path).inputFiles())
+    df.write.mode("overwrite").option("compression", "snappy").parquet(path)
 
 
 def zorder_write(
@@ -134,7 +39,6 @@ def zorder_write(
     cols: list[str],
     n_files: int = 16,
     bits: int = 12,
-    accuracy: int = 10_000,
 ) -> None:
     """Z-order-clustered Parquet layout for multi-dimensional data
     skipping (the OPTIMIZE ZORDER technique of lakehouse table
@@ -160,9 +64,7 @@ def zorder_write(
     pruning compares VALUE ranges, which equal-width buckets keep
     uniform); under extreme value skew switch the rank source to
     quantile cut points (features.quantile_bins) so the curve spends
-    its resolution where the data mass is. Nulls rank lowest.
-    ``accuracy`` is accepted for signature-compatibility with that
-    quantile variant."""
+    its resolution where the data mass is. Nulls rank lowest."""
     import pyspark.sql.functions as F
 
     if not cols:
@@ -217,41 +119,3 @@ def zorder_write(
         .option("compression", "snappy")
         .parquet(path)
     )
-
-
-def upsert_partitions(
-    df: DataFrame,
-    path: str,
-    partition_cols: tuple[str, ...] | list[str] = OUTPUT_PARTITION_COLS,
-    max_records_per_file: int = 500_000,
-) -> None:
-    """Incremental partition-level upsert: overwrite ONLY the
-    partitions present in ``df``, leaving every other partition of the
-    existing dataset untouched — the merge primitive for daily
-    re-crawls / late-arriving corrections on a partitioned corpus,
-    without a table format. A plain ``mode("overwrite")`` +
-    ``partitionBy`` would delete the ENTIRE dataset first (static
-    overwrite); this uses Spark's dynamic partition-overwrite mode,
-    scoped to this one write and restored afterward so the session's
-    global semantics don't silently change.
-
-    At 100 TB this is the difference between rewriting ~1/365th of a
-    year-partitioned corpus and rewriting all of it. Granularity is
-    the partition: a row-level merge needs a log-structured table
-    format (Delta/Iceberg/Hudi) — at partition granularity plain
-    Parquet + this mode gives the same idempotent replay property
-    (re-running a day's batch converges to the same state).
-    """
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            df.write.mode("overwrite")
-            .option("compression", "snappy")
-            .option("maxRecordsPerFile", str(max_records_per_file))
-            .partitionBy(*partition_cols)
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)

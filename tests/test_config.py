@@ -4,6 +4,8 @@ against our dataclass models."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from h3_indexer_spark.config.job import Job, JobStatus
@@ -196,34 +198,9 @@ class TestJob:
 
 
 class TestCloudSessionProfile:
-    """The object-store profile (session.py::CLOUD_STORE_CONF) must
-    route through get_spark_session with caller overrides winning —
-    the configs themselves are public Spark/Hadoop keys, inert
-    locally, so only the wiring is testable offline."""
-
-    def test_profile_flows_through_with_overrides(self, monkeypatch):
-        import h3_indexer_spark.session as sess
-
-        captured = {}
-
-        def fake_get(**kwargs):
-            captured.update(kwargs)
-            return "sentinel"
-
-        monkeypatch.setattr(sess, "get_spark_session", fake_get)
-        out = sess.get_cloud_spark_session(
-            h3_resolution=5,
-            extra_conf={"spark.hadoop.fs.s3a.threads.max": "128"},
-        )
-        assert out == "sentinel"
-        conf = captured["extra_conf"]
-        for k, v in sess.CLOUD_STORE_CONF.items():
-            if k == "spark.hadoop.fs.s3a.threads.max":
-                continue
-            assert conf[k] == v
-        # caller override beats the profile
-        assert conf["spark.hadoop.fs.s3a.threads.max"] == "128"
-        assert captured["h3_resolution"] == 5
+    """The object-store profile (session.py::CLOUD_STORE_CONF): public
+    Spark/Hadoop keys, inert locally, so only their shape is testable
+    offline."""
 
     def test_profile_keys_are_wellformed(self):
         from h3_indexer_spark.session import CLOUD_STORE_CONF
@@ -231,3 +208,27 @@ class TestCloudSessionProfile:
         for k, v in CLOUD_STORE_CONF.items():
             assert k.startswith("spark."), k
             assert isinstance(v, str) and v, (k, v)
+
+
+_SIZE_SUFFIX = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+
+
+@pytest.mark.skipif(
+    bool(os.environ.get("SPARK_DRIVER_MEM")),
+    reason="SPARK_DRIVER_MEM overrides the host-derived heap",
+)
+def test_default_driver_heap_fits_the_host(spark):
+    """The live session's driver heap (which is also the executor heap
+    under local[N]) must not exceed the host's physical memory."""
+    try:
+        with open("/proc/meminfo") as fh:
+            kib = next(
+                int(line.split()[1]) for line in fh
+                if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration):
+        pytest.skip("MemTotal is not readable on this host")
+    heap = spark.sparkContext.getConf().get("spark.driver.memory").lower()
+    n, unit = heap.rstrip("b")[:-1], heap.rstrip("b")[-1]
+    heap_bytes = int(n) * _SIZE_SUFFIX[unit]
+    assert heap_bytes <= kib * 1024, (heap, kib)

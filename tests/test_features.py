@@ -284,27 +284,3 @@ class TestImputeOneHot:
         assert out == {1: (1, 0), 2: (0, 1), 3: (0, 0), 4: (0, 0)}
 
 
-class TestLazyProbeOptOut:
-    def test_probe_false_is_lazy_and_agrees(self, spark, monkeypatch):
-        """probe=False must build the plan with ZERO Spark jobs at
-        construction time (advice r5: pure-lazy callers and repeated
-        pipeline construction shouldn't pay the probe's aggregation
-        job) and produce identical results to the probed path."""
-        from h3_indexer_spark.operators import features as FE
-
-        df = (
-            spark.range(30)
-            .withColumn("g", F.col("id") % 10)
-            .withColumn("v", (F.col("id") * 3 % 7).cast("double"))
-        )
-        tracker = spark.sparkContext.statusTracker()
-        before = len(tracker.getJobIdsForGroup(None) or [])
-        lazy = FE.standardize(df, "v", group_col="g", probe=False)
-        # job-count proxy: constructing the lazy plan must not launch
-        # any job (the probed path launches the stats take() here)
-        after = len(tracker.getJobIdsForGroup(None) or [])
-        assert after == before
-        eager = FE.standardize(df, "v", group_col="g", probe=True)
-        assert {(r.id, r.v_z) for r in lazy.collect()} == {
-            (r.id, r.v_z) for r in eager.collect()
-        }

@@ -191,34 +191,6 @@ class TestKAnonymity:
         ).agg(F.sum("n_rows")).collect()[0][0]
         assert out == 6  # the NULL-segment row counts as at-risk
 
-    def test_suppress_small_groups(self, spark):
-        from h3_indexer_spark.operators.curation import (
-            k_anonymity_report,
-            suppress_small_groups,
-        )
-
-        kept = suppress_small_groups(
-            self._df(spark), ["country", "segment"], k=10
-        )
-        assert kept.count() == 12  # only the (us, a) class survives
-        assert kept.where("country <> 'us' OR segment <> 'a'").count() == 0
-        # and the report over the suppressed output is empty: enforced
-        assert (
-            k_anonymity_report(kept, ["country", "segment"], k=10).count()
-            == 0
-        )
-
-    def test_suppress_keeps_null_classes_at_or_above_k(self, spark):
-        from h3_indexer_spark.operators.curation import suppress_small_groups
-
-        df = spark.createDataFrame(
-            [(None, i) for i in range(3)] + [("x", 0)],
-            "qi string, uid long",
-        )
-        kept = suppress_small_groups(df, ["qi"], k=3)
-        assert kept.count() == 3
-        assert kept.where(F.col("qi").isNull()).count() == 3
-
     def test_rejects_bad_args(self, spark):
         import pytest
 

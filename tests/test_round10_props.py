@@ -79,32 +79,6 @@ def test_k_anonymity_matches_reference(spark, rows, k):
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-@given(rows=qi_rows, k=k_values)
-@pytest.mark.slow
-def test_suppression_leaves_a_k_anonymous_table(spark, rows, k):
-    """Enforcement postcondition: after suppress_small_groups, the
-    report is empty, and exactly the >= k classes' rows survive."""
-    from h3_indexer_spark.operators.curation import (
-        k_anonymity_report,
-        suppress_small_groups,
-    )
-
-    df = spark.createDataFrame(
-        [(a, b, i) for i, (a, b) in enumerate(rows)],
-        "qa string, qb int, uid long",
-    )
-    kept = suppress_small_groups(df, ["qa", "qb"], k=k)
-    assert k_anonymity_report(kept, ["qa", "qb"], k=k).count() == 0
-    class_sizes = Counter(rows)
-    want_rows = sum(n for n in class_sizes.values() if n >= k)
-    assert kept.count() == want_rows
-
-
-@settings(
-    max_examples=15,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
 @given(rows=label_pred_rows)
 def test_classification_report_matches_reference(spark, rows):
     from h3_indexer_spark.operators.analytics import classification_report

@@ -71,8 +71,6 @@ def test_merge_bucketed_zero_exchange(spark, tmp_path):
     """The 100 TB nightly-merge plan: both sides bucketed on the key →
     the full-outer join runs with ZERO Exchange (the files carry the
     hash partitioning)."""
-    from h3_indexer_spark.sources.writers import write_bucketed_table
-
     spark.sql("DROP TABLE IF EXISTS m6_tgt")
     spark.sql("DROP TABLE IF EXISTS m6_src")
     tgt = spark.range(1000).select(
@@ -81,8 +79,10 @@ def test_merge_bucketed_zero_exchange(spark, tmp_path):
     src = spark.range(0, 1000, 3).select(
         F.col("id").alias("k"), (F.col("id") * 7).alias("n")
     )
-    write_bucketed_table(tgt, "m6_tgt", "k", n_buckets=8)
-    write_bucketed_table(src, "m6_src", "k", n_buckets=8)
+    for df, table in ((tgt, "m6_tgt"), (src, "m6_src")):
+        df.write.mode("overwrite").bucketBy(8, "k").format(
+            "parquet"
+        ).saveAsTable(table)
     out = merge_by_key(
         spark.table("m6_tgt"), spark.table("m6_src"), ["k"]
     )

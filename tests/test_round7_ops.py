@@ -263,56 +263,12 @@ class TestIvfPqRerank:
 
 
 class TestBpe:
-    @staticmethod
-    def _py_bpe(word_counts: dict[str, int], n_merges: int):
-        """Textbook BPE reference: greedy left-to-right merge of the
-        most frequent adjacent pair (ties lexicographically-smallest
-        pair), over a word-frequency table."""
-        syms = {w: list(w) for w in word_counts}
-        merges = []
-        for _ in range(n_merges):
-            census: dict[tuple[str, str], int] = {}
-            for w, s in syms.items():
-                for a, b in zip(s, s[1:]):
-                    census[(a, b)] = census.get((a, b), 0) + word_counts[w]
-            if not census:
-                break
-            best = min(census, key=lambda p: (-census[p], p))
-            merges.append(best)
-            a, b = best
-            for w, s in syms.items():
-                out: list[str] = []
-                for x in s:
-                    if out and out[-1] == a and x == b:
-                        out[-1] = a + b
-                    else:
-                        out.append(x)
-                syms[w] = out
-        return merges
-
-    def test_train_matches_python_reference(self, spark):
-        from h3_indexer_spark.operators.textops import bpe_train
-
-        texts = [
-            "low lower lowest slow slower flow",
-            "new newer newest stew strew",
-            "low low low slow stew new new",
-        ]
-        df = spark.createDataFrame([(t,) for t in texts], "text string")
-        wc: dict[str, int] = {}
-        for t in texts:
-            for w in t.split():
-                if len(w) >= 2:
-                    wc[w] = wc.get(w, 0) + 1
-        assert bpe_train(df, "text", n_merges=6) == self._py_bpe(wc, 6)
-
     def test_census_tie_order(self, spark):
         from h3_indexer_spark.operators.textops import bpe_pair_counts
 
         df = spark.createDataFrame([("ab ab cd cd",)], "text string")
         rows = bpe_pair_counts(df, "text", k=10).collect()
-        # text mode emits 2-char substrings; symbol mode (bpe_train)
-        # emits space-joined symbol pairs
+        # pairs are 2-char substrings of each distinct word
         assert [(r["pair"], r["n"]) for r in rows] == [
             ("ab", 2), ("cd", 2),
         ]
@@ -368,27 +324,6 @@ class TestBm25Margins:
 
 
 class TestHll:
-    def test_merge_equals_sketch_of_union(self, spark):
-        from h3_indexer_spark.operators.sketches import (
-            hll_merge,
-            hll_registers,
-        )
-
-        a = spark.range(0, 4000).selectExpr("id AS v")
-        b = spark.range(3000, 9000).selectExpr("id AS v")
-        u = a.unionByName(b)
-        merged = {
-            (r["bucket"], r["rho"])
-            for r in hll_merge(
-                hll_registers(a, "v"), hll_registers(b, "v")
-            ).collect()
-        }
-        direct = {
-            (r["bucket"], r["rho"])
-            for r in hll_registers(u, "v").collect()
-        }
-        assert merged == direct
-
     def test_estimate_error_bound(self, spark):
         from h3_indexer_spark.operators.sketches import (
             hll_estimate,

@@ -78,47 +78,6 @@ class TestBpeEncode:
         assert got["aaaa"] == "aa aa"
         assert got["aaa"] == "aa a"
 
-    def test_round_trip_with_trainer(self, spark):
-        """Encoding the training corpus with the trained merges must
-        reproduce the trainer's final symbol table (sequential-apply
-        == per-round-rewrite, the train/apply contract)."""
-        from h3_indexer_spark.operators.textops import (
-            bpe_encode_words,
-            bpe_train,
-        )
-
-        df = spark.createDataFrame(self._DOCS, "doc_id long, text string")
-        merges = bpe_train(df, n_merges=6)
-        assert len(merges) == 6
-        enc = {
-            r["word"]: r["encoded"].split(" ")
-            for r in bpe_encode_words(df, merges).collect()
-            if len(r["word"]) >= 2  # trainer vocab is len>=2 words
-        }
-        for w, syms in enc.items():
-            assert syms == _py_bpe_apply(w, merges), w
-
-    def test_docs_reassemble_in_order(self, spark):
-        from h3_indexer_spark.operators.textops import bpe_encode_docs
-
-        df = spark.createDataFrame(self._DOCS, "doc_id long, text string")
-        got = {
-            r["doc_id"]: r
-            for r in bpe_encode_docs(df, self._MERGES).collect()
-        }
-        for doc_id, text in self._DOCS:
-            toks = _py_tokens(text)
-            pieces = [
-                " ".join(_py_bpe_apply(w, self._MERGES)) for w in toks
-            ]
-            r = got[doc_id]
-            assert r["n_words"] == len(toks)
-            assert r["n_symbols"] == sum(
-                len(_py_bpe_apply(w, self._MERGES)) for w in toks
-            )
-            assert r["encoded_text"] == " ".join(pieces)
-
-
 class TestContainmentPairs:
     def _py_grams(self, text: str, n: int) -> set[str]:
         w = text.split(" ")

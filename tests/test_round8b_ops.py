@@ -83,38 +83,6 @@ class TestCountMin:
         }
         assert est_w == dict(exact)
 
-    def test_merge_linearity(self, spark):
-        """cms(A ++ B) == cms_merge(cms(A), cms(B)) — the linearity
-        that makes per-slice sketches pre-aggregable."""
-        from h3_indexer_spark.operators.sketches import (
-            cms_merge,
-            count_min_registers,
-        )
-
-        a = spark.createDataFrame(
-            [(v,) for v in self._VALUES[:40]], "val string"
-        )
-        b = spark.createDataFrame(
-            [(v,) for v in self._VALUES[40:]], "val string"
-        )
-        whole = spark.createDataFrame(
-            [(v,) for v in self._VALUES], "val string"
-        )
-        merged = {
-            (r["depth"], r["bucket"]): r["cnt"]
-            for r in cms_merge(
-                count_min_registers(a, "val", depth=3, width=16),
-                count_min_registers(b, "val", depth=3, width=16),
-            ).collect()
-        }
-        direct = {
-            (r["depth"], r["bucket"]): r["cnt"]
-            for r in count_min_registers(
-                whole, "val", depth=3, width=16
-            ).collect()
-        }
-        assert merged == direct
-
     def test_weighted_counts(self, spark):
         from h3_indexer_spark.operators.sketches import (
             count_min_estimate,
@@ -185,36 +153,6 @@ class TestKmv:
         row = kmv_distinct(df, "val", k=64).collect()[0]
         assert row["n_kept"] == 10
         assert row["est_distinct"] == 10
-
-    def test_merge_equals_union_sketch(self, spark):
-        from h3_indexer_spark.operators.sketches import (
-            kmv_bottom_k,
-            kmv_merge,
-        )
-
-        a = spark.createDataFrame(
-            [(f"a{i}",) for i in range(300)], "val string"
-        )
-        b = spark.createDataFrame(
-            [(f"b{i}",) for i in range(300)], "val string"
-        )
-        union = a.unionByName(b)
-        merged = [
-            (r["rank"], r["hash_val"])
-            for r in kmv_merge(
-                32,
-                kmv_bottom_k(a, "val", k=32),
-                kmv_bottom_k(b, "val", k=32),
-            ).orderBy("rank").collect()
-        ]
-        direct = [
-            (r["rank"], r["hash_val"])
-            for r in kmv_bottom_k(union, "val", k=32)
-            .orderBy("rank")
-            .collect()
-        ]
-        assert merged == direct
-
 
 def _py_adamic_adar(edges, min_common=1, max_degree=None, quant=1e9):
     adj = defaultdict(set)

@@ -308,26 +308,6 @@ class TestSequentialPatterns:
 
 
 class TestQuantileSketch:
-    def test_merge_law_disjoint_slices(self, spark):
-        from h3_indexer_spark.operators.sketches import (
-            quantile_sketch,
-            quantile_sketch_merge,
-        )
-
-        df = spark.range(2000).select(
-            F.col("id"), (F.col("id") * 7 % 1000).cast("double").alias("v")
-        )
-        a = df.where(F.col("id") < 1000)
-        b = df.where(F.col("id") >= 1000)
-        whole = quantile_sketch(df, "v", F.col("id"), k=64).collect()
-        merged = quantile_sketch_merge(
-            64,
-            quantile_sketch(a, "v", F.col("id"), k=64),
-            quantile_sketch(b, "v", F.col("id"), k=64),
-        ).collect()
-        key = lambda rows: [(r["rank"], r["hash_val"], r["value"]) for r in rows]
-        assert key(whole) == key(merged)
-
     def test_dkw_error_bound_on_fixture(self, spark):
         """The sketch's p50 must sit within the DKW band of the exact
         CDF: with k=256, eps at 99.9%% confidence is

@@ -361,76 +361,6 @@ def test_shapefile_without_shx_scans_record_headers(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_bucketed_tables_join_without_exchange(spark):
-    """Two tables bucketed on the join key with equal bucket counts
-    must sort-merge join with ZERO Exchange — the files carry the hash
-    partitioning. This is the storage-level shuffle amortization
-    write_bucketed_table exists for."""
-    from h3_indexer_spark.sources.writers import write_bucketed_table
-
-    facts = spark.range(10_000).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("v")
-    )
-    dims = spark.range(2_000).select(
-        F.col("id").alias("k"), (F.col("id") % 7).alias("grp")
-    )
-    write_bucketed_table(facts, "bkt_facts", "k", n_buckets=8)
-    write_bucketed_table(dims, "bkt_dims", "k", n_buckets=8)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    # bucketing targets BIG-big joins; kill broadcast so the test
-    # exercises the sort-merge path a 100 TB join would take
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        a = spark.table("bkt_facts")
-        b = spark.table("bkt_dims")
-        joined = a.join(b, "k")
-        plan = joined._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        assert "Exchange" not in plan, plan
-        assert joined.count() == 2_000
-        # groupBy on the bucket key also rides the file-level hashing
-        agg_plan = (
-            a.groupBy("k").agg(F.sum("v").alias("s"))
-        )._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        assert "Exchange" not in agg_plan, agg_plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bkt_facts")
-        spark.sql("DROP TABLE IF EXISTS bkt_dims")
-
-
-def test_compact_parquet_merges_small_files(spark):
-    from h3_indexer_spark.sources.writers import compact_parquet
-
-    src = tempfile.mkdtemp(prefix="h3idx_cmp_src_")
-    dst = tempfile.mkdtemp(prefix="h3idx_cmp_dst_")
-    try:
-        (
-            spark.range(50_000)
-            .select(F.col("id"), (F.col("id") * 2).alias("v"))
-            .repartition(64)  # 64 tiny files
-            .write.mode("overwrite")
-            .parquet(src)
-        )
-        assert len(spark.read.parquet(src).inputFiles()) == 64
-        n_out = compact_parquet(spark, src, dst, target_mb=128)
-        assert n_out == 1
-        got = spark.read.parquet(dst)
-        assert len(got.inputFiles()) == 1
-        assert got.count() == 50_000
-        assert got.agg(F.sum("v")).collect()[0][0] == 50_000 * 49_999
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(dst, ignore_errors=True)
-
-
 class TestZOrderWrite:
     def _file_coverage(self, path, col):
         """Mean fraction of the global value range each parquet file's
@@ -502,53 +432,3 @@ class TestZOrderWrite:
         )
 
 
-class TestUpsertPartitions:
-    def test_only_touched_partitions_replaced(self, spark, tmp_path):
-        from h3_indexer_spark.sources.writers import (
-            upsert_partitions,
-            write_partitioned_parquet,
-        )
-
-        out = str(tmp_path / "upsert")
-        base = spark.createDataFrame(
-            [(1, "a", 10.0), (2, "a", 20.0), (3, "b", 30.0), (4, "c", 40.0)],
-            ["id", "part", "v"],
-        )
-        write_partitioned_parquet(base, out, partition_cols=("part",))
-        untouched_files = set()
-        import glob as _glob
-
-        untouched_files = set(_glob.glob(f"{out}/part=b/*.parquet")) | set(
-            _glob.glob(f"{out}/part=c/*.parquet")
-        )
-        # upsert replaces partition 'a' only (id 1 corrected, id 2 gone)
-        batch = spark.createDataFrame(
-            [(1, "a", 11.0), (5, "a", 50.0)], ["id", "part", "v"]
-        )
-        upsert_partitions(batch, out, partition_cols=("part",))
-        got = {
-            (r.id, r.part, r.v)
-            for r in spark.read.parquet(out).collect()
-        }
-        assert got == {
-            (1, "a", 11.0), (5, "a", 50.0),
-            (3, "b", 30.0), (4, "c", 40.0),
-        }
-        # untouched partitions keep their physical files (no rewrite)
-        after = set(_glob.glob(f"{out}/part=b/*.parquet")) | set(
-            _glob.glob(f"{out}/part=c/*.parquet")
-        )
-        assert untouched_files == after
-
-    def test_session_mode_restored(self, spark, tmp_path):
-        from h3_indexer_spark.sources.writers import upsert_partitions
-
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "STATIC"
-        )
-        df = spark.createDataFrame([(1, "a", 1.0)], ["id", "part", "v"])
-        upsert_partitions(df, str(tmp_path / "x"), partition_cols=("part",))
-        assert (
-            spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-            == prev
-        )

@@ -46,7 +46,7 @@ def main() -> None:
         raise SystemExit(2)
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
 
     from h3_indexer_spark.session import get_spark_session
 
